@@ -8,12 +8,17 @@ plan shape fails CI rather than surfacing at 100 TB.
 
 import contextlib
 import io
+import os
+import re
+import time
+import uuid
 
 import pytest
 import pyspark.sql.functions as F
 
 from word2doc_spark.config import IndexConfig
 from word2doc_spark.index.build import build_index
+from word2doc_spark.index.manifest import TABLE_SCHEMAS, read_table
 from word2doc_spark.ops import dedup as D
 from word2doc_spark.ops import similarity as S
 from word2doc_spark.sources.pages import synthetic_pages
@@ -31,8 +36,20 @@ def plan_of(df, mode: str = "formatted") -> str:
 def n_nodes(plan: str, name: str) -> int:
     """Count physical-plan NODES of a type (formatted explain prints each
     node twice: once in the tree, once as a '(i) Name' detail header)."""
-    import re
     return len(re.findall(rf"^\(\d+\) {name}", plan, flags=re.MULTILINE))
+
+
+def node_detail(plan: str, node_id: str) -> str:
+    """The '(i) Name' detail block of one node of a formatted plan."""
+    m = re.search(rf"^\({node_id}\) .*?(?=^\(\d+\) |\Z)", plan,
+                  flags=re.MULTILINE | re.DOTALL)
+    return m.group(0)
+
+
+def scanned_tables(plan: str) -> set:
+    """Last path component of every file scan's Location in a plan."""
+    return set(re.findall(r"^Location: \w+ \[.*/(\w+)\]$", plan,
+                          flags=re.MULTILINE))
 
 
 @pytest.fixture(scope="module")
@@ -73,8 +90,9 @@ def test_segment_scan_is_pruned(spark, built):
 
 
 def test_exact_search_broadcasts_small_sides(spark, built):
-    """Query terms and the top-k url lookup are broadcast — the segment
-    table and the docs table are never shuffled by a join."""
+    """Query terms are broadcast — the segment table is never shuffled by
+    a join — and the url lookup reads no docs table through Spark (a
+    driver-analyzed batch finishes in one task, exact.finish_topk)."""
     from word2doc_spark.query.exact import search_exact
     qdf = spark.createDataFrame([(1, "spark shuffle partition")],
                                 "query_id long, query string")
@@ -83,6 +101,7 @@ def test_exact_search_broadcasts_small_sides(spark, built):
     plan = plan_of(res)
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
+    assert "docs" not in scanned_tables(plan), plan
 
 
 def test_shingles_plan_has_no_join(docs):
@@ -124,8 +143,10 @@ def test_ivf_assign_is_shuffle_free(vectors):
 
 
 def test_doc_partitioned_query_plan(spark, built):
-    """The fast/WAND scoring plan broadcasts the weighted query terms into
-    the segment scan and shuffles once to the (range, bucket) tasks."""
+    """The fast/WAND scoring plan of a driver-analyzed batch: the
+    range-group scoring tasks (FlatMapGroupsInPandas) feed ONE
+    single-partition exchange into the one-task finish, and the docs
+    table is never scanned by Spark (no url join, no global sort)."""
     from word2doc_spark.query.fast import search_fast
     qdf = spark.createDataFrame(
         [(1, "spark shuffle partition"), (2, "crawl warc html")],
@@ -133,6 +154,78 @@ def test_doc_partitioned_query_plan(spark, built):
     res = search_fast(spark, built, qdf, k=5, score_mode="drqa")
     assert res.count() > 0
     plan = plan_of(res)
-    assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
-    assert "FlatMapGroupsInPandas" in plan or "ApplyInPandas" in plan
+    m = re.search(r"Exchange \((\d+)\)\n\s*\+- FlatMapGroupsInPandas", plan)
+    assert m, plan
+    assert "SinglePartition" in node_detail(plan, m.group(1)), plan
+    assert "Join" not in plan and "Window" not in plan, plan
+    assert "docs" not in scanned_tables(plan), plan
+
+
+@pytest.mark.parametrize("table", sorted(TABLE_SCHEMAS))
+def test_declared_schemas_match_written_tables(spark, built, table):
+    """Every schema the index reader declares equals the schema Spark
+    infers from the freshly built table, so a writer change cannot
+    silently desync the readers."""
+    inferred = spark.read.parquet(os.path.join(built, table)).schema
+    assert read_table(spark, built, table).schema == inferred
+
+
+def _jobs_of_call(spark, fn):
+    """(job count, stage names) of the Spark jobs ``fn`` runs, counted by
+    job group; waits until the status tracker has seen them finish."""
+    sc = spark.sparkContext
+    group = f"jobs-per-call-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jobs per call")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    st = sc.statusTracker()
+    seen, deadline = None, time.time() + 10
+    while time.time() < deadline:
+        ids = sorted(st.getJobIdsForGroup(group))
+        infos = [st.getJobInfo(j) for j in ids]
+        if ids == seen and all(i is not None and i.status == "SUCCEEDED"
+                               for i in infos):
+            break
+        seen = ids
+        time.sleep(0.25)
+    names = [st.getStageInfo(s).name for i in infos for s in i.stageIds
+             if st.getStageInfo(s) is not None]
+    return len(seen), names
+
+
+def test_warm_search_jobs_per_call(spark, built):
+    """Jobs per warm search call: the analysis probe plus the jobs that
+    score and finish. No call infers a table schema from parquet footers
+    (a 'parquet at ...' job) — every index read declares its schema and
+    term stats are read without Spark."""
+    from word2doc_spark.query.exact import search_exact
+    from word2doc_spark.query.fast import search_fast
+    from word2doc_spark.query.wand import search_wand
+    words = ["spark shuffle partition", "crawl warc html", "alpha beta"]
+
+    def batch(n):
+        # list-built: not a local relation, so the analysis probe runs
+        return spark.createDataFrame(
+            [(i, words[i % len(words)]) for i in range(n)],
+            "query_id long, query string")
+
+    calls = {
+        "fast_one_question": lambda: search_fast(
+            spark, built, batch(1), k=5).collect(),
+        "wand": lambda: search_wand(
+            spark, built, batch(20), k=5, score_mode="bm25").collect(),
+        "exact": lambda: search_exact(
+            spark, built, batch(20), k=5, score_mode="bm25").collect(),
+    }
+    for call in calls.values():  # one warm-up call each
+        call()
+    bounds = {"fast_one_question": 3, "wand": 3, "exact": 8}
+    for name, call in calls.items():
+        n_jobs, stages = _jobs_of_call(spark, call)
+        assert n_jobs <= bounds[name], (name, n_jobs, stages)
+        assert not [s for s in stages if s.startswith("parquet at")], \
+            (name, stages)

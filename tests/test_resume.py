@@ -7,6 +7,7 @@ per shard (lineage contract).
 
 import hashlib
 import os
+import threading
 
 import pytest
 
@@ -66,6 +67,29 @@ def test_resume_skips_finished_shards(spark, tmp_path):
     # and the result is identical
     assert _index_digest(spark, index_dir) == digest1
     assert m2["n_postings"] == m1["n_postings"]
+
+
+def test_failed_encode_leaves_no_dl_thread(spark, tmp_path, monkeypatch):
+    """An encode failure must not leave the concurrent dl chain running
+    (still writing doclen and its marker) once build_index has raised;
+    a rerun then resumes to the same index as a clean build."""
+    from word2doc_spark.index import build as B
+    pages = synthetic_pages(spark, 60, num_partitions=2)
+    clean = str(tmp_path / "clean")
+    build_index(spark, pages, clean, CFG, input_token="fail")
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected encode failure")
+
+    index_dir = str(tmp_path / "idx5")
+    monkeypatch.setattr(B, "_encode_segments", boom)
+    with pytest.raises(RuntimeError, match="injected encode failure"):
+        build_index(spark, pages, index_dir, CFG, input_token="fail")
+    assert not [t for t in threading.enumerate()
+                if t.name == "build-dl" and t.is_alive()]
+    monkeypatch.undo()
+    build_index(spark, pages, index_dir, CFG, input_token="fail")
+    assert _index_digest(spark, index_dir) == _index_digest(spark, clean)
 
 
 def test_fingerprint_change_invalidates(spark, tmp_path):

@@ -204,8 +204,7 @@ def test_seed_range_carries_rare_term_mass(spark, built):
     qdf = spark.createDataFrame([(1, "137 spark shuffle partition")],
                                 "query_id long, query string")
     _, term_pred, wqt, _ = prepare_weighted_terms(
-        spark, built, qdf, config, n_docs, False, "driver",
-        stats.get("build_id"))
+        spark, built, qdf, config, n_docs, False, "driver")
     rare_tid = int(wqt.loc[(wqt["w"] * wqt["idf"]).idxmax(), "term_id"])
     qterms = spark.createDataFrame(
         wqt[["query_id", "term_id", "w", "idf"]],

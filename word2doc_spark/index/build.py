@@ -73,13 +73,11 @@ import pyspark.sql.functions as F
 
 from word2doc_spark.config import IndexConfig
 from word2doc_spark.index.analyze import extracted_docs
-from word2doc_spark.index.manifest import Manifest
+from word2doc_spark.index.manifest import SEG_SCHEMA, Manifest, read_table
 from word2doc_spark.index.postings import (
     encode_postings, encode_postings_batch,
 )
 
-SEG_SCHEMA = ("term_id long, range_id int, seg_id int, n_postings long, "
-              "doc_lo long, doc_hi long, payload binary")
 DL_SEG_SCHEMA = ("range_id int, chunk_id int, doc_lo long, n_docs long, "
                  "payload binary")
 # staged blob rows: posting blobs under shard_id >= 0 pack raw int64
@@ -395,9 +393,8 @@ def _staged_part(spark: SparkSession, stage_path: str,
                          else F.col("shard_id") >= 0)
 
 
-def _build_doclen(spark: SparkSession, stage_path: str, doclen_path: str,
-                  doclen_seg_path: str, range_width: int,
-                  config: IndexConfig, sp: int) -> int:
+def _build_doclen(spark: SparkSession, index_dir: str, stage_path: str,
+                  range_width: int, config: IndexConfig, sp: int) -> int:
     """doclen + doclen_seg tables decoded from the staged dl blobs
     (the shard_id = -1 hive partition); returns total_dl — the avgdl
     numerator, summed here so publish needs no extra Spark job.
@@ -426,8 +423,9 @@ def _build_doclen(spark: SparkSession, stage_path: str, doclen_path: str,
     (_staged_part(spark, stage_path, dl=True).select("blob")
            .coalesce(max(8, sp // 4))
            .mapInPandas(decode_dl_pairs, "doc_id long, dl long")
-           .write.mode("overwrite").parquet(doclen_path))
-    doclen = spark.read.parquet(doclen_path)
+           .write.mode("overwrite")
+           .parquet(os.path.join(index_dir, "doclen")))
+    doclen = read_table(spark, index_dir, "doclen")
     dl_keyed = doclen.withColumn(
         "range_id", (F.col("doc_id") / F.lit(range_width)).cast("int")
     ).withColumn(
@@ -441,7 +439,8 @@ def _build_doclen(spark: SparkSession, stage_path: str, doclen_path: str,
                                           config.dl_chunk_docs,
                                           config.block_size),
                           schema=DL_SEG_SCHEMA)
-             .write.mode("overwrite").parquet(doclen_seg_path))
+             .write.mode("overwrite")
+             .parquet(os.path.join(index_dir, "doclen_seg")))
     agg = doclen.agg(F.sum("dl").alias("total_dl")).collect()[0]
     return int(agg["total_dl"] or 0)
 
@@ -699,8 +698,6 @@ def build_index(
 
     docs_path = os.path.join(index_dir, "docs")
     stage_path = os.path.join(index_dir, "stage", "terms")
-    doclen_path = os.path.join(index_dir, "doclen")
-    doclen_seg_path = os.path.join(index_dir, "doclen_seg")
     shards_path = os.path.join(index_dir, "shards")
     terms_path = os.path.join(index_dir, "terms")
 
@@ -875,15 +872,18 @@ def build_index(
             # wall(analyze); ids_only is numpy-cheap, so its workers
             # barely contend with the analyzer's)
             # coalesce the narrow (doc_id, url) output: sp files of a few
-            # hundred rows each tax every query's attach_urls scan with
-            # per-file opens; ids_only handles several buckets per task
-            # (offset-keyed runs), so merging partitions is id-safe
+            # hundred rows each tax every url lookup with per-file opens;
+            # ids_only handles several buckets per task (offset-keyed
+            # runs), so merging partitions is id-safe. Sorted by doc_id
+            # within each file, so the footer min/max statistics let a
+            # query's url lookup (exact.finish_topk) skip whole row groups
             n_docs_files = max(8, sp // 4)
             _concurrent_jobs(
                 ("doc_ids",
                  lambda: (ranged.select("url", "_pkey")
                           .coalesce(n_docs_files)
                           .mapInPandas(ids_only, "doc_id long, url string")
+                          .sortWithinPartitions("doc_id")
                           .write.mode("overwrite").parquet(docs_path))),
                 ("analyze_stage",
                  lambda: _write_staged(
@@ -904,7 +904,7 @@ def build_index(
                               sub_walls=sub)
 
     if n_docs is None:
-        n_docs = spark.read.parquet(docs_path).count()
+        n_docs = read_table(spark, index_dir, "docs").count()
     range_width = manifest.read_marker("stage").get(
         "range_width",
         range_width_for(n_docs, resolve_n_ranges(config, n_docs)))
@@ -914,31 +914,8 @@ def build_index(
     #    are independent of each other — the dl chain runs in a driver
     #    thread overlapping the encode jobs (guide §2.6: concurrent jobs
     #    back-fill each other's stragglers). Its marker carries total_dl
-    #    so publish computes avgdl without a Spark job.
-    total_dl_holder = [0]
-    dl_thread = None
-    dl_errs: list = []
-    if manifest.has_marker("dl", fp):
-        metrics["resumed_stages"].append("dl")
-        total_dl_holder[0] = int(
-            manifest.read_marker("dl").get("total_dl", 0))
-    else:
-        def _dl_work():
-            try:
-                t0dl = time.time()
-                total_dl_holder[0] = _build_doclen(
-                    spark, stage_path, doclen_path, doclen_seg_path,
-                    range_width, config, sp)
-                manifest.write_marker(
-                    "dl", fp, wall_s=round(time.time() - t0dl, 2),
-                    total_dl=total_dl_holder[0])
-            except BaseException as e:  # noqa: BLE001 — re-raised at join
-                dl_errs.append(e)
-
-        dl_thread = threading.Thread(target=_dl_work, name="build-dl",
-                                     daemon=True)
-        dl_thread.start()
-
+    #    so publish computes avgdl without a Spark job; it is joined on
+    #    every way out of the encode.
     # -- stage 3: segment encode (one job by default; grouped for finer
     #    resume). Dynamic partition overwrite makes a rerun of a group
     #    idempotent: it replaces exactly the hive partitions it produces.
@@ -949,8 +926,30 @@ def build_index(
 
     overwrite_mode = spark.conf.get(
         "spark.sql.sources.partitionOverwriteMode", "static")
+    total_dl_holder = [0]
+    dl_thread = None
+    dl_errs: list = []
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
+        if manifest.has_marker("dl", fp):
+            metrics["resumed_stages"].append("dl")
+            total_dl_holder[0] = int(
+                manifest.read_marker("dl").get("total_dl", 0))
+        else:
+            def _dl_work():
+                try:
+                    t0dl = time.time()
+                    total_dl_holder[0] = _build_doclen(
+                        spark, index_dir, stage_path, range_width, config, sp)
+                    manifest.write_marker(
+                        "dl", fp, wall_s=round(time.time() - t0dl, 2),
+                        total_dl=total_dl_holder[0])
+                except BaseException as e:  # noqa: BLE001 — re-raised below
+                    dl_errs.append(e)
+
+            dl_thread = threading.Thread(target=_dl_work, name="build-dl",
+                                         daemon=True)
+            dl_thread.start()
         # exclude the dl blobs — segment encode consumes posting blobs
         # only (layout-adaptive pruning, see _staged_part)
         staged_all = _staged_part(spark, stage_path, dl=False)
@@ -979,7 +978,7 @@ def build_index(
             # per successful action) — the old shape paid a second
             # scan+groupBy job over the shards metadata, then a third
             # over the terms table
-            written = spark.read.parquet(shards_path).filter(
+            written = read_table(spark, index_dir, "shards").filter(
                 F.col("shard_id").isin(group))
             # repartition by shard_id BEFORE the agg: the partitioning
             # satisfies groupBy(shard_id, term_id) (subset clustering),
@@ -1016,7 +1015,7 @@ def build_index(
                            int(m[f"p{s}"] or 0), int(m[f"b{s}"] or 0))
                        for s in group}
             else:  # very wide groups: one tiny read of the terms table
-                srows = (spark.read.parquet(terms_path)
+                srows = (read_table(spark, index_dir, "terms")
                          .filter(F.col("shard_id").isin(group))
                          .groupBy("shard_id")
                          .agg(F.count("*").alias("terms"),
@@ -1037,13 +1036,15 @@ def build_index(
                     wall_s=wall / len(group),
                 )
     finally:
+        # joined on every way out: a failed encode must not leave the dl
+        # chain running behind the caller, still writing doclen and its
+        # marker into the index directory
+        if dl_thread is not None:
+            dl_thread.join()
         spark.conf.set("spark.sql.sources.partitionOverwriteMode",
                        overwrite_mode)
-
-    if dl_thread is not None:
-        dl_thread.join()
-        if dl_errs:
-            raise dl_errs[0]
+    if dl_errs:
+        raise dl_errs[0]
 
     # -- stage 4: publish -------------------------------------------------
     shard_rows = manifest.shard_metrics()

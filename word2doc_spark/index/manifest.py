@@ -13,6 +13,12 @@ re-designed for a distributed, resumable build:
 
 Files are written write-temp → atomic rename, so a crash mid-write never
 yields a corrupt "done" marker.
+
+The manifest also holds the schemas of the published tables
+(``TABLE_SCHEMAS``): every Spark read of an index table goes through
+``read_table``, which declares the schema instead of inferring it from
+parquet footers — inference is a Spark job of its own, paid on every
+query that touches the table.
 """
 
 from __future__ import annotations
@@ -24,6 +30,27 @@ import tempfile
 from word2doc_spark.config import IndexConfig
 
 MANIFEST_DIR = "manifest"
+
+# segment rows as the build's encode emits them (index/build.py)
+SEG_SCHEMA = ("term_id long, range_id int, seg_id int, n_postings long, "
+              "doc_lo long, doc_hi long, payload binary")
+# the published tables exactly as build_index writes them, hive partition
+# columns last (the order spark.read.parquet infers); a test pins each
+# one against the inferred schema of a freshly built index
+TABLE_SCHEMAS = {
+    "shards": SEG_SCHEMA + ", shard_id int",
+    "terms": "term_id long, df long, segments long, bytes long, "
+             "shard_id int",
+    "docs": "doc_id long, url string",
+    "doclen": "doc_id long, dl long",
+}
+
+
+def read_table(spark, index_dir: str, name: str):
+    """One published index table with its declared schema (no
+    schema-inference job)."""
+    return (spark.read.schema(TABLE_SCHEMAS[name])
+            .parquet(os.path.join(index_dir, name)))
 
 
 def _atomic_write_json(path: str, obj: dict) -> None:

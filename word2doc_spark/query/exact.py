@@ -7,16 +7,21 @@ reference's in-process ``batch_closest_docs`` —
 (query_id, term_id, qtf, w, idf) → broadcast-join against the matched
 posting SEGMENTS (term_id-pruned shard scan) → decode+score inside one
 Arrow pass → groupBy(query_id, doc_id) sum → per-query top-k window with
-deterministic ties (score desc, doc_id asc).
+deterministic ties (score desc, doc_id asc) → ordering + url lookup
+(one task for driver-analyzed batches, ``finish_topk``; the broadcast
+url join ``attach_urls`` for distributed ones).
 
 Scale notes:
 * the segment scan is pruned two ways: parquet row-group predicate
   pushdown on ``term_id IN (...)`` and hive partition pruning on
   ``shard_id IN (...)`` — a batch of queries touches only the shards its
   terms hash into, and reads only (term_id, range_id, doc_lo, payload).
-* per-term IDF comes from the ``terms/`` stats table (same pruned-scan
-  pattern), so posting rows carry no denormalized df and the query plan
-  needs no big join-back.
+* per-term IDF comes from the ``terms/`` stats table, read on the driver
+  with pyarrow (same shard + term_id pruning, no Spark job), so posting
+  rows carry no denormalized df and the query plan needs no big
+  join-back.
+* every Spark read of an index table declares its schema
+  (index/manifest.read_table): no per-query schema-inference job.
 * posting payloads are bounded segments (≤ max_seg_postings), never one
   unbounded cell per term — a df=N stop-bigram decodes as many small
   tasks, not one multi-GB row.
@@ -36,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
 from word2doc_spark.config import IndexConfig
-from word2doc_spark.index.manifest import Manifest
+from word2doc_spark.index.manifest import Manifest, read_table
 from word2doc_spark.index.postings import decode_postings
 
 QUERY_TERMS_SCHEMA = "query_id long, term_id long, qtf int"
@@ -125,6 +130,13 @@ def analyze_query_rows(rows, config: IndexConfig,
     })
 
 
+def term_in(term_ids: list):
+    """``term_id IN (...)`` over a driver-known list of ints, built as ONE
+    parsed expression: Column.isin makes a py4j round trip per literal,
+    ~0.6 ms each — 150 ms of driver wall for a 250-term batch."""
+    return F.expr(f"term_id IN ({','.join(str(int(t)) for t in term_ids)})")
+
+
 def _prune_terms(df: DataFrame, term_ids,
                  num_shards: int) -> DataFrame:
     """Prune a shard-partitioned table to the query batch's terms.
@@ -146,7 +158,7 @@ def _prune_terms(df: DataFrame, term_ids,
         df = df.filter(F.col("shard_id").isin(shard_ids))
     if len(term_ids) <= _ISIN_PRUNE_LIMIT:
         # row-group predicate pushdown on term_id
-        return df.filter(F.col("term_id").isin(term_ids))
+        return df.filter(term_in(term_ids))
     spark = df.sparkSession
     wanted = spark.createDataFrame([(int(t),) for t in term_ids],
                                    "term_id long")
@@ -156,59 +168,45 @@ def _prune_terms(df: DataFrame, term_ids,
 def _matched_segments(spark: SparkSession, index_dir: str,
                       term_ids, num_shards: int,
                       with_counts: bool = False) -> DataFrame:
-    segs = spark.read.parquet(os.path.join(index_dir, "shards"))
+    segs = read_table(spark, index_dir, "shards")
     cols = ["term_id", "range_id", "doc_lo", "payload"]
     if with_counts:
         cols.insert(3, "n_postings")
     return _prune_terms(segs, term_ids, num_shards).select(*cols)
 
 
-# driver-side per-build term-df cache: a term's df is BUILD-constant, so
-# repeat batches over a stable vocabulary skip the pruned terms-table
-# scan (measured ~1.1 s of flat per-batch wall at sf0.1 — the largest
-# single fixed cost of query prep, paid by all three search paths).
-# Keyed by the per-publish build_id; df=0 marks a term ABSENT from the
-# index so unknown terms don't re-scan every batch. Bounded by total
-# entries (ints — ~50 MB at the cap).
-_TERM_DF_CACHE: dict = {}
-_TERM_DF_CACHE_MAX_TERMS = 4_000_000
-
-
-def _term_dfs(spark: SparkSession, index_dir: str, term_ids: list,
-              num_shards: int, bid: str | None = None) -> dict:
-    """{term_id: df} for the given terms (0 = absent from the index),
-    via the build-keyed driver cache + one pruned scan for the misses."""
-    cache = None
-    if bid is not None:
-        if sum(len(v) for v in _TERM_DF_CACHE.values()) \
-                > _TERM_DF_CACHE_MAX_TERMS:
-            _TERM_DF_CACHE.clear()
-        cache = _TERM_DF_CACHE.setdefault(bid, {})
-        missing = [t for t in term_ids if t not in cache]
-    else:
-        cache = {}
-        missing = list(term_ids)
-    if missing:
-        stats = _prune_terms(
-            spark.read.parquet(os.path.join(index_dir, "terms")),
-            missing, num_shards).select("term_id", "df").collect()
-        got = {r["term_id"]: r["df"] for r in stats}
-        for t in missing:
-            cache[t] = got.get(t, 0)
-    return cache
+def _term_dfs(index_dir: str, term_ids: list, num_shards: int) -> dict:
+    """{term_id: df} of the given terms present in the index, read on the
+    driver with pyarrow — no Spark job. Hive partition pruning on the
+    term→shard route plus a term_id filter pushed down to the row groups:
+    the same read the scoring workers use for dl and segment loads."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+    ds = pads.dataset(os.path.join(index_dir, "terms"), format="parquet",
+                      partitioning="hive")
+    filt = pc.field("term_id").isin(term_ids)
+    shard_ids = sorted({t % num_shards for t in term_ids})
+    if len(shard_ids) < num_shards:
+        filt = filt & pc.field("shard_id").isin(shard_ids)
+    tbl = ds.to_table(columns=["term_id", "df"], filter=filt)
+    return dict(zip(tbl.column("term_id").to_pylist(),
+                    tbl.column("df").to_pylist()))
 
 
 def weighted_query_terms(spark: SparkSession, index_dir: str,
                          qt: pd.DataFrame, n_docs: int,
                          num_shards: int,
                          bid: str | None = None) -> pd.DataFrame:
-    """Attach df/idf/w to analyzed query terms via a pruned scan of the
-    terms stats table (cached per build — _term_dfs); drops terms absent
-    from the index (they match no postings) and terms with w == 0 (idf
-    clamped to 0)."""
+    """Attach df/idf/w to analyzed query terms via a pruned pyarrow read
+    of the terms stats table (_term_dfs); drops terms absent from the
+    index (they match no postings) and terms with w == 0 (idf clamped to
+    0). ``spark`` and ``bid`` are unused — the read needs no session and
+    costs a few ms, so nothing is cached per build — and stay for the
+    callers that pass them."""
     term_ids = sorted({int(t) for t in qt["term_id"].unique()})
-    dfs_all = _term_dfs(spark, index_dir, term_ids, num_shards, bid)
-    df_map = {t: dfs_all[t] for t in term_ids if dfs_all[t] > 0}
+    df_map = {t: d for t, d in
+              _term_dfs(index_dir, term_ids, num_shards).items()
+              if d > 0}
     out = qt[qt["term_id"].isin(df_map.keys())].copy()
     if out.empty:
         out["df"] = out["idf"] = out["w"] = np.empty(0, dtype=np.float64)
@@ -231,8 +229,7 @@ def weighted_query_terms_distributed(spark: SparkSession, index_dir: str,
     index and zero-weight terms drop, exactly as in the driver variant.
     The stats side is vocabulary-bounded (≤ hash_size rows), the qt side
     is batch-sized — a plain shuffle join AQE can re-plan."""
-    stats = (spark.read.parquet(os.path.join(index_dir, "terms"))
-             .select("term_id", "df"))
+    stats = read_table(spark, index_dir, "terms").select("term_id", "df")
     idf = F.greatest(
         F.lit(0.0),
         F.log((F.lit(float(n_docs)) - F.col("df") + 0.5)
@@ -340,7 +337,6 @@ def _strict_check_distributed(queries: DataFrame, qt: DataFrame) -> None:
 def prepare_weighted_terms(spark: SparkSession, index_dir: str,
                            queries: DataFrame, config: IndexConfig,
                            n_docs: int, strict: bool, analysis: str,
-                           bid: str | None = None,
                            build_qdf: bool = True):
     """Shared query-side prep for all three search paths.
 
@@ -390,7 +386,7 @@ def prepare_weighted_terms(spark: SparkSession, index_dir: str,
             if qt.empty:
                 return None, None, None, 0
             wqt = weighted_query_terms(spark, index_dir, qt, n_docs,
-                                       config.num_shards, bid)
+                                       config.num_shards)
             if wqt.empty:
                 return None, None, None, 0
         # the broadcast-closure scoring shape never touches qdf — a 40k
@@ -419,12 +415,86 @@ def _empty_result(spark: SparkSession) -> DataFrame:
 
 def attach_urls(spark: SparkSession, index_dir: str,
                 topk: DataFrame) -> DataFrame:
-    """url lookup: top-k is ≤ Q·k rows — broadcast it so the (potentially
-    enormous) docs table is never shuffled."""
-    docs = spark.read.parquet(os.path.join(index_dir, "docs"))
+    """url lookup + global order for DISTRIBUTED batches, whose top-k has
+    no driver-known size bound: broadcast the top-k rows so the docs
+    table is never shuffled (it is scanned whole, though). Driver-analyzed
+    batches finish in one task instead — see finish_topk."""
+    docs = read_table(spark, index_dir, "docs")
     return (docs.join(F.broadcast(topk), "doc_id")
                 .select("query_id", "rank", "doc_id", "url", "score")
                 .orderBy("query_id", "rank"))
+
+
+def topk_order(qid: np.ndarray, doc: np.ndarray, score: np.ndarray,
+               k: int) -> tuple[np.ndarray, np.ndarray]:
+    """(indices, ranks) of each query's top-k rows, ordered (query_id asc,
+    score desc, doc_id asc) — the tie rule of every path's top-k window.
+    One lexsort + a boundary walk; ranks are 1-based."""
+    order = np.lexsort((doc, -score, qid))
+    q = qid[order]
+    gstart = np.flatnonzero(np.concatenate(([True], q[1:] != q[:-1])))
+    glen = np.diff(np.concatenate((gstart, [q.size])))
+    pos = np.arange(q.size) - np.repeat(gstart, glen)
+    keep = pos < k
+    return order[keep], (pos[keep] + 1).astype(np.int32)
+
+
+def _lookup_urls(docs_path: str, doc_ids: np.ndarray):
+    """(found mask, urls) for ``doc_ids`` from the docs table, read with
+    pyarrow: a doc_id range plus an IN filter, so row groups outside the
+    wanted ids are skipped by their min/max footer statistics (the build
+    sorts docs by doc_id within each file)."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+    want = np.unique(doc_ids)
+    f = pc.field("doc_id")
+    tbl = pads.dataset(docs_path, format="parquet").to_table(
+        columns=["doc_id", "url"],
+        filter=((f >= int(want[0])) & (f <= int(want[-1]))
+                & f.isin(want.tolist())))
+    if tbl.num_rows == 0:
+        return (np.zeros(doc_ids.size, dtype=bool),
+                np.empty(doc_ids.size, dtype=object))
+    ids = tbl.column("doc_id").to_numpy()
+    urls = np.asarray(tbl.column("url").to_pylist(), dtype=object)
+    order = np.argsort(ids, kind="stable")
+    ids, urls = ids[order], urls[order]
+    pos = np.minimum(np.searchsorted(ids, doc_ids), ids.size - 1)
+    return ids[pos] == doc_ids, urls[pos]
+
+
+def finish_topk(index_dir: str, cand: DataFrame, k: int) -> DataFrame:
+    """Final top-k + url lookup of a DRIVER-ANALYZED batch in ONE task:
+    candidates (query_id, doc_id, score) → repartition(1) → mapInPandas.
+    The task merges with one numpy lexsort (topk_order), reads the urls
+    of just the winning doc_ids (pushed-down doc_id filter), and emits
+    rows already ordered by (query_id, rank). It replaces a query_id
+    window, a broadcast join that scans the whole docs table, and a
+    global sort — each its own Spark job(s). The batch is bounded (≤
+    DISTRIBUTED_ANALYSIS_THRESHOLD queries), so its candidate set fits a
+    task; distributed batches keep attach_urls. Docs absent from the
+    docs table drop, as the join dropped them."""
+    docs_path = os.path.join(index_dir, "docs")
+
+    def run(it):
+        parts = [pdf for pdf in it if len(pdf)]
+        if not parts:
+            return
+        pdf = pd.concat(parts, ignore_index=True)
+        qid = pdf["query_id"].to_numpy(dtype=np.int64)
+        doc = pdf["doc_id"].to_numpy(dtype=np.int64)
+        score = pdf["score"].to_numpy(dtype=np.float64)
+        idx, rank = topk_order(qid, doc, score, k)
+        if idx.size == 0:
+            return
+        found, urls = _lookup_urls(docs_path, doc[idx])
+        idx, rank = idx[found], rank[found]
+        yield pd.DataFrame({"query_id": qid[idx], "rank": rank,
+                            "doc_id": doc[idx], "url": urls[found],
+                            "score": score[idx]})
+
+    return (cand.select("query_id", "doc_id", "score").repartition(1)
+            .mapInPandas(run, RESULT_SCHEMA))
 
 
 def search_exact(
@@ -449,10 +519,9 @@ def search_exact(
     n_docs = int(stats["n_docs"])
     avgdl = float(stats["avgdl"])
     k1, b = config.k1, config.b
-    bid = stats.get("build_id") or stats.get("fingerprint")
 
     qdf, term_pred, wqt, _nq = prepare_weighted_terms(
-        spark, index_dir, queries, config, n_docs, strict, analysis, bid)
+        spark, index_dir, queries, config, n_docs, strict, analysis)
     if qdf is None:
         return _empty_result(spark)
     segs = _matched_segments(spark, index_dir, term_pred,
@@ -504,7 +573,7 @@ def search_exact(
                   .groupBy("query_id", "doc_id")
                   .agg(F.sum("contrib").alias("score")))
     else:
-        doclen = spark.read.parquet(os.path.join(index_dir, "doclen"))
+        doclen = read_table(spark, index_dir, "doclen")
         with_dl = contribs.join(doclen, "doc_id")
         per_term = with_dl.withColumn(
             "contrib",
@@ -519,4 +588,6 @@ def search_exact(
         F.desc("score"), F.asc("doc_id"))
     topk = (scored.withColumn("rank", F.row_number().over(w))
                   .filter(F.col("rank") <= k))
+    if wqt is not None:
+        return finish_topk(index_dir, topk, k)
     return attach_urls(spark, index_dir, topk)

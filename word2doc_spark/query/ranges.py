@@ -5,10 +5,19 @@ segments are scored WHERE THEIR DOC RANGES LIVE — one task per group of
 doc ranges holds every matched segment for its ranges (all query terms),
 so each document's full score is computed locally; the task emits only
 its per-query top-k candidates, and an exact global merge over the
-(n_groups × Q × k) candidate set yields the final top-k. The merge
-shape is volume-adaptive: small candidate sets window in one stage;
-large ones travel as numpy-packed blobs and merge vectorized
-(_PACK_MIN_CANDIDATES).
+(n_groups × Q × k) candidate set yields the final top-k.
+
+The final merge, by how the batch was analyzed:
+
+* driver-analyzed batches finish in ONE task (exact.finish_topk):
+  candidates → repartition(1) → mapInPandas, where one numpy lexsort
+  merges the per-group top-ks and the urls of just the winners are read
+  with a pushed-down doc_id filter; rows leave ordered by (query_id,
+  rank). Above _PACK_MIN_CANDIDATES estimated candidate rows, the
+  candidates first travel as numpy-packed blobs and merge vectorized per
+  query bucket (_merge_topk_blobs), so the one task sees ≤ Q·k rows.
+* distributed batches — no driver-known size bound — keep the query_id
+  window, the broadcast url join (exact.attach_urls) and a global sort.
 
 Two shapes, picked by how the query batch was analyzed:
 
@@ -59,10 +68,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
-from word2doc_spark.index.manifest import Manifest
+from word2doc_spark.index.manifest import Manifest, read_table
 from word2doc_spark.index.postings import decode_postings
 from word2doc_spark.query.exact import (
-    _empty_result, _matched_segments, attach_urls, prepare_weighted_terms,
+    _empty_result, _matched_segments, attach_urls, finish_topk,
+    prepare_weighted_terms, topk_order,
 )
 
 CAND_SCHEMA = "query_id long, doc_id long, score double"
@@ -348,7 +358,7 @@ def search_doc_partitioned(
     index_bytes = int(stats.get("index_bytes", 0) or 0)
 
     qdf, term_pred, wqt, nq = prepare_weighted_terms(
-        spark, index_dir, queries, config, n_docs, strict, analysis, bid,
+        spark, index_dir, queries, config, n_docs, strict, analysis,
         build_qdf=False)
     if term_pred is None:
         return _empty_result(spark)
@@ -391,12 +401,12 @@ def search_doc_partitioned(
         # row per (query, segment), so a 500-query batch over shared hot
         # terms shipped each hot segment's payload ~500× through the
         # shuffle + Arrow — measured 4× wall on the 500k scaling bench.)
-        # Candidates come back packed and already globally top-k'd.
-        topk = _score_ranges_broadcast(
+        # The candidates merge and get their urls in one task.
+        cand = _score_ranges_broadcast(
             spark, index_dir, term_pred, config, wqt, k, mode, k1, b,
             avgdl, topk_fn, do_seed, bid, index_bytes,
             n_ranges=n_ranges)
-        return attach_urls(spark, index_dir, topk)
+        return finish_topk(index_dir, cand, k)
     else:
         # distributed batch: query table is executor-resident; fall back
         # to the join shape, sub-bucketed by query for task balance
@@ -738,9 +748,9 @@ def _merge_topk_blobs(blobs: DataFrame, k: int, sp: int,
                       slot_arr) -> DataFrame:
     """Packed candidate blobs → exact global top-k rows (query_id, rank,
     doc_id, score). All of a query's candidates share a qb bucket, so one
-    vectorized lexsort + boundary walk per merge task replaces the
-    row-explosion + window (score desc, doc_id asc — identical tie
-    semantics, differential-tested)."""
+    vectorized lexsort + boundary walk per merge task (topk_order)
+    replaces the row-explosion + window (score desc, doc_id asc —
+    identical tie semantics, differential-tested)."""
     routed = (blobs.withColumn(
         "_mq", F.element_at(slot_arr, F.col("qb") + 1))
         .repartition(sp, "_mq").select("blob"))
@@ -755,19 +765,12 @@ def _merge_topk_blobs(blobs: DataFrame, k: int, sp: int,
         a = np.concatenate(arrs) if len(arrs) > 1 else arrs[0]
         if a.size == 0:
             return
-        qid = a[:, 0]
-        order = np.lexsort((a[:, 1], -a[:, 2], qid))
-        a, qid = a[order], qid[order]
-        gstart = np.flatnonzero(
-            np.concatenate(([True], qid[1:] != qid[:-1])))
-        glen = np.diff(np.concatenate((gstart, [qid.size])))
-        pos = np.arange(qid.size) - np.repeat(gstart, glen)
-        keep = pos < k
+        idx, rank = topk_order(a[:, 0], a[:, 1], a[:, 2], k)
         yield pd.DataFrame({
-            "query_id": qid[keep].astype(np.int64),
-            "rank": (pos[keep] + 1).astype(np.int32),
-            "doc_id": a[keep, 1].astype(np.int64),
-            "score": a[keep, 2],
+            "query_id": a[idx, 0].astype(np.int64),
+            "rank": rank,
+            "doc_id": a[idx, 1].astype(np.int64),
+            "score": a[idx, 2],
         })
 
     return routed.mapInPandas(run, TOPK_SCHEMA)
@@ -809,7 +812,7 @@ def _serving_segs(spark, index_dir, bid, sp, slot_arr, index_bytes):
     if _SEG_CACHE_SEEN[key] < 2:
         return None
     from pyspark import StorageLevel
-    segs = (spark.read.parquet(os.path.join(index_dir, "shards"))
+    segs = (read_table(spark, index_dir, "shards")
             .select("term_id", "range_id", "doc_lo", "n_postings",
                     "payload")
             .withColumn("_g", F.element_at(
@@ -830,9 +833,9 @@ def _prune_cached_segs(segs: DataFrame, term_ids: list) -> DataFrame:
     """Term pruning over the cached slot-keyed table. Both shapes (isin
     filter, broadcast left-semi) preserve the streamed side's hash
     partitioning on _g — no exchange reappears downstream."""
-    from word2doc_spark.query.exact import _ISIN_PRUNE_LIMIT
+    from word2doc_spark.query.exact import _ISIN_PRUNE_LIMIT, term_in
     if len(term_ids) <= _ISIN_PRUNE_LIMIT:
-        return segs.filter(F.col("term_id").isin(term_ids))
+        return segs.filter(term_in(term_ids))
     spark = segs.sparkSession
     wanted = spark.createDataFrame([(int(t),) for t in term_ids],
                                    "term_id long")
@@ -1037,7 +1040,9 @@ def _score_ranges_broadcast(spark, index_dir, term_pred, config, wqt,
     at build time). In serving mode (repeat batches on one build) even
     that per-batch exchange disappears: the scoring job's input becomes
     sp group-key rows and chains come from the workers' process caches
-    (_SEG_PCACHE / _pcache_runner)."""
+    (_SEG_PCACHE / _pcache_runner). Returns per-group candidate rows
+    (CAND_SCHEMA), or blob-merged top-k rows (TOPK_SCHEMA) above
+    _PACK_MIN_CANDIDATES — either is input to exact.finish_topk."""
     groups = _wqt_groups(wqt)
     # one broadcast of the (token, pack) tuple serves the seed pass and
     # the main pass; destroyed at the start of the next search call
@@ -1144,11 +1149,10 @@ def _score_ranges_broadcast(spark, index_dir, term_pred, config, wqt,
                                        v2=(use_v2, n_ranges,
                                            config.num_shards))
 
-    # merge shape: a tiny batch's candidate rows window in one stage,
-    # faster than an extra python merge round-trip (~0.5 s of fixed
-    # stage cost); a big batch's candidates must never explode into
-    # Arrow rows (a 20k-query batch emits ~10^7) — they travel packed
-    # and merge vectorized
+    # merge shape: a small batch's candidate rows go straight to the
+    # one-task finish (exact.finish_topk); a big batch's candidates must
+    # never explode into Arrow rows (a 20k-query batch emits ~10^7) —
+    # they travel packed and merge vectorized per query bucket first
     out_schema = CAND_BLOB_SCHEMA if pack else CAND_SCHEMA
     qb = sp if pack else None
 
@@ -1163,10 +1167,7 @@ def _score_ranges_broadcast(spark, index_dir, term_pred, config, wqt,
     cand = segs.groupBy("_g").applyInPandas(run, out_schema)
     if pack:
         return _merge_topk_blobs(cand, k, sp, slot_arr)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id"))
-    return (cand.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k))
+    return cand
 
 
 def _densest_ranges(spark, index_dir, term_pred, config,
