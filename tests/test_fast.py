@@ -199,90 +199,3 @@ def test_grouped_fast_only_groups_filter():
                                  TaskCache())
     assert set(oq) <= {q for q in qids if q % 2 == 1}
     assert ns == sum(1 for q in qids if q % 2 == 1)
-
-
-def test_grouped_env_flag_spark_identity(spark, tmp_path, monkeypatch):
-    """search_fast results must be identical with the grouped scorer on
-    and off (W2D_GROUPED_FAST=0 forces the per-query loop)."""
-    from word2doc_spark.config import IndexConfig
-    from word2doc_spark.index.build import build_index
-    from word2doc_spark.query.fast import search_fast
-    from word2doc_spark.sources.pages import synthetic_pages
-
-    cfg = IndexConfig(hash_size=2 ** 18, num_shards=2, block_size=64)
-    idx = str(tmp_path / "idx")
-    build_index(spark, synthetic_pages(spark, 120, num_partitions=4),
-                idx, cfg, input_token="gflag")
-    qdf = spark.createDataFrame(
-        [(1, "spark shuffle partition"), (2, "café naïve"),
-         (3, "posting wand block heap")],
-        "query_id long, query string")
-    key = lambda r: (r["query_id"], r["rank"])
-    for mode in ("drqa", "bm25"):
-        on = sorted(search_fast(spark, idx, qdf, k=10,
-                                score_mode=mode).collect(), key=key)
-        monkeypatch.setenv("W2D_GROUPED_FAST", "0")
-        off = sorted(search_fast(spark, idx, qdf, k=10,
-                                 score_mode=mode).collect(), key=key)
-        monkeypatch.delenv("W2D_GROUPED_FAST")
-        assert [(r["query_id"], r["rank"], r["doc_id"]) for r in on] == \
-               [(r["query_id"], r["rank"], r["doc_id"]) for r in off]
-        for x, y in zip(on, off):
-            assert math.isclose(x["score"], y["score"], rel_tol=1e-12)
-
-
-def test_cand_floor_identity_and_counters(spark, tmp_path, monkeypatch):
-    """The candidate emission floor (W2D_CAND_FLOOR=force) must leave
-    search_fast results bit-identical for both score modes while
-    actually dropping sub-θ0 candidates (floor counters advance)."""
-    import os
-    from word2doc_spark.config import IndexConfig
-    from word2doc_spark.index.build import build_index
-    from word2doc_spark.query.fast import search_fast
-    from word2doc_spark.query.stats import sample_worker_stats
-    from word2doc_spark.sources.pages import synthetic_pages
-
-    cfg = IndexConfig(hash_size=2 ** 18, num_shards=2, block_size=64,
-                      n_ranges=8)
-    idx = str(tmp_path / "idx")
-    build_index(spark, synthetic_pages(spark, 400, num_partitions=4),
-                idx, cfg, input_token="floor")
-    qdf = spark.createDataFrame(
-        [(i, f"spark shuffle partition tok{i % 7} café index posting")
-         for i in range(40)],
-        "query_id long, query string")
-    key = lambda r: (r["query_id"], r["rank"])
-    for mode in ("drqa", "bm25"):
-        monkeypatch.setenv("W2D_CAND_FLOOR", "0")
-        off = sorted(search_fast(spark, idx, qdf, k=5,
-                                 score_mode=mode).collect(), key=key)
-        monkeypatch.setenv("W2D_CAND_FLOOR", "force")
-        sample_worker_stats(spark, reset=True)
-        on = sorted(search_fast(spark, idx, qdf, k=5,
-                                score_mode=mode).collect(), key=key)
-        st = sample_worker_stats(spark)
-        monkeypatch.delenv("W2D_CAND_FLOOR")
-        assert [(r["query_id"], r["rank"], r["doc_id"]) for r in on] == \
-               [(r["query_id"], r["rank"], r["doc_id"]) for r in off]
-        for x, y in zip(on, off):
-            assert math.isclose(x["score"], y["score"], rel_tol=1e-12)
-        # the floor must have dropped something on this dense workload
-        # (8 ranges x k=5 per group vs global k=5)
-        assert st["cand_floored"] > 0, mode
-        assert st["cand_emitted"] > 0, mode
-
-
-def test_floor_filter_semantics():
-    """_floor_filter keeps ties at θ0 (>=), keeps unseeded queries
-    (sentinel -1.0) untouched, and drops strictly-below candidates."""
-    from word2doc_spark.query.ranges import _floor_filter
-
-    pack_qids = np.asarray([3, 7, 9], dtype=np.int64)
-    seeds = np.asarray([2.0, -1.0, 5.0], dtype=np.float64)
-    oq = [3, 3, 3, 7, 7, 9, 9]
-    od = [1, 2, 3, 4, 5, 6, 7]
-    os_ = [2.5, 2.0, 1.999, 0.1, 9.0, 5.0, 4.999]
-    q, d, s = _floor_filter(pack_qids, seeds, oq, od, os_)
-    assert q.tolist() == [3, 3, 7, 7, 9]
-    assert d.tolist() == [1, 2, 4, 5, 6]
-    assert s.tolist() == [2.5, 2.0, 0.1, 9.0, 5.0]

@@ -142,6 +142,22 @@ def test_ivf_assign_is_shuffle_free(vectors):
     assert "Exchange" not in plan, plan
 
 
+def test_strip_repartitions_drops_caller_repartition(spark):
+    """build._strip_repartitions rebuilds the DataFrame through the
+    private ``classic.Dataset.ofRows`` and returns its input unchanged
+    on any reflection error — so only this test notices a break."""
+    from word2doc_spark.index.build import _strip_repartitions
+    df = spark.range(1000).repartition(7)
+    out = _strip_repartitions(df)
+    assert out is not df
+    plan = plan_of(out, "extended")
+    analyzed = plan[plan.index("== Analyzed Logical Plan =="):
+                    plan.index("== Optimized Logical Plan ==")]
+    assert "Repartition" not in analyzed
+    assert "Exchange" not in plan[plan.index("== Physical Plan =="):]
+    assert sorted(r["id"] for r in out.collect()) == list(range(1000))
+
+
 def test_doc_partitioned_query_plan(spark, built):
     """The fast/WAND scoring plan of a driver-analyzed batch: the
     range-group scoring tasks (FlatMapGroupsInPandas) feed ONE

@@ -86,16 +86,15 @@ def test_dl_for_ranges_raises_on_missing_range(built):
 
 def test_serving_cache_identical_results_and_no_exchange(
         spark, built, monkeypatch):
-    """LEGACY serving mode (W2D_SERVING_V2=0, JVM-persisted segment
-    table): calls 1..3 on one build return identical rows; from call 2
-    the slot-keyed full segment table is persisted, and the warm plan
-    has an InMemoryTableScan with NO _g exchange (the in-memory table
-    already carries the hash partitioning the scoring stage needs)."""
+    """Serving mode (JVM-persisted segment table): calls 1..3 on one
+    build return identical rows; from call 2 the slot-keyed full segment
+    table is persisted, and the warm plan has an InMemoryTableScan with
+    NO _g exchange (the in-memory table already carries the hash
+    partitioning the scoring stage needs)."""
     from tests.test_plans import plan_of
     from word2doc_spark.query import ranges as R
     from word2doc_spark.query.fast import search_fast
 
-    monkeypatch.setenv("W2D_SERVING_V2", "0")
     for key in list(R._SEG_CACHE):
         R._SEG_CACHE.pop(key).unpersist()
     R._SEG_CACHE_SEEN.clear()
@@ -124,24 +123,18 @@ def test_serving_cache_identical_results_and_no_exchange(
                plan.index("InMemoryTableScan")]
     assert "Exchange" not in seg and "ShuffleQueryStage" not in seg
 
-    # cold plan (serving cache off) DOES pay the _g exchange — the
-    # assertion above is a real discriminator, not vacuous
-    import os
-    os.environ["W2D_SERVING_CACHE"] = "0"
-    try:
+    # cold plan (index over the serving-cache byte budget) reads the
+    # segments from parquet and DOES pay the _g exchange — the assertion
+    # above is a real discriminator, not vacuous
+    with monkeypatch.context() as m:
+        m.setattr(R, "_SEG_CACHE_MAX_BYTES", -1)
         cold = plan_of(search_fast(spark, built, qdf, k=5,
                                    score_mode="bm25"))
         assert "hashpartitioning(_g" in cold
-    finally:
-        os.environ["W2D_SERVING_CACHE"] = "1"
-
-    # drqa over the same cache stays rank-identical to its cold run
-    os.environ["W2D_SERVING_CACHE"] = "0"
-    try:
+        assert "InMemoryTableScan" not in cold
+        # drqa over the same cache stays rank-identical to its cold run
         cold_rows = rows(search_fast(spark, built, qdf, k=5,
                                      score_mode="drqa"))
-    finally:
-        os.environ["W2D_SERVING_CACHE"] = "1"
     warm_rows = rows(search_fast(spark, built, qdf, k=5,
                                  score_mode="drqa"))
     assert cold_rows == warm_rows
@@ -151,12 +144,10 @@ def test_serving_cache_identical_results_and_no_exchange(
     R._SEG_CACHE_SEEN.clear()
 
 
-def test_serving_cache_evicts_oldest_build(spark, built, tmp_path_factory,
-                                           monkeypatch):
+def test_serving_cache_evicts_oldest_build(spark, built, tmp_path_factory):
     from word2doc_spark.query import ranges as R
     from word2doc_spark.query.fast import search_fast
 
-    monkeypatch.setenv("W2D_SERVING_V2", "0")
     other_dir = str(tmp_path_factory.mktemp("servidx2"))
     build_index(spark, synthetic_pages(spark, 60, num_partitions=2),
                 other_dir, CFG, input_token="serving2")
@@ -250,6 +241,28 @@ def test_no_id_keyed_caches_in_kernels():
                 nxt = toks[i + 1]
                 assert not (nxt.type == tokenize.OP
                             and nxt.string == "("), (mod, t.start)
+
+
+# byte budgets are the only environment settings the library reads: an
+# env flag that picks an algorithm doubles the configurations every test
+# and benchmark must cover
+_ENV_BUDGETS = {"W2D_DL_CACHE_MAX_BYTES", "W2D_SEG_CACHE_MAX_BYTES",
+                "W2D_TASK_CACHE_MAX_BYTES", "W2D_GROUP_BUDGET"}
+
+
+def test_env_reads_are_byte_budgets_only():
+    import pathlib
+    import re
+    read = re.compile(r"""(?:environ\.get|getenv|environ\.setdefault"""
+                      r"""|environ\[)\s*\(?\s*["'](W2D_\w+)["']""")
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "word2doc_spark"
+    found = {}
+    for path in sorted(pkg.rglob("*.py")):
+        for name in read.findall(path.read_text()):
+            found.setdefault(name, []).append(path.name)
+    assert found, "no W2D_* env read found — is the pattern stale?"
+    extra = {n: f for n, f in found.items() if n not in _ENV_BUDGETS}
+    assert not extra, f"env reads beyond the byte budgets: {extra}"
 
 
 # ---------------------------------------------------------------------------
@@ -383,84 +396,3 @@ def test_stale_dataframe_survives_broadcast_drain(spark, built):
     got = sorted((r["query_id"], r["rank"], r["doc_id"])
                  for r in df1.collect())
     assert got == want
-
-
-# ---------------------------------------------------------------------------
-# serving mode v2: process-resident segment chains
-# ---------------------------------------------------------------------------
-
-def _rows(df):
-    return [(r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
-            for r in df.collect()]
-
-
-def test_serving_v2_identity_and_tiny_input(spark, built, monkeypatch):
-    """From the second search on a build the scoring job's input is sp
-    group-key rows (no segment scan in the plan at all); results stay
-    identical to the cold path across drqa and bm25, including a batch
-    with NEW terms against a warm cache (parquet miss-load + grouped
-    cache invalidation)."""
-    from tests.test_plans import plan_of
-    from word2doc_spark.query import ranges as R
-    from word2doc_spark.query.fast import search_fast
-    from word2doc_spark.query.wand import search_wand
-
-    monkeypatch.setenv("W2D_SERVING_V2", "1")
-    R._SEG_CACHE_SEEN.clear()
-    qdf = spark.createDataFrame(QUERIES, "query_id long, query string")
-
-    for mode in ("drqa", "bm25"):
-        R._SEG_CACHE_SEEN.clear()
-        r1 = _rows(search_fast(spark, built, qdf, k=5, score_mode=mode))
-        res2 = search_fast(spark, built, qdf, k=5, score_mode=mode)
-        r2 = _rows(res2)
-        r3 = _rows(search_fast(spark, built, qdf, k=5, score_mode=mode))
-        assert r1 == r2 == r3 and len(r1) > 0, mode
-        # warm plan reads NO index files: no parquet scan of shards,
-        # no InMemoryTableScan — the input is the driver-local group
-        # list only
-        plan = plan_of(res2)
-        assert "shards" not in plan and "InMemoryTableScan" not in plan
-
-    # NEW terms against the warm cache: the group tasks must load the
-    # missing chains from parquet and still match the cold path
-    q_new = spark.createDataFrame(
-        [(10, "executor broadcast codegen"), (11, "ranking retrieval")],
-        "query_id long, query string")
-    warm = _rows(search_fast(spark, built, q_new, k=5, score_mode="drqa"))
-    monkeypatch.setenv("W2D_SERVING_CACHE", "0")
-    cold = _rows(search_fast(spark, built, q_new, k=5, score_mode="drqa"))
-    monkeypatch.delenv("W2D_SERVING_CACHE")
-    assert warm == cold and len(warm) > 0
-
-    # WAND path through v2 too (per-query loop over superset chains)
-    R._SEG_CACHE_SEEN.clear()
-    w1 = _rows(search_wand(spark, built, qdf, k=5, score_mode="drqa"))
-    w2 = _rows(search_wand(spark, built, qdf, k=5, score_mode="drqa"))
-    assert w1 == w2 and len(w1) > 0
-
-
-def test_pcache_add_invalidates_grouped_entries():
-    """Growing a group's chain set must drop the grouped scorer's
-    cached active-doc space and factor arrays (their offsets index the
-    OLD active union) while keeping decoded chains."""
-    from word2doc_spark.query import ranges as R
-
-    e = R._pcache_entry("bidX", 4, 0)
-    try:
-        kc = e["kcache"]
-        kc[("gactive", "drqa")] = "stale"
-        kc[("gf", 7, "drqa")] = "stale"
-        kc[("chain", 7)] = "keep"
-        R._pcache_add_chains(e, {9: [b"p"]}, {9})
-        assert ("gactive", "drqa") not in kc
-        assert ("gf", 7, "drqa") not in kc
-        assert kc[("chain", 7)] == "keep"
-        assert 9 in e["terms"] and e["chains"][9] == [b"p"]
-        # re-adding an already-known term must NOT invalidate again
-        kc[("gactive", "drqa")] = "fresh"
-        R._pcache_add_chains(e, {9: [b"zzz"]}, set())
-        assert kc[("gactive", "drqa")] == "fresh"
-        assert e["chains"][9] == [b"p"]  # first load wins, no re-store
-    finally:
-        R._SEG_PCACHE.pop(("bidX", 4, 0), None)

@@ -46,8 +46,9 @@ class IndexConfig:
     # bookkeeping (bump on any stats/layout semantic change — the build
     # fingerprint includes it, so stale indexes rebuild; v3: range-segmented
     # posting lists + terms/doclen_seg tables; v4: numpy-packed blob staging
-    # (stage/terms holds (route, blob) rows, not exploded triples))
-    version: int = 4
+    # (stage/terms holds (route, blob) rows, not exploded triples); v5:
+    # every published index carries stats.build_id)
+    version: int = 5
     extras: dict = field(default_factory=dict)
 
     def to_dict(self) -> dict:

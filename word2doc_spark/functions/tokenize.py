@@ -331,14 +331,3 @@ def shared_analyzer(ngram: int = 2, hash_size: int = 2 ** 24,
         a = _ANALYZER_CACHE[key] = Analyzer(ngram=ngram, hash_size=hash_size,
                                             tokenizer=tokenizer)
     return a
-
-
-def analyze_query_terms(
-    query: str, ngram: int = 2, hash_size: int = 2 ** 24,
-    analyzer: Analyzer | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Query → (unique term_ids, query tfs); same analysis as documents
-    (reference applies the identical ngram pipeline to queries —
-    /root/reference/src/word2doc/retriever/tfidf_doc_ranker.py:84-107)."""
-    a = analyzer or Analyzer(ngram=ngram, hash_size=hash_size)
-    return a.analyze(query)

@@ -1,30 +1,21 @@
-"""Vectorized analysis stage: pages → exploded (doc_id, term_id, tf) rows.
+"""Extraction stage of the index build: pages → (url, text).
 
-One ``mapInPandas`` pass per corpus partition:
-* coalesce pre-extracted ``text`` with :func:`extract_text` over ``html``
-  (the reference's extract step, SURVEY.md §2.A1)
-* analyze every text in the Arrow batch (shared executor-lifetime
-  Analyzer: gram cache + batched murmur hashing)
-* emit the exploded postings triples directly (np.repeat for doc_ids —
-  no intermediate array column, no Spark-side explode)
-
-Map-side Catalyst partial aggregation then plays the role of the
-reference's per-worker Counter merge (build_tfidf.py:104-142).
+The text of each page is its pre-extracted ``text`` or, failing that,
+:func:`extract_text` over its ``html`` (the reference's extract step,
+SURVEY.md §2.A1), run as one Arrow UDF pass; the optional user plugin
+runs in the same pass. Term analysis of the extracted text happens in
+index/build.py, fused with doc_id assignment.
 """
 
 from __future__ import annotations
 
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
-from word2doc_spark.config import IndexConfig
 from word2doc_spark.functions.extract import extract_text
-
-TERMS_SCHEMA = "doc_id long, term_id long, tf int"
 
 
 def extracted_docs(pages: DataFrame, lang_filter: str | None = None,
@@ -78,30 +69,3 @@ def extracted_docs(pages: DataFrame, lang_filter: str | None = None,
 
         out = out.mapInPandas(run_plugin, schema="url string, text string")
     return out
-
-
-def analyze_terms(docs: DataFrame, config: IndexConfig) -> DataFrame:
-    """docs(doc_id, text, ...) → (doc_id, term_id, tf)."""
-    ngram, hash_size = config.ngram, config.hash_size
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from word2doc_spark.functions.tokenize import shared_analyzer
-        analyzer = shared_analyzer(ngram=ngram, hash_size=hash_size,
-                                   tokenizer=config.analyzer)
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            texts = pdf["text"].fillna("").tolist()
-            term_lists, tf_lists = analyzer.analyze_batch(texts)
-            lens = np.fromiter((t.size for t in term_lists), dtype=np.int64,
-                               count=len(term_lists))
-            if lens.sum() == 0:
-                continue
-            doc_ids = np.repeat(pdf["doc_id"].to_numpy(), lens)
-            yield pd.DataFrame({
-                "doc_id": doc_ids,
-                "term_id": np.concatenate(term_lists),
-                "tf": np.concatenate(tf_lists).astype(np.int32),
-            })
-
-    return docs.select("doc_id", "text").mapInPandas(run, schema=TERMS_SCHEMA)

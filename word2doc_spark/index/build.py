@@ -5,8 +5,12 @@ Pipeline (SURVEY.md §7.0), all DataFrame-declarative except the two
 Arrow-UDF stages (analysis, posting encode):
 
     pages ──extract──▶ (url, text)
-          ──assign_doc_ids──▶ (doc_id, url, text)          [docs stage]
-          ──analyze mapInPandas──▶ numpy-PACKED posting blobs
+          ──bucket by sampled url bounds, sort within bucket──▶ cached
+              corpus; per-bucket counts give each bucket's id offset, so
+              doc_id = position of the url in url-sorted order
+          two concurrent passes over the cached corpus:
+          ──ids_only mapInPandas──▶ docs (doc_id, url)
+          ──ids_and_analyze mapInPandas──▶ numpy-PACKED posting blobs
               (shard_id, route, blob)  blob = raw int64 (term, doc, tf)
               triples grouped by (shard, route); per-doc dl pairs ride in
               their own blobs under the shard_id = -1 hive partition
@@ -380,9 +384,9 @@ def _write_staged(df: DataFrame, stage_path: str,
 def _staged_part(spark: SparkSession, stage_path: str,
                  dl: bool) -> DataFrame:
     """The posting (dl=False) or dl-blob (dl=True) slice of a staged
-    table, pruning on whichever layout is on disk (``_dl`` flag from
-    _write_staged, or the legacy per-shard hive partitioning — an index
-    staged by older code resumes without rebuilding)."""
+    table, pruning on whichever layout _write_staged chose: the ``_dl``
+    flag (shards_per_job == 0), or the per-shard hive partitioning with
+    the dl blobs under shard_id = -1 (shards_per_job > 0)."""
     staged = spark.read.parquet(stage_path)
     if "_dl" in staged.columns:
         # cast-compare: hive partition values may surface as string or

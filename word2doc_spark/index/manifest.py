@@ -140,16 +140,3 @@ class Manifest:
 
     def is_published(self) -> bool:
         return os.path.exists(self.config_path())
-
-
-def build_metrics_df(spark, index_dir: str):
-    """Per-shard lineage + metrics as a DataFrame (north-rule visibility:
-    every shard row carries its build fingerprint, sizes and wall time)."""
-    rows = Manifest(index_dir).shard_metrics()
-    schema = ("shard_id int, fingerprint string, n_terms long, "
-              "n_postings long, bytes long, n_segments long, wall_s double")
-    return spark.createDataFrame(
-        [(r["shard_id"], r["fingerprint"], r.get("n_terms", 0),
-          r.get("n_postings", 0), r.get("bytes", 0),
-          r.get("n_segments", 0), float(r.get("wall_s", 0.0)))
-         for r in rows], schema)

@@ -118,14 +118,3 @@ def oracle_search(
             scores[d] = scores.get(d, 0.0) + s
     ranked = sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
     return [(d, index.doc_urls[d], s) for d, s in ranked]
-
-
-def oracle_topk_table(
-    index: OracleIndex, queries: list[tuple[int, str]], k: int = 10
-) -> list[tuple[int, int, int, str, float]]:
-    """Golden rows (query_id, rank, doc_id, url, score)."""
-    rows = []
-    for qid, q in queries:
-        for rank, (d, url, s) in enumerate(oracle_search(index, q, k), start=1):
-            rows.append((qid, rank, d, url, s))
-    return rows

@@ -93,18 +93,6 @@ def analyze_queries(queries: DataFrame, config: IndexConfig) -> DataFrame:
         run, schema=QUERY_TERMS_SCHEMA)
 
 
-def analyze_queries_driver(queries: DataFrame, config: IndexConfig,
-                           strict: bool = False) -> pd.DataFrame:
-    """Driver-side analysis of a query batch → pandas (query_id, term_id,
-    qtf). One collect of the (small) query side replaces the per-batch
-    distinct-term collect round-trip of the distributed variant.
-
-    strict=True raises on queries with zero kept terms — reference B9
-    semantics (tfidf_doc_ranker.py:98-103)."""
-    rows = queries.select("query_id", "query").collect()
-    return analyze_query_rows(rows, config, strict=strict)
-
-
 def analyze_query_rows(rows, config: IndexConfig,
                        strict: bool = False) -> pd.DataFrame:
     """Analysis of already-collected (query_id, query) rows — lets the

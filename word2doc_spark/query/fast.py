@@ -139,7 +139,8 @@ def _grouped_fast(qids_l, offs, tids_l, w_l, idf_l, og_l, g, chains,
     matched query of the broadcast pack in numpy chunks instead of a
     python call per query.
 
-    Three per-task preparations, each cached (TaskCache, byte-charged):
+    Three per-task preparations (the first and last cached in the
+    TaskCache, byte-charged):
     * each term chain decodes once to (global doc_ids, tfs) — as before;
     * the group's ACTIVE doc space: the sorted union of every matched
       chain's docs. Scoring happens in rank-compressed active indices,
@@ -186,15 +187,9 @@ def _grouped_fast(qids_l, offs, tids_l, w_l, idf_l, og_l, g, chains,
                 charge(ck, chain[0].nbytes + chain[1].nbytes)
         return chain
 
-    act_key = ("gactive", mode)
-    active = cache.get(act_key)
-    if active is None:
-        parts = [get_chain(tid)[0] for tid in chains]
-        active = np.unique(np.concatenate(parts)) if parts else \
-            np.empty(0, dtype=np.int64)
-        cache[act_key] = active
-        if charge is not None:
-            charge(act_key, active.nbytes)
+    parts = [get_chain(tid)[0] for tid in chains]
+    active = np.unique(np.concatenate(parts)) if parts else \
+        np.empty(0, dtype=np.int64)
     n_active = int(active.size)
     if n_active == 0:
         return [], [], [], 0

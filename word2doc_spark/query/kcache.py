@@ -37,13 +37,6 @@ class TaskCache(dict):
     def charged_bytes(self) -> int:
         return self._bytes
 
-    def discard(self, key) -> None:
-        """Remove ``key`` (if present) keeping byte accounting right."""
-        old = self._sizes.pop(key, None)
-        if old is not None:
-            self._bytes -= old
-        self.pop(key, None)
-
     def charge(self, key, nbytes: int) -> None:
         """Record that ``key`` holds ~nbytes; evict oldest charged keys
         until the budget fits (the just-charged key is never evicted —

@@ -109,12 +109,12 @@ _PACK_MIN_CANDIDATES = 1_000_000
 # WITHOUT per-query timers in the hot loop — two monotonic() reads per
 # task, ~µs against multi-ms tasks.
 STATS = {"score_tasks": 0, "score_wall_s": 0.0, "chain_build_s": 0.0,
-         "queries_scored": 0, "cand_emitted": 0, "cand_floored": 0}
+         "queries_scored": 0}
 
 
 def reset_stats() -> None:
     STATS.update(score_tasks=0, score_wall_s=0.0, chain_build_s=0.0,
-                 queries_scored=0, cand_emitted=0, cand_floored=0)
+                 queries_scored=0)
 
 
 def get_stats() -> dict:
@@ -352,9 +352,8 @@ def search_doc_partitioned(
     avgdl = float(stats["avgdl"])
     k1, b = config.k1, config.b
     # executor-side process caches key on the per-publish build_id (never
-    # the config fingerprint — not a content hash); legacy indexes
-    # without one fall back to the fingerprint
-    bid = stats.get("build_id") or stats.get("fingerprint")
+    # the config fingerprint — not a content hash)
+    bid = stats["build_id"]
     index_bytes = int(stats.get("index_bytes", 0) or 0)
 
     qdf, term_pred, wqt, nq = prepare_weighted_terms(
@@ -404,8 +403,7 @@ def search_doc_partitioned(
         # The candidates merge and get their urls in one task.
         cand = _score_ranges_broadcast(
             spark, index_dir, term_pred, config, wqt, k, mode, k1, b,
-            avgdl, topk_fn, do_seed, bid, index_bytes,
-            n_ranges=n_ranges)
+            avgdl, topk_fn, do_seed, bid, index_bytes)
         return finish_topk(index_dir, cand, k)
     else:
         # distributed batch: query table is executor-resident; fall back
@@ -539,9 +537,7 @@ def _score_range_broadcast(pdf: pd.DataFrame, unpacked, dl, k, mode, k1,
                            b, avgdl, topk_fn, seeds=None,
                            only_groups=None,
                            n_qb: int | None = None,
-                           grouped_ok: bool = True,
-                           kth_only: bool = False,
-                           pop_key=None) -> pd.DataFrame:
+                           kth_only: bool = False) -> pd.DataFrame:
     """Score one slot-group of doc ranges for every query in ``groups``.
     pdf holds each matched segment of the group's ranges exactly once
     (term_id, doc_lo, payload); per-term segment chains are built with one
@@ -576,85 +572,42 @@ def _score_range_broadcast(pdf: pd.DataFrame, unpacked, dl, k, mode, k1,
               for s, e in zip(starts, ends)}
     t_chains = time.monotonic()
     g = int(pdf["_g"].iloc[0])
-    if pop_key is not None:
-        # warm the process-resident serving cache as a side effect: the
-        # next batch against this build scores from it with no segment
-        # exchange and no Arrow transfer at all (_pcache_runner)
-        _pcache_populate(pop_key[0], pop_key[1], g, chains,
-                         unpacked[2])
     # per-task byte-bounded decode cache; chain cache keys are the
     # term_ids themselves (content-stable — one chain per term per task)
-    return _score_group_core(chains, dl, k, mode, k1, b, avgdl,
-                             topk_fn, unpacked, seeds, only_groups,
-                             n_qb, grouped_ok, kth_only, g,
-                             TaskCache(), t_start, t_chains)
-
-
-def _score_group_core(chains, dl, k, mode, k1, b, avgdl, topk_fn,
-                      unpacked, seeds, only_groups, n_qb, grouped_ok,
-                      kth_only, g, cache, t_start,
-                      t_chains) -> pd.DataFrame:
-    """Scoring core shared by the Arrow-fed path (chains built from the
-    task's pdf) and the process-resident serving path (chains live in
-    _SEG_PCACHE across batches — ``chains`` may then be a SUPERSET of
-    the batch's matched terms: extra terms only widen the grouped
-    scorer's active-doc space with zero-score docs, which the ``> 0``
-    emission mask excludes, and the per-query paths index chains by the
-    query's own term ids — results are identical either way)."""
-    out_q, out_d, out_s = [], [], []
+    cache = TaskCache()
     # pack already unpacked to plain python scalars, once per worker;
     # seeds / only_groups arrive as pack-aligned arrays, not dicts
     qids_l, offs, tids_l, w_l, idf_l = unpacked
     og_l = only_groups.tolist() if only_groups is not None else None
-    seed_l = seeds.tolist() if seeds is not None else None
-    chains_get = chains.get
-    n_scored = 0
     grouped = getattr(topk_fn, "grouped_impl", None)
-    if grouped is not None and grouped_ok:
+    if grouped is not None:
         # batch the whole pack through the numpy chunk scorer (the fast
-        # kernel ignores θ seeds, so seed_l never changes its results)
+        # kernel ignores θ seeds, so seeds never change its results)
         out_q, out_d, out_s, n_scored = grouped(
             qids_l, offs, tids_l, w_l, idf_l, og_l, g, chains,
             dl, k, mode, k1, b, avgdl, cache)
-        if seeds is not None and not kth_only:
-            out_q, out_d, out_s = _floor_filter(
-                np.asarray(qids_l, dtype=np.int64), seeds,
-                out_q, out_d, out_s)
-        t_end = time.monotonic()
-        STATS["score_tasks"] += 1
-        STATS["score_wall_s"] += t_end - t_start
-        STATS["chain_build_s"] += t_chains - t_start
-        STATS["queries_scored"] += n_scored
-        if kth_only:
-            return _kth_rows(out_q, out_s, k)
-        if n_qb is None:
-            return pd.DataFrame({
-                "query_id": np.asarray(out_q, dtype=np.int64),
-                "doc_id": np.asarray(out_d, dtype=np.int64),
-                "score": np.asarray(out_s, dtype=np.float64),
-            })
-        return _pack_candidates(out_q, out_d, out_s, n_qb)
-    for i, qid in enumerate(qids_l):
-        if og_l is not None and og_l[i] != g:
-            continue
-        term_rows = []
-        for j in range(offs[i], offs[i + 1]):
-            ch = chains_get(tids_l[j])
-            if ch is not None:
-                term_rows.append((w_l[j], idf_l[j], ch, tids_l[j]))
-        if not term_rows:
-            continue
-        n_scored += 1
-        theta0 = seed_l[i] if seed_l is not None else -1.0
-        for doc, score in topk_fn(term_rows, k, mode, k1, b, avgdl, dl,
-                                  theta0=theta0, cache=cache):
-            out_q.append(qid)
-            out_d.append(doc)
-            out_s.append(score)
-    if seeds is not None and not kth_only:
-        out_q, out_d, out_s = _floor_filter(
-            np.asarray(qids_l, dtype=np.int64), seeds,
-            out_q, out_d, out_s)
+    else:
+        out_q, out_d, out_s = [], [], []
+        n_scored = 0
+        seed_l = seeds.tolist() if seeds is not None else None
+        chains_get = chains.get
+        for i, qid in enumerate(qids_l):
+            if og_l is not None and og_l[i] != g:
+                continue
+            term_rows = []
+            for j in range(offs[i], offs[i + 1]):
+                ch = chains_get(tids_l[j])
+                if ch is not None:
+                    term_rows.append((w_l[j], idf_l[j], ch, tids_l[j]))
+            if not term_rows:
+                continue
+            n_scored += 1
+            theta0 = seed_l[i] if seed_l is not None else -1.0
+            for doc, score in topk_fn(term_rows, k, mode, k1, b, avgdl,
+                                      dl, theta0=theta0, cache=cache):
+                out_q.append(qid)
+                out_d.append(doc)
+                out_s.append(score)
     t_end = time.monotonic()
     STATS["score_tasks"] += 1
     STATS["score_wall_s"] += t_end - t_start
@@ -669,27 +622,6 @@ def _score_group_core(chains, dl, k, mode, k1, b, avgdl, topk_fn,
             "score": np.asarray(out_s, dtype=np.float64),
         })
     return _pack_candidates(out_q, out_d, out_s, n_qb)
-
-
-def _floor_filter(pack_qids, seeds_arr, out_q, out_d, out_s):
-    """Drop candidates strictly below their query's θ0 emission floor
-    (pack-aligned ``seeds_arr``; -1.0 = no floor). θ0 sits strictly
-    below the query's GLOBAL k-th score (it is nextafter-down of a k-th
-    over a doc subset, and adding docs can only raise the k-th), so
-    every doc of the true global top-k — ties at the k-th included —
-    scores ≥ θ0 and survives; the merge's result is bit-identical while
-    its input shrinks from ~groups×k to ~k candidates per query."""
-    n = len(out_q)
-    if n == 0:
-        return out_q, out_d, out_s
-    oq = np.asarray(out_q, dtype=np.int64)
-    od = np.asarray(out_d, dtype=np.int64)
-    os_ = np.asarray(out_s, dtype=np.float64)
-    th = seeds_arr[np.searchsorted(pack_qids, oq)]
-    keep = (th == -1.0) | (os_ >= th)
-    STATS["cand_emitted"] += int(keep.sum())
-    STATS["cand_floored"] += int(n - keep.sum())
-    return oq[keep], od[keep], os_[keep]
 
 
 def _kth_rows(out_q, out_s, k: int) -> pd.DataFrame:
@@ -797,17 +729,15 @@ _SEG_CACHE_MAX_ENTRIES = 2
 
 def _serving_segs(spark, index_dir, bid, sp, slot_arr, index_bytes):
     """Persisted slot-keyed FULL segment table for (build, sp), or None
-    when serving mode is off / not yet warranted (first call on a build
-    stays on the per-batch pruned scan — one-shot batches should not pay
-    a whole-index materialization)."""
+    when the index exceeds _SEG_CACHE_MAX_BYTES or the table is not yet
+    warranted (first call on a build stays on the per-batch pruned scan
+    — one-shot batches should not pay a whole-index materialization)."""
+    if (index_bytes or 0) > _SEG_CACHE_MAX_BYTES:
+        return None
     key = (bid, sp)
     df = _SEG_CACHE.get(key)
     if df is not None:
         return df
-    if (bid is None
-            or os.environ.get("W2D_SERVING_CACHE", "1") != "1"
-            or (index_bytes or 0) > _SEG_CACHE_MAX_BYTES):
-        return None
     _SEG_CACHE_SEEN[key] = _SEG_CACHE_SEEN.get(key, 0) + 1
     if _SEG_CACHE_SEEN[key] < 2:
         return None
@@ -842,161 +772,9 @@ def _prune_cached_segs(segs: DataFrame, term_ids: list) -> DataFrame:
     return segs.join(F.broadcast(wanted), "term_id", "left_semi")
 
 
-# process-resident serving cache (serving mode v2): the JVM-persisted
-# segment table (_serving_segs) removes the per-batch parquet scan and
-# shuffle, but each batch still ships every matched segment JVM→python
-# through Arrow (~the compressed index size per batch — measured as the
-# dominant between-task cost of warm batches at high core counts). From
-# the second search on a build the scoring job's INPUT becomes sp rows
-# of just the group key; each python worker keeps the groups it has
-# served as {term_id: [payload bytes]} chains plus a persistent kernel
-# TaskCache (decoded chains / factor arrays survive across batches),
-# loading missing terms straight from the index parquet with shard +
-# term + range predicate pushdown (no Spark job). Per warm batch the
-# only data movement is the O(Q) query-pack broadcast in and the
-# floored/top-k candidates out. The cluster analog is a serving fleet
-# with executor-resident index shards; the byte budget bounds worker
-# memory and parquet is the on-miss fallback, so an over-budget index
-# still serves (it pages), it just loses the residency win.
-_SEG_PCACHE: dict = {}
-_SEG_PCACHE_BUDGET = int(os.environ.get("W2D_SEG_PCACHE_MAX_BYTES",
-                                        4 << 30))
-
-
-def _pcache_entry(bid, sp, g) -> dict:
-    key = (bid, sp, g)
-    e = _SEG_PCACHE.get(key)
-    if e is None:
-        from word2doc_spark.query.kcache import TaskCache
-        e = _SEG_PCACHE[key] = {"terms": set(), "chains": {},
-                                "bytes": 0, "kcache": TaskCache()}
-    return e
-
-
-def _pcache_size(e: dict) -> int:
-    # chains + kernel-cache bytes + a rough charge for the known-terms
-    # set (64 B/entry), which the old accounting left out of the budget
-    return (e["bytes"] + e["kcache"].charged_bytes()
-            + 64 * len(e["terms"]))
-
-
-def _pcache_evict_over_budget(keep_key=None) -> None:
-    total = sum(_pcache_size(e) for e in _SEG_PCACHE.values())
-    while total > _SEG_PCACHE_BUDGET and len(_SEG_PCACHE) > 1:
-        # never evict the entry that was just populated / is actively
-        # serving (mirror TaskCache.charge's just-charged exemption) —
-        # FIFO used to evict it when one group's chains blew the
-        # budget, re-faulting the group from parquet every warm batch
-        victim = next((x for x in _SEG_PCACHE if x != keep_key), None)
-        if victim is None:
-            break
-        total -= _pcache_size(_SEG_PCACHE.pop(victim))
-
-
-def _pcache_add_chains(e: dict, new_chains: dict, known_tids,
-                       key=None) -> None:
-    """Merge chains into a group entry; ``known_tids`` are additionally
-    marked loaded (absent-from-group terms get no chain but stop being
-    re-queried). Grows the entry, so the grouped scorer's cached
-    active-doc space and factor arrays are invalidated — their offsets
-    are positions in the OLD active union and would silently mis-place
-    a new term's postings. ``key`` exempts this entry from the eviction
-    sweep it may trigger."""
-    added = False
-    for tid, ch in new_chains.items():
-        if tid not in e["terms"]:
-            e["chains"][tid] = ch
-            e["bytes"] += sum(len(p) for p in ch) + 64
-            added = True
-    e["terms"].update(new_chains)
-    e["terms"].update(known_tids)
-    if added:
-        kc = e["kcache"]
-        for ck in [x for x in kc
-                   if isinstance(x, tuple) and x
-                   and x[0] in ("gactive", "gf")]:
-            kc.discard(ck)
-        _pcache_evict_over_budget(keep_key=key)
-
-
-def _pcache_populate(bid, sp, g, chains, pack_tids) -> None:
-    e = _pcache_entry(bid, sp, g)
-    _pcache_add_chains(e, chains, set(pack_tids), key=(bid, sp, g))
-
-
-def _load_group_terms(index_dir, e, granges, missing,
-                      num_shards, key=None) -> None:
-    """Read the missing terms' segments for one range group directly
-    from the shards parquet (pyarrow, inside the python worker — no
-    Spark job): shard partition pruning via the term→shard route,
-    row-group pushdown on term_id, range restriction to the group."""
-    import pyarrow.compute as pc
-    import pyarrow.dataset as pads
-    miss = [int(t) for t in missing]
-    ds = pads.dataset(os.path.join(index_dir, "shards"),
-                      format="parquet", partitioning="hive")
-    filt = (pc.field("term_id").isin(miss)
-            & pc.field("range_id").isin([int(r) for r in granges]))
-    shard_ids = sorted({t % num_shards for t in miss})
-    if len(shard_ids) < num_shards:
-        filt = filt & pc.field("shard_id").isin(shard_ids)
-    tbl = ds.to_table(columns=["term_id", "doc_lo", "payload"],
-                      filter=filt)
-    tids = tbl.column("term_id").to_numpy()
-    dlos = tbl.column("doc_lo").to_numpy()
-    payloads = tbl.column("payload").to_pylist()
-    order = np.lexsort((dlos, tids))
-    got: dict = {}
-    for i in order:
-        got.setdefault(int(tids[i]), []).append(payloads[i])
-    _pcache_add_chains(e, got, miss, key=key)
-
-
-def _pcache_runner(index_dir, bid, bc, k, mode, k1, b, avgdl, topk_fn,
-                   n_qb, sp, n_ranges, num_shards, seeds=None,
-                   only_groups=None, kth_only=False):
-    """Scoring closure for serving mode v2: input rows carry only the
-    group key; chains come from the worker's process cache (parquet
-    load on miss), dl blobs from the per-range process cache, and the
-    kernel TaskCache persists across batches per group."""
-    grouped_ok = os.environ.get("W2D_GROUPED_FAST", "1") != "0"
-    from word2doc_spark.index.build import _partition_slots
-    slots = _partition_slots(sp)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            if kth_only:
-                return _kth_rows([], [], k)
-            if n_qb:
-                return _pack_candidates([], [], [], n_qb)
-            return pd.DataFrame({
-                "query_id": pd.Series([], dtype="int64"),
-                "doc_id": pd.Series([], dtype="int64"),
-                "score": pd.Series([], dtype="float64")})
-        t_start = time.monotonic()
-        g = int(pdf["_g"].iloc[0])
-        e = _pcache_entry(bid, sp, g)
-        unpacked = _unpack_groups_bc(bc)
-        missing = set(unpacked[2]) - e["terms"]
-        granges = [r for r in range(n_ranges) if slots[r % sp] == g]
-        if missing:
-            _load_group_terms(index_dir, e, granges, missing,
-                              num_shards, key=(bid, sp, g))
-        dl = (_dl_for_ranges(index_dir, bid, granges)
-              if mode == "bm25" else None)
-        t_chains = time.monotonic()
-        return _score_group_core(e["chains"], dl, k, mode, k1, b,
-                                 avgdl, topk_fn, unpacked, seeds,
-                                 only_groups, n_qb, grouped_ok,
-                                 kth_only, g, e["kcache"], t_start,
-                                 t_chains)
-
-    return run
-
-
 def _broadcast_runner(index_dir, bid, bc, k, mode, k1, b, avgdl,
-                      topk_fn, n_qb, sp, seeds=None, only_groups=None,
-                      kth_only=False, pop_key=None):
+                      topk_fn, n_qb, seeds=None, only_groups=None,
+                      kth_only=False):
     """Scoring closure for the broadcast shape. The query pack travels
     as the Spark broadcast variable ``bc`` (once per worker, not once
     per task — see _unpack_groups_bc); seeds/only_groups are small
@@ -1004,9 +782,6 @@ def _broadcast_runner(index_dir, bid, bc, k, mode, k1, b, avgdl,
     inside the task (_dl_for_ranges: per-range process cache + one
     pyarrow read for misses) — no cogroup and no per-batch dl shuffle;
     the physical plan is identical for both score modes."""
-    # resolved DRIVER-side so tests (and operators) can toggle the
-    # grouped scorer per call; the bool rides the task closure
-    grouped_ok = os.environ.get("W2D_GROUPED_FAST", "1") != "0"
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) == 0:
@@ -1024,25 +799,22 @@ def _broadcast_runner(index_dir, bid, bc, k, mode, k1, b, avgdl,
                                       mode, k1, b,
                                       avgdl, topk_fn, seeds=seeds,
                                       only_groups=only_groups, n_qb=n_qb,
-                                      grouped_ok=grouped_ok,
-                                      kth_only=kth_only,
-                                      pop_key=pop_key)
+                                      kth_only=kth_only)
 
     return run
 
 
 def _score_ranges_broadcast(spark, index_dir, term_pred, config, wqt,
                             k, mode, k1, b, avgdl, topk_fn, do_seed,
-                            bid=None, index_bytes=0, n_ranges=0):
+                            bid, index_bytes=0):
     """Range-grouped scoring with the query table in the kernel closure.
     Shuffle volume = each matched segment once (keyed by range_id) —
     independent of batch size; parallelism = n_ranges tasks (set ≫ cores
     at build time). In serving mode (repeat batches on one build) even
-    that per-batch exchange disappears: the scoring job's input becomes
-    sp group-key rows and chains come from the workers' process caches
-    (_SEG_PCACHE / _pcache_runner). Returns per-group candidate rows
-    (CAND_SCHEMA), or blob-merged top-k rows (TOPK_SCHEMA) above
-    _PACK_MIN_CANDIDATES — either is input to exact.finish_topk."""
+    that per-batch exchange disappears: the scoring stage reads the
+    persisted slot-keyed segment table (_serving_segs). Returns per-group
+    candidate rows (CAND_SCHEMA), or blob-merged top-k rows (TOPK_SCHEMA)
+    above _PACK_MIN_CANDIDATES — either is input to exact.finish_topk."""
     groups = _wqt_groups(wqt)
     # one broadcast of the (token, pack) tuple serves the seed pass and
     # the main pass; destroyed at the start of the next search call
@@ -1059,44 +831,11 @@ def _score_ranges_broadcast(spark, index_dir, term_pred, config, wqt,
     slots = _partition_slots(sp)
     slot_arr = F.array(*[F.lit(x) for x in slots])
 
-    # serving v2 (process-resident chains) is OPT-IN: measured on this
-    # single-box pool, task→python-worker assignment is arbitrary, so
-    # each of ~n_cores workers must independently fault in all sp
-    # groups before the residency pays (n_workers × n_groups parquet
-    # loads ≈ 8 batches of pure warm-up at the 500k bench — a net LOSS
-    # vs the JVM-persisted table there). On a cluster whose executors
-    # own stable range subsets (locality-scheduled serving fleet), the
-    # same code converges per executor and removes the per-batch
-    # segment exchange + Arrow transfer entirely.
-    v2_env = (os.environ.get("W2D_SERVING_V2", "0") == "1"
-              and os.environ.get("W2D_SERVING_CACHE", "1") == "1"
-              and bid is not None and n_ranges > 0
-              and (index_bytes or 0) <= _SEG_CACHE_MAX_BYTES)
-    use_v2 = False
-    cached = None
-    if v2_env:
-        # v2 keeps its OWN seen-counter key: sharing the legacy serving
-        # cache's counter meant toggling W2D_SERVING_V2 mid-session
-        # inherited the other mode's warm-up count and flipped v2 on for
-        # a first-ever v2 batch (ADVICE r5)
-        key = ("v2", bid, sp)
-        _SEG_CACHE_SEEN[key] = _SEG_CACHE_SEEN.get(key, 0) + 1
-        use_v2 = _SEG_CACHE_SEEN[key] >= 2
-    else:
-        cached = _serving_segs(spark, index_dir, bid, sp, slot_arr,
-                               index_bytes)
-    if use_v2:
-        # serving mode v2: input = one row per slot group; segments are
-        # process-resident in the workers (parquet on miss) — no scan,
-        # no shuffle, no JVM→python segment transfer
-        segs = (spark.createDataFrame([(int(s),) for s in slots],
-                                      "_g int")
-                .repartition(sp, "_g"))
-        seg_persisted = True
-    elif cached is not None:
+    cached = _serving_segs(spark, index_dir, bid, sp, slot_arr,
+                           index_bytes)
+    if cached is not None:
         segs = (_prune_cached_segs(cached, term_pred)
                 .select("range_id", "term_id", "doc_lo", "payload", "_g"))
-        seg_persisted = True
     else:
         # explicit repartition(n, _g): (a) the slot mapping gives every
         # range group its own partition, and (b) a user-numbered
@@ -1110,29 +849,10 @@ def _score_ranges_broadcast(spark, index_dir, term_pred, config, wqt,
                 .withColumn("_g", F.element_at(
                     slot_arr, F.pmod(F.col("range_id"), F.lit(sp)) + 1))
                 .repartition(sp, "_g"))
-        seg_persisted = False
-
-    # candidate-volume estimate picks the merge shape (computed early:
-    # it also gates the emission floor)
-    pack = len(groups[0]) * sp * k > _PACK_MIN_CANDIDATES
-
-    # candidate EMISSION FLOOR for the batch-kernel path: a θ-seed
-    # pre-pass buys each query a lower bound strictly below its global
-    # k-th, and every scoring task emits only candidates ≥ it — the
-    # merge result is bit-identical (see _floor_filter). Measured OFF by
-    # default: a single slot group's k-th floors only ~30% of the
-    # candidates on dense topical batches while the pre-pass re-pays the
-    # per-group fixed work, a net loss at the 500k bench. W2D_CAND_FLOOR:
-    # 0 = off (default), 1 = auto (pack-gated), force = always (tests).
-    floor_env = os.environ.get("W2D_CAND_FLOOR", "0")
-    want_floor = (not do_seed
-                  and getattr(topk_fn, "grouped_impl", None) is not None
-                  and (floor_env == "force"
-                       or (floor_env == "1" and pack)))
 
     seeds = None
-    if do_seed or want_floor:
-        if not seg_persisted:
+    if do_seed:
+        if cached is None:
             # the seed pre-pass and the main pass both consume the
             # matched segments — persist so the segment scan + shuffle
             # runs once (unpersisted at the next search call, see
@@ -1145,25 +865,18 @@ def _score_ranges_broadcast(spark, index_dir, term_pred, config, wqt,
                                        config, wqt, groups, bc, segs,
                                        slots, sp, k, mode,
                                        k1, b, avgdl, topk_fn, bid,
-                                       segs_meta=cached,
-                                       v2=(use_v2, n_ranges,
-                                           config.num_shards))
+                                       segs_meta=cached)
 
     # merge shape: a small batch's candidate rows go straight to the
     # one-task finish (exact.finish_topk); a big batch's candidates must
     # never explode into Arrow rows (a 20k-query batch emits ~10^7) —
     # they travel packed and merge vectorized per query bucket first
+    pack = len(groups[0]) * sp * k > _PACK_MIN_CANDIDATES
     out_schema = CAND_BLOB_SCHEMA if pack else CAND_SCHEMA
     qb = sp if pack else None
 
-    if use_v2:
-        run = _pcache_runner(index_dir, bid, bc, k, mode, k1, b,
-                             avgdl, topk_fn, qb, sp, n_ranges,
-                             config.num_shards, seeds=seeds)
-    else:
-        run = _broadcast_runner(index_dir, bid, bc, k, mode, k1, b,
-                                avgdl, topk_fn, qb, sp, seeds=seeds,
-                                pop_key=((bid, sp) if v2_env else None))
+    run = _broadcast_runner(index_dir, bid, bc, k, mode, k1, b, avgdl,
+                            topk_fn, qb, seeds=seeds)
     cand = segs.groupBy("_g").applyInPandas(run, out_schema)
     if pack:
         return _merge_topk_blobs(cand, k, sp, slot_arr)
@@ -1218,8 +931,8 @@ def _densest_ranges(spark, index_dir, term_pred, config,
 
 def _theta_seeds_broadcast(spark, index_dir, term_pred, config, wqt,
                            groups, bc, segs, slots, sp,
-                           k, mode, k1, b, avgdl, topk_fn, bid=None,
-                           segs_meta=None, v2=(False, 0, 0)):
+                           k, mode, k1, b, avgdl, topk_fn, bid,
+                           segs_meta=None):
     """{query_id: θ0} for the broadcast path: pick each query's seed
     range executor-side (w·idf presence-mass over segment metadata ⋈
     broadcast weighted query terms — see _densest_ranges; the driver
@@ -1248,17 +961,9 @@ def _theta_seeds_broadcast(spark, index_dir, term_pred, config, wqt,
     # no cross-group merge: the seed job emits (query_id, kth) rows
     # directly — one stage + collect, where the pack→merge→window route
     # spent two extra stages and a second shuffle re-deriving it
-    use_v2, n_ranges, num_shards = v2
-    if use_v2:
-        run_seed = _pcache_runner(index_dir, bid, bc, k, mode, k1, b,
-                                  avgdl, topk_fn, None, sp, n_ranges,
-                                  num_shards, only_groups=only_groups,
-                                  kth_only=True)
-    else:
-        run_seed = _broadcast_runner(index_dir, bid, bc, k, mode, k1, b,
-                                     avgdl, topk_fn, None, sp,
-                                     only_groups=only_groups,
-                                     kth_only=True)
+    run_seed = _broadcast_runner(index_dir, bid, bc, k, mode, k1, b,
+                                 avgdl, topk_fn, None,
+                                 only_groups=only_groups, kth_only=True)
     kth = (segs.groupBy("_g").applyInPandas(run_seed, SEED_KTH_SCHEMA)
            .collect())
     if not kth:

@@ -25,8 +25,6 @@ _FIELDS = (
     ("score_wall_s", "ranges"),
     ("chain_build_s", "ranges"),
     ("queries_scored", "ranges"),
-    ("cand_emitted", "ranges"),
-    ("cand_floored", "ranges"),
 )
 
 
@@ -55,8 +53,7 @@ def sample_worker_stats(spark, reset: bool = False,
 
     schema = ("pid long, blocks_decoded long, blocks_skipped long, "
               "score_tasks long, score_wall_s double, "
-              "chain_build_s double, queries_scored long, "
-              "cand_emitted long, cand_floored long")
+              "chain_build_s double, queries_scored long")
     # explicit repartition(n) is exempt from AQE coalescing, so all
     # n_tasks Arrow tasks really run
     rows = (spark.range(n_tasks).repartition(n_tasks)
