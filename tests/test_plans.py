@@ -245,3 +245,60 @@ def test_warm_search_jobs_per_call(spark, built):
         assert n_jobs <= bounds[name], (name, n_jobs, stages)
         assert not [s for s in stages if s.startswith("parquet at")], \
             (name, stages)
+
+
+@pytest.mark.parametrize("op", ["lsh_pairs", "ngram_jaccard",
+                                "emb_near_dupes", "lsh_topk"])
+def test_one_materialization_feeds_every_join_side(spark, op):
+    """The ops that self-join (or union hash tables over) one derived
+    table fill it once, at construction; the action then reads only
+    that materialization — the input lineage, counted row by row
+    through an accumulator, never re-runs. Once the result is garbage
+    collected the table is released, and a DataFrame derived from the
+    result still re-executes to the same rows."""
+    import gc
+    import numpy as np
+
+    def n_persisted():
+        gc.collect()
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    acc = spark.sparkContext.accumulator(0)
+    before = n_persisted()
+
+    @F.udf("long")
+    def seen(x):
+        acc.add(1)
+        return x
+
+    n = 40
+    if op in ("lsh_pairs", "ngram_jaccard"):
+        base = spark.createDataFrame(
+            [(i, f"alpha beta gamma delta epsilon tok{i % 9} zeta eta")
+             for i in range(n)], "doc_id long, text string")
+        src = base.select(seen("doc_id").alias("doc_id"), "text")
+        res = (D.lsh_candidate_pairs(src, num_perm=8, bands=4)
+               if op == "lsh_pairs"
+               else D.ngram_jaccard_pairs(src, threshold=0.3))
+    else:
+        rng = np.random.default_rng(5)
+        vecs = spark.createDataFrame(
+            [(i, [float(x) for x in rng.standard_normal(6)])
+             for i in range(n)], "vec_id long, embedding array<float>")
+        src = vecs.select(seen("vec_id").alias("vec_id"), "embedding")
+        if op == "emb_near_dupes":
+            res = S.embedding_near_dupes(src, threshold=0.0, n_tables=2,
+                                         dim=6)
+        else:
+            qv = vecs.filter(F.col("vec_id") < 4).select(
+                F.col("vec_id").alias("query_vec_id"), "embedding")
+            res = S.lsh_topk(src, qv, k=3, n_tables=2, dim=6)
+    assert acc.value == n  # filled once, at construction
+    assert n_persisted() == before + 1
+    derived = res.select("*")
+    want = sorted(tuple(r) for r in derived.collect())
+    assert want
+    assert acc.value == n  # every join side read the one materialization
+    del res
+    assert n_persisted() == before
+    assert sorted(tuple(r) for r in derived.collect()) == want

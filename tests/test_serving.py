@@ -1,7 +1,9 @@
 """Round-5 serving-path behavior: lazy executor-side dl loading, the
 serving-mode segment cache (repeat batches on one build run without a
 parquet scan or a shuffle), content-stable kernel cache keys, the
-byte-bounded per-task cache, and session-state hygiene of the build."""
+byte-bounded per-task cache, and session hygiene: no build or search
+writes session conf, and a search's materializations are released with
+its result."""
 
 import pytest
 
@@ -265,6 +267,19 @@ def test_env_reads_are_byte_budgets_only():
     assert not extra, f"env reads beyond the byte budgets: {extra}"
 
 
+def test_library_writes_no_session_conf():
+    """Session conf belongs to the caller: a library write of it races
+    every other thread on the same SparkSession. Per-call APIs (writer
+    options, toArrow, createDataFrame of a pyarrow.Table) replace it."""
+    import pathlib
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "word2doc_spark"
+    hits = [f"{path.relative_to(pkg)}:{i}"
+            for path in sorted(pkg.rglob("*.py"))
+            for i, line in enumerate(path.read_text().splitlines(), 1)
+            if ".conf.set(" in line or ".conf.unset(" in line]
+    assert not hits, f"session conf writes: {hits}"
+
+
 # ---------------------------------------------------------------------------
 # byte-bounded per-task cache
 # ---------------------------------------------------------------------------
@@ -378,21 +393,203 @@ def test_align_to_pack():
     assert out.tolist() == [4, -1, -1, -1]
 
 
-def test_stale_dataframe_survives_broadcast_drain(spark, built):
-    """A caller may lawfully execute a PREVIOUS search's lazy DataFrame
-    after a newer search call has drained the pending broadcasts — the
-    drain must unpersist (re-broadcast on demand), never destroy."""
-    from word2doc_spark.query.fast import search_fast
+def test_derived_dataframe_survives_result_release(spark, built,
+                                                   monkeypatch):
+    """A search result owns its query-pack broadcast and its seed-pass
+    persist: both are released when the result is garbage collected.
+    Release is unpersist, never destroy — a DataFrame derived from the
+    result must still re-execute to identical rows after it is gone."""
+    import gc
+    from word2doc_spark.query import ranges as R
+    from word2doc_spark.query.wand import search_wand
 
+    owned = []
+
+    def recording_release(owner, *resources):
+        owned.extend(resources)
+        return real_release(owner, *resources)
+
+    real_release = R.release_with
+    monkeypatch.setattr(R, "release_with", recording_release)
+    # no serving table: the seed pass persists its own matched segments
+    monkeypatch.setattr(R, "_SEG_CACHE_MAX_BYTES", -1)
     qdf = spark.createDataFrame(QUERIES, "query_id long, query string")
-    df1 = search_fast(spark, built, qdf, k=3, score_mode="drqa")
-    want = sorted((r["query_id"], r["rank"], r["doc_id"])
-                  for r in df1.collect())
+    res = search_wand(spark, built, qdf, k=3, score_mode="drqa",
+                      seed_theta=True)
+    derived = res.select("query_id", "rank", "doc_id")
+    want = sorted(tuple(r) for r in derived.collect())
     assert want
-    # a second search drains df1's broadcast...
-    search_fast(spark, built, qdf.limit(2), k=3,
-                score_mode="drqa").count()
-    # ...and df1 must still re-execute to identical rows
-    got = sorted((r["query_id"], r["rank"], r["doc_id"])
-                 for r in df1.collect())
-    assert got == want
+    segs = [r for r in owned if hasattr(r, "storageLevel")]
+    assert len(owned) == 2 and len(segs) == 1 and segs[0].is_cached
+    del res
+    gc.collect()
+    assert not segs[0].is_cached
+    assert sorted(tuple(r) for r in derived.collect()) == want
+
+
+def test_release_with_unpersists_when_owner_is_collected(spark):
+    import gc
+    from pyspark import StorageLevel
+    from word2doc_spark.lifetime import materialize, release_with
+
+    cached = materialize(spark.range(50).selectExpr("id * 3 AS x"))
+    owner = release_with(spark.range(3), cached)
+    assert cached.storageLevel != StorageLevel.NONE
+    del owner
+    gc.collect()
+    assert cached.storageLevel == StorageLevel.NONE
+    assert not cached.is_cached
+
+
+def test_serving_segs_concurrent_warmup_persists_once(spark, built,
+                                                      monkeypatch):
+    """Two threads making their second call on one build: only one may
+    persist the full segment table. A barrier inside the table read
+    holds every racer that got past the cache lookup; the lock lets
+    exactly one through, so the barrier times out instead."""
+    import threading
+    import pyspark.sql.functions as F
+    from word2doc_spark.index.build import _partition_slots
+    from word2doc_spark.index.manifest import Manifest
+    from word2doc_spark.query import ranges as R
+
+    for key in list(R._SEG_CACHE):
+        R._SEG_CACHE.pop(key).unpersist()
+    R._SEG_CACHE_SEEN.clear()
+    _, stats = Manifest(built).load()
+    bid, sp = stats["build_id"], 8
+    slot_arr = F.array(*[F.lit(x) for x in _partition_slots(sp)])
+    R._SEG_CACHE_SEEN[(bid, sp)] = 1  # the first call ran already
+    barrier = threading.Barrier(2, timeout=3)
+    reads = []
+    real_read = R.read_table
+
+    def read_table(*a, **kw):
+        reads.append(a)
+        try:
+            barrier.wait()
+        except threading.BrokenBarrierError:
+            pass
+        return real_read(*a, **kw)
+
+    monkeypatch.setattr(R, "read_table", read_table)
+    got = [None, None]
+
+    def call(i):
+        got[i] = R._serving_segs(spark, built, bid, sp, slot_arr,
+                                 stats["index_bytes"])
+
+    threads = [threading.Thread(target=call, args=(i,)) for i in (0, 1)]
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+        assert len(reads) == 1
+        assert len(R._SEG_CACHE) == 1
+        assert got[0] is got[1] is R._SEG_CACHE[(bid, sp)]
+    finally:
+        for df in {id(d): d for d in got + list(R._SEG_CACHE.values())
+                   if d is not None}.values():
+            df.unpersist()
+        R._SEG_CACHE.clear()
+        R._SEG_CACHE_SEEN.clear()
+
+
+# ---------------------------------------------------------------------------
+# the caller's session conf is never written
+# ---------------------------------------------------------------------------
+
+def _boom(text):
+    raise ValueError("plugin failure")
+
+
+def test_build_and_search_write_no_session_conf(spark, built, tmp_path,
+                                                monkeypatch):
+    """Every RuntimeConfig.set/unset during a build, a failing build and
+    one search on each path is recorded; there must be none."""
+    from pyspark.sql.conf import RuntimeConfig
+    from word2doc_spark.query.exact import search_exact
+    from word2doc_spark.query.fast import search_fast
+    from word2doc_spark.query.wand import search_wand
+
+    writes = []
+    for name in ("set", "unset"):
+        def record(self, *a, _name=name, _real=getattr(RuntimeConfig, name),
+                   **kw):
+            writes.append((_name, a))
+            return _real(self, *a, **kw)
+        monkeypatch.setattr(RuntimeConfig, name, record)
+
+    build_index(spark, synthetic_pages(spark, 40, num_partitions=2),
+                str(tmp_path / "idx"), CFG, input_token="no-conf")
+    with pytest.raises(Exception):
+        build_index(spark, synthetic_pages(spark, 30, num_partitions=2),
+                    str(tmp_path / "failidx"), CFG,
+                    input_token="no-conf-fail", preprocess=_boom)
+    qdf = spark.createDataFrame(QUERIES, "query_id long, query string")
+    for search in (search_fast, search_wand, search_exact):
+        assert search(spark, built, qdf, k=3).collect()
+    assert writes == []
+
+
+def test_concurrent_searches_and_build_share_one_session(spark, built,
+                                                         tmp_path):
+    """Two threads search one session (fast, WAND, exact) while the
+    first also builds a second index: every result equals the
+    sequential run, and the session's conf is unchanged afterwards."""
+    import threading
+    from word2doc_spark.query.exact import search_exact
+    from word2doc_spark.query.fast import search_fast
+    from word2doc_spark.query.wand import search_wand
+
+    searches = (search_fast, search_wand, search_exact)
+
+    def rows(search):
+        qdf = spark.createDataFrame(QUERIES, "query_id long, query string")
+        return sorted((r["query_id"], r["rank"], r["doc_id"],
+                       round(r["score"], 9))
+                      for r in search(spark, built, qdf, k=5,
+                                      score_mode="bm25").collect())
+
+    want = {s.__name__: rows(s) for s in searches}
+    before = dict(spark.conf.getAll)
+    got, errors = [], []
+    other = str(tmp_path / "second")
+    building = threading.Event()
+    building.set()
+
+    def worker(builds: bool):
+        try:
+            if builds:
+                build_index(spark, synthetic_pages(spark, 60,
+                                                   num_partitions=2),
+                            other, CFG, input_token="concurrent")
+                building.clear()
+            rounds = 0
+            while rounds < 2 or (not builds and building.is_set()
+                                 and rounds < 20):
+                for s in searches:
+                    got.append((s.__name__, rows(s)))
+                rounds += 1
+        except BaseException as e:  # noqa: BLE001 — asserted below
+            errors.append(e)
+            building.clear()
+
+    threads = [threading.Thread(target=worker, args=(b,))
+               for b in (True, False)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(got) >= 12
+    for name, r in got:
+        assert r == want[name], name
+    assert dict(spark.conf.getAll) == before
+    assert search_fast(spark, other,
+                       spark.createDataFrame(QUERIES,
+                                             "query_id long, query string"),
+                       k=3).collect()

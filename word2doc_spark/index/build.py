@@ -744,12 +744,6 @@ def build_index(
         # so id assignment walks bucket runs even if buckets ever share a
         # task (e.g. collapsed duplicate boundaries).
         slots = F.array(*[F.lit(s) for s in _partition_slots(sp)])
-        # uncompressed cache: the extracted corpus is read back exactly
-        # twice (ids pass, analyze pass) and columnar compression of the
-        # text column costs more one-off CPU than the two reads save
-        cache_comp_key = "spark.sql.inMemoryColumnarStorage.compressed"
-        cache_comp_old = spark.conf.get(cache_comp_key, "true")
-        spark.conf.set(cache_comp_key, "false")
         ranged = None
         try:
             ranged = (ext.withColumn("_pkey", _url_bucket_col(bounds))
@@ -897,12 +891,8 @@ def build_index(
             )
             t_sub = _lap("ids+analyze", t_sub)
         finally:
-            # restore session state even when extract/analyze
-            # throws — a leaked conf would leave cache
-            # compression disabled for the caller's whole session
             if ranged is not None:
                 ranged.unpersist()
-            spark.conf.set(cache_comp_key, cache_comp_old)
         manifest.write_marker("stage", fp, wall_s=time.time() - t0,
                               n_docs=n_docs, range_width=range_width,
                               sub_walls=sub)
@@ -928,12 +918,9 @@ def build_index(
     metrics["resumed_stages"].extend(
         f"shard_{s}" for s in range(config.num_shards) if s in done)
 
-    overwrite_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static")
     total_dl_holder = [0]
     dl_thread = None
     dl_errs: list = []
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
         if manifest.has_marker("dl", fp):
             metrics["resumed_stages"].append("dl")
@@ -971,8 +958,9 @@ def build_index(
             (encoded.withColumn(
                 "shard_id", F.pmod(F.col("term_id"),
                                    F.lit(config.num_shards)))
-                .write.mode("overwrite").partitionBy("shard_id")
-                .parquet(shards_path))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("shard_id").parquet(shards_path))
             wall = time.time() - t0
             # derive the per-term stats table from the segment METADATA
             # (column-pruned scan; payloads unread), carrying per-term
@@ -1011,8 +999,9 @@ def build_index(
                          .alias(f"b{s}"),
                     ]
                 term_stats = term_stats.observe(obs, *aggs)
-            (term_stats.write.mode("overwrite").partitionBy("shard_id")
-             .parquet(terms_path))
+            (term_stats.write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .partitionBy("shard_id").parquet(terms_path))
             if obs is not None:
                 m = obs.get
                 got = {s: (int(m[f"t{s}"] or 0), int(m[f"s{s}"] or 0),
@@ -1045,8 +1034,6 @@ def build_index(
         # marker into the index directory
         if dl_thread is not None:
             dl_thread.join()
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                       overwrite_mode)
     if dl_errs:
         raise dl_errs[0]
 

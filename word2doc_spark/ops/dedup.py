@@ -26,6 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
+from word2doc_spark.lifetime import materialize, release_with
 from word2doc_spark.ops.textstats import spread_input, sql_tokens
 
 # md5-prefix hash: deterministic and identical in DuckDB
@@ -164,18 +165,18 @@ def lsh_candidate_pairs(docs: DataFrame, num_perm: int = 16,
     # materialize the (tiny, bands-per-doc-row) band table ONCE before
     # the self-join: Catalyst plans each join side as an independent
     # subtree, so without this both sides re-run the whole tokenize +
-    # shingle + K×md5 + groupBy lineage (eager so the join stages can
-    # never race the first materialization; executor-local storage,
-    # cleaned by the ContextCleaner when the DataFrame is collected)
-    banded = banded.localCheckpoint(eager=True)
+    # shingle + K×md5 + groupBy lineage (filled eagerly so the join
+    # stages can never race the first materialization)
+    banded = materialize(banded)
     a = banded.alias("a")
     b = banded.alias("b")
-    return (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.band_sig") == F.col("b.band_sig"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-             .select(F.col("a.doc_id").alias("doc_a"),
-                     F.col("b.doc_id").alias("doc_b"))
-             .distinct())
+    return release_with(
+        a.join(b, (F.col("a.band") == F.col("b.band"))
+               & (F.col("a.band_sig") == F.col("b.band_sig"))
+               & (F.col("a.doc_id") < F.col("b.doc_id")))
+         .select(F.col("a.doc_id").alias("doc_a"),
+                 F.col("b.doc_id").alias("doc_b"))
+         .distinct(), banded)
 
 
 def ngram_jaccard_pairs(docs: DataFrame, shingle_n: int = 3,
@@ -190,7 +191,7 @@ def ngram_jaccard_pairs(docs: DataFrame, shingle_n: int = 3,
     # subtrees (sizes, the shingle-df table, and both self-join sides of
     # the inverted index), each of which would otherwise re-run the
     # tokenize + shingle lineage
-    sh = shingles(docs, shingle_n).localCheckpoint(eager=True)
+    sh = materialize(shingles(docs, shingle_n))
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     rare = (sh.join(sh.groupBy("shingle")
                       .agg(F.count("*").alias("df_sh")),
@@ -212,10 +213,10 @@ def ngram_jaccard_pairs(docs: DataFrame, shingle_n: int = 3,
            / (F.col("n_a") + F.col("n_b") - F.col("inter")))
     # threshold the UNROUNDED ratio (round only for display) so the filter
     # boundary matches an oracle that compares the exact quotient
-    return (inter.join(sa, "doc_a").join(sb, "doc_b")
-            .filter(jac >= threshold)
-            .withColumn("jaccard", F.round(jac, 6))
-            .select("doc_a", "doc_b", "jaccard"))
+    return release_with(inter.join(sa, "doc_a").join(sb, "doc_b")
+                        .filter(jac >= threshold)
+                        .withColumn("jaccard", F.round(jac, 6))
+                        .select("doc_a", "doc_b", "jaccard"), sh)
 
 
 # ---------------------------------------------------------------------------

@@ -33,6 +33,7 @@ def cosine_col(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+from word2doc_spark.lifetime import materialize, release_with
 from word2doc_spark.ops.textstats import spread_input as _spread_input
 
 
@@ -369,8 +370,10 @@ def embedding_near_dupes(vectors: DataFrame, threshold: float = 0.9,
     if dim is None:
         return _empty_pairs(vectors.sparkSession)
     v = _spread_input(vectors.select("vec_id", "embedding"))
+    owned = ()
     if n_tables > 1:
-        v = v.localCheckpoint(eager=True)
+        v = materialize(v)
+        owned = (v,)
     cands = None
     for t in range(n_tables):
         planes = random_hyperplanes(dim, n_planes, seed + 101 * t)
@@ -395,8 +398,9 @@ def embedding_near_dupes(vectors: DataFrame, threshold: float = 0.9,
     cos = (_dot(F.col("ea").cast("array<double>"),
                 F.col("eb").cast("array<double>"))
            / (F.col("_na") * F.col("_nb")))
-    return (cand.filter(cos >= threshold)
-                .select("vec_a", "vec_b", F.round(cos, 6).alias("cosine")))
+    return release_with(
+        cand.filter(cos >= threshold)
+            .select("vec_a", "vec_b", F.round(cos, 6).alias("cosine")), *owned)
 
 
 def lsh_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
@@ -419,8 +423,10 @@ def lsh_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
     # vector set, so n_tables lineages would otherwise re-run the scan
     v = _spread_input(
         vectors.select(F.col("vec_id").alias("neighbor_id"), "embedding"))
+    owned = ()
     if n_tables > 1:
-        v = v.localCheckpoint(eager=True)
+        v = materialize(v)
+        owned = (v,)
     cands = None
     for t in range(n_tables):
         planes = random_hyperplanes(dim, n_planes, seed + 101 * t)
@@ -449,6 +455,8 @@ def lsh_topk(vectors: DataFrame, queries: DataFrame, k: int = 5,
          .alias("cosine"))
     w = Window.partitionBy("query_vec_id").orderBy(
         F.desc("cosine"), F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-                  .filter(F.col("rank") <= k)
-                  .select("query_vec_id", "rank", "neighbor_id", "cosine"))
+    return release_with(
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+              .filter(F.col("rank") <= k)
+              .select("query_vec_id", "rank", "neighbor_id", "cosine"),
+        *owned)

@@ -37,6 +37,7 @@ import os
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
@@ -93,20 +94,21 @@ def analyze_queries(queries: DataFrame, config: IndexConfig) -> DataFrame:
         run, schema=QUERY_TERMS_SCHEMA)
 
 
-def analyze_query_rows(rows, config: IndexConfig,
+def analyze_query_rows(query_ids, texts: list, config: IndexConfig,
                        strict: bool = False) -> pd.DataFrame:
-    """Analysis of already-collected (query_id, query) rows — lets the
-    caller fold the batch-size probe and the analysis collect into ONE
-    job (prepare_weighted_terms collects with a bounded LIMIT first)."""
+    """Analysis of an already-collected batch, as columns: ``query_ids``
+    (int array) and ``texts`` (list of str or None) — lets the caller
+    fold the batch-size probe and the analysis collect into ONE job
+    (prepare_weighted_terms collects with a bounded LIMIT first)."""
     from word2doc_spark.functions.tokenize import Analyzer
     analyzer = Analyzer(ngram=config.ngram, hash_size=config.hash_size,
                         tokenizer=config.analyzer)
-    terms, tfs = analyzer.analyze_batch([r["query"] or "" for r in rows])
+    terms, tfs = analyzer.analyze_batch([q or "" for q in texts])
     if strict:
-        for r, t in zip(rows, terms):
+        for q, t in zip(texts, terms):
             if t.size == 0:
-                raise RuntimeError(f"No valid word in: {r['query']}")
-    qids = np.array([r["query_id"] for r in rows], dtype=np.int64)
+                raise RuntimeError(f"No valid word in: {q}")
+    qids = np.asarray(query_ids, dtype=np.int64)
     lens = np.fromiter((t.size for t in terms), dtype=np.int64,
                        count=len(terms))
     if lens.sum() == 0:
@@ -233,83 +235,39 @@ def weighted_query_terms_distributed(spark: SparkSession, index_dir: str,
               .select(*cols))
 
 
-import contextlib
+def resolve_analysis_mode(queries: DataFrame, analysis: str):
+    """'driver' | 'distributed' | 'auto' → (concrete mode, head), where
+    head is the collected batch as (query_ids, texts) columns, or None.
 
-
-@contextlib.contextmanager
-def _arrow_conversions(spark: SparkSession):
-    """Arrow-backed toPandas/createDataFrame for the scope (columnar
-    batches instead of per-row pickling — measured ~1.6× on a 120k-row
-    weighted-terms table); restores the caller's session conf."""
-    key = "spark.sql.execution.arrow.pyspark.enabled"
-    old = spark.conf.get(key, "false")
-    spark.conf.set(key, "true")
-    try:
-        yield
-    finally:
-        # restore only if the flag still holds OUR value: two scopes
-        # interleaving on one session must not clobber each other's
-        # restore (outermost-wins would re-disable a scope still active)
-        if spark.conf.get(key, "false") == "true":
-            spark.conf.set(key, old)
-
-
-def resolve_analysis_mode(queries: DataFrame, analysis: str,
-                          with_rows: bool = False):
-    """'driver' | 'distributed' | 'auto' → concrete mode.
-
-    with_rows=True returns (mode, rows_or_None). The auto probe first
-    collects a BOUNDED limit(_DRIVER_ANALYZE_MAX+1) head, forced into a
-    single all-partition job (spark.sql.limit.initialNumPartitions —
-    the default staged take runs 1, 4, 16, … partitions = 3-4 jobs): a
-    batch small enough for SERIAL driver analysis is then fully in hand
-    with one tiny job and no second collect. A bigger batch escalates
-    to a bounded COUNT with no row materialization (the old probe
-    shipped up to THRESHOLD rows to the driver only to measure the
-    batch's size — ~1.2 s of serial wall per 40k-query batch, pure
-    per-batch fixed cost) to pick driver-resident-wqt vs fully
-    distributed analysis."""
-    rows = None
+    The auto probe first collects a BOUNDED limit(_DRIVER_ANALYZE_MAX+1)
+    head as one Arrow table — toArrow runs the limit as a single
+    all-partition job (a Row collect runs the staged take: 1, 4, 16, …
+    partitions = 2-4 jobs): a batch small enough for SERIAL driver
+    analysis is then fully in hand with one tiny job and no second
+    collect. A bigger batch escalates to a bounded COUNT with no row
+    materialization (the old probe shipped up to THRESHOLD rows to the
+    driver only to measure the batch's size — ~1.2 s of serial wall per
+    40k-query batch, pure per-batch fixed cost) to pick
+    driver-resident-wqt vs fully distributed analysis."""
     if analysis in ("driver", "distributed"):
-        mode = analysis
-    elif analysis != "auto":
+        return analysis, None
+    if analysis != "auto":
         raise ValueError(analysis)
-    elif getattr(queries, "_w2d_probe", None) is not None:
-        # same queries DataFrame object probed before (a serving loop
-        # re-issuing one batch across paths/modes): the probe collect is
-        # a pure function of the immutable DataFrame — reuse it instead
-        # of re-running a 1-job collect per search call
-        mode, rows = queries._w2d_probe
-    elif queries.isLocal():
+    if queries.isLocal():
         # a LocalRelation batch is driver-resident already — no job
         # needed to know it is small (NOTE: list-built createDataFrame
         # goes through parallelize and is NOT local; only pandas/Arrow
         # input produces a LocalRelation)
-        mode = "driver"
-    else:
-        spark = queries.sparkSession
-        key = "spark.sql.limit.initialNumPartitions"
-        old = spark.conf.get(key, "1")
-        spark.conf.set(key, "1000000")
-        try:
-            rows = (queries.select("query_id", "query")
-                    .limit(_DRIVER_ANALYZE_MAX + 1).collect())
-            if len(rows) <= _DRIVER_ANALYZE_MAX:
-                mode = "driver"
-            else:
-                n = (queries.select("query_id")
-                     .limit(DISTRIBUTED_ANALYSIS_THRESHOLD + 1).count())
-                mode = ("distributed"
-                        if n > DISTRIBUTED_ANALYSIS_THRESHOLD
-                        else "driver")
-                rows = None
-        finally:
-            spark.conf.set(key, old)
-        try:
-            queries._w2d_probe = (mode, rows)
-        except Exception:
-            pass
-    return (mode, rows) if with_rows else mode
+        return "driver", None
+    tbl = (queries.select("query_id", "query")
+           .limit(_DRIVER_ANALYZE_MAX + 1).toArrow())
+    if tbl.num_rows <= _DRIVER_ANALYZE_MAX:
+        return "driver", (tbl.column("query_id").to_numpy(),
+                          tbl.column("query").to_pylist())
+    n = (queries.select("query_id")
+         .limit(DISTRIBUTED_ANALYSIS_THRESHOLD + 1).count())
+    return ("distributed" if n > DISTRIBUTED_ANALYSIS_THRESHOLD
+            else "driver"), None
 
 
 def _strict_check_distributed(queries: DataFrame, qt: DataFrame) -> None:
@@ -337,7 +295,7 @@ def prepare_weighted_terms(spark: SparkSession, index_dir: str,
     count when driver-known. Returns (None, None, None, 0) when no query
     term matches the index (driver mode only — in distributed mode
     emptiness propagates lazily)."""
-    mode, head = resolve_analysis_mode(queries, analysis, with_rows=True)
+    mode, head = resolve_analysis_mode(queries, analysis)
     if mode == "driver":
         # a small auto-probed batch already delivered its rows (one
         # bounded job); a big auto-probed batch was only COUNTED and
@@ -349,8 +307,10 @@ def prepare_weighted_terms(spark: SparkSession, index_dir: str,
         probed_big = (head is None and analysis == "auto"
                       and not queries.isLocal())
         if head is None and not probed_big:
-            head = queries.select("query_id", "query").collect()
-        if probed_big or len(head) > _DRIVER_ANALYZE_MAX:
+            # a Row collect: on a LocalRelation it runs no job at all
+            rows = queries.select("query_id", "query").collect()
+            head = ([r[0] for r in rows], [r[1] for r in rows])
+        if probed_big or len(head[1]) > _DRIVER_ANALYZE_MAX:
             # big-but-driver-sized batch: tokenization+weighting run
             # EXECUTOR-side (they scale with cores; serial driver
             # analysis of a 20k-query batch measured 2.6 s flat at any
@@ -362,15 +322,15 @@ def prepare_weighted_terms(spark: SparkSession, index_dir: str,
             if strict:
                 qt = qt.persist(StorageLevel.MEMORY_AND_DISK)
                 _strict_check_distributed(queries, qt)
-            with _arrow_conversions(spark):
-                wqt = weighted_query_terms_distributed(
-                    spark, index_dir, qt, n_docs, with_df=True).toPandas()
+            wqt = weighted_query_terms_distributed(
+                spark, index_dir, qt, n_docs,
+                with_df=True).toArrow().to_pandas()
             if strict:
                 qt.unpersist()
             if wqt.empty:
                 return None, None, None, 0
         else:
-            qt = analyze_query_rows(head, config, strict=strict)
+            qt = analyze_query_rows(*head, config, strict=strict)
             if qt.empty:
                 return None, None, None, 0
             wqt = weighted_query_terms(spark, index_dir, qt, n_docs,
@@ -382,10 +342,10 @@ def prepare_weighted_terms(spark: SparkSession, index_dir: str,
         # for nothing (ranges passes build_qdf=False)
         qdf = None
         if build_qdf:
-            with _arrow_conversions(spark):
-                qdf = spark.createDataFrame(
-                    wqt[["query_id", "term_id", "w", "idf"]],
-                    "query_id long, term_id long, w double, idf double")
+            qdf = spark.createDataFrame(
+                pa.Table.from_pandas(wqt[["query_id", "term_id", "w", "idf"]],
+                                     preserve_index=False),
+                "query_id long, term_id long, w double, idf double")
         return (qdf, sorted({int(t) for t in wqt["term_id"]}), wqt,
                 int(wqt["query_id"].nunique()))
     from pyspark import StorageLevel

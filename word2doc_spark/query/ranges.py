@@ -61,6 +61,7 @@ assert identity with search_exact on every fixture.
 from __future__ import annotations
 
 import os
+import threading
 import time
 
 import numpy as np
@@ -70,6 +71,7 @@ import pyspark.sql.functions as F
 
 from word2doc_spark.index.manifest import Manifest, read_table
 from word2doc_spark.index.postings import decode_postings
+from word2doc_spark.lifetime import release_with
 from word2doc_spark.query.exact import (
     _empty_result, _matched_segments, attach_urls, finish_topk,
     prepare_weighted_terms, topk_order,
@@ -245,17 +247,14 @@ class SparseDL:
 
 
 def _score_range(pdf: pd.DataFrame, dl, k: int, mode: str, k1: float,
-                 b: float, avgdl: float, topk_fn,
-                 seeds=None) -> pd.DataFrame:
+                 b: float, avgdl: float, topk_fn) -> pd.DataFrame:
     """Score one doc range: group matched segments per query, chain each
     term's segments in doc order, run the DAAT kernel, emit candidates.
     Grouping is one lexsort + numpy boundary walks (no per-group pandas
     frames — the hot loop runs once per (query, term), not per row).
-    ``seeds``: optional {query_id: θ0} lower bounds (see search_wand
-    seeding) passed through to the kernel. A ``theta0`` COLUMN on ``pdf``
-    (the distributed-batch seed join; the query's k-th seed-pass score,
-    NaN when unseeded) takes precedence — the kernel seed is nudged
-    strictly below it, preserving exactness."""
+    An optional ``theta0`` COLUMN on ``pdf`` (the distributed-batch seed
+    join; the query's k-th seed-pass score, NaN when unseeded) seeds the
+    kernel's threshold, nudged strictly below it, preserving exactness."""
     from word2doc_spark.query.kcache import TaskCache
     qids = pdf["query_id"].to_numpy()
     tids = pdf["term_id"].to_numpy()
@@ -291,7 +290,7 @@ def _score_range(pdf: pd.DataFrame, dl, k: int, mode: str, k1: float,
         if thetas is not None and np.isfinite(thetas[qs]):
             theta0 = float(np.nextafter(thetas[qs], -np.inf))
         else:
-            theta0 = seeds.get(qid, -1.0) if seeds else -1.0
+            theta0 = -1.0
         for doc, score in topk_fn(term_rows, k, mode, k1, b, avgdl, dl,
                                   theta0=theta0, cache=cache):
             out_q.append(qid)
@@ -342,7 +341,6 @@ def search_doc_partitioned(
     SEED_MAX_QUERIES skip seeding — a ≤SEED_MAX_QUERIES seed table
     broadcasts in single-digit MB; beyond it the seed join would carry
     more weight than the pruning it buys."""
-    _drain_unpersist()
     manifest = Manifest(index_dir)
     config, stats = manifest.load()
     mode = score_mode or config.score_mode
@@ -401,10 +399,10 @@ def search_doc_partitioned(
         # terms shipped each hot segment's payload ~500× through the
         # shuffle + Arrow — measured 4× wall on the 500k scaling bench.)
         # The candidates merge and get their urls in one task.
-        cand = _score_ranges_broadcast(
+        cand, owned = _score_ranges_broadcast(
             spark, index_dir, term_pred, config, wqt, k, mode, k1, b,
             avgdl, topk_fn, do_seed, bid, index_bytes)
-        return finish_topk(index_dir, cand, k)
+        return release_with(finish_topk(index_dir, cand, k), *owned)
     else:
         # distributed batch: query table is executor-resident; fall back
         # to the join shape, sub-bucketed by query for task balance
@@ -435,38 +433,6 @@ def search_doc_partitioned(
                     .filter(F.col("rank") <= k))
         return attach_urls(spark, index_dir, topk)
 
-
-# DataFrames persisted for a seed+main job pair; unpersisted at the START
-# of the next search call (the caller's action on the returned DataFrame
-# runs after this function exits, so an in-call unpersist would drop the
-# cache before the main job reads it; MEMORY_AND_DISK evicts cleanly
-# under pressure in the meantime)
-_PENDING_UNPERSIST: list = []
-
-
-def _drain_unpersist() -> None:
-    while _PENDING_UNPERSIST:
-        df = _PENDING_UNPERSIST.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    while _PENDING_BC_DESTROY:
-        bc = _PENDING_BC_DESTROY.pop()
-        try:
-            # unpersist, NOT destroy: a caller may lawfully run a PREVIOUS
-            # search's lazy DataFrame after a newer search call; destroy
-            # would fail its tasks, unpersist just re-broadcasts on demand
-            bc.unpersist(blocking=False)
-        except Exception:
-            pass
-
-
-# query-pack broadcasts are released (executor copies dropped) at the
-# START of the next search call (same lazy-evaluation reason as
-# _PENDING_UNPERSIST: the caller's job on the returned DataFrame runs
-# after this function exits)
-_PENDING_BC_DESTROY: list = []
 
 # worker-side unpacked query packs, keyed by the pack's uuid token (never
 # object identity — id() can be reused after GC). A batch's pack is
@@ -725,38 +691,42 @@ _SEG_CACHE_SEEN: dict = {}
 _SEG_CACHE_MAX_BYTES = int(os.environ.get("W2D_SEG_CACHE_MAX_BYTES",
                                           8 << 30))
 _SEG_CACHE_MAX_ENTRIES = 2
+_SEG_CACHE_LOCK = threading.Lock()
 
 
 def _serving_segs(spark, index_dir, bid, sp, slot_arr, index_bytes):
     """Persisted slot-keyed FULL segment table for (build, sp), or None
     when the index exceeds _SEG_CACHE_MAX_BYTES or the table is not yet
     warranted (first call on a build stays on the per-batch pruned scan
-    — one-shot batches should not pay a whole-index materialization)."""
+    — one-shot batches should not pay a whole-index materialization).
+    Lookup, persist and insert hold one lock: two threads warming one
+    build must not both persist the table and orphan one copy."""
     if (index_bytes or 0) > _SEG_CACHE_MAX_BYTES:
         return None
     key = (bid, sp)
-    df = _SEG_CACHE.get(key)
-    if df is not None:
-        return df
-    _SEG_CACHE_SEEN[key] = _SEG_CACHE_SEEN.get(key, 0) + 1
-    if _SEG_CACHE_SEEN[key] < 2:
-        return None
-    from pyspark import StorageLevel
-    segs = (read_table(spark, index_dir, "shards")
-            .select("term_id", "range_id", "doc_lo", "n_postings",
-                    "payload")
-            .withColumn("_g", F.element_at(
-                slot_arr, F.pmod(F.col("range_id"), F.lit(sp)) + 1))
-            .repartition(sp, "_g")
-            .persist(StorageLevel.MEMORY_AND_DISK))
-    while len(_SEG_CACHE) >= _SEG_CACHE_MAX_ENTRIES:
-        old = _SEG_CACHE.pop(next(iter(_SEG_CACHE)))
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-    _SEG_CACHE[key] = segs
-    return segs
+    with _SEG_CACHE_LOCK:
+        df = _SEG_CACHE.get(key)
+        if df is not None:
+            return df
+        _SEG_CACHE_SEEN[key] = _SEG_CACHE_SEEN.get(key, 0) + 1
+        if _SEG_CACHE_SEEN[key] < 2:
+            return None
+        from pyspark import StorageLevel
+        segs = (read_table(spark, index_dir, "shards")
+                .select("term_id", "range_id", "doc_lo", "n_postings",
+                        "payload")
+                .withColumn("_g", F.element_at(
+                    slot_arr, F.pmod(F.col("range_id"), F.lit(sp)) + 1))
+                .repartition(sp, "_g")
+                .persist(StorageLevel.MEMORY_AND_DISK))
+        while len(_SEG_CACHE) >= _SEG_CACHE_MAX_ENTRIES:
+            old = _SEG_CACHE.pop(next(iter(_SEG_CACHE)))
+            try:
+                old.unpersist()
+            except Exception:
+                pass
+        _SEG_CACHE[key] = segs
+        return segs
 
 
 def _prune_cached_segs(segs: DataFrame, term_ids: list) -> DataFrame:
@@ -814,13 +784,15 @@ def _score_ranges_broadcast(spark, index_dir, term_pred, config, wqt,
     that per-batch exchange disappears: the scoring stage reads the
     persisted slot-keyed segment table (_serving_segs). Returns per-group
     candidate rows (CAND_SCHEMA), or blob-merged top-k rows (TOPK_SCHEMA)
-    above _PACK_MIN_CANDIDATES — either is input to exact.finish_topk."""
+    above _PACK_MIN_CANDIDATES — either is input to exact.finish_topk —
+    plus the call's materializations, which the search result owns
+    (lifetime.release_with): the caller's action runs after this returns."""
     groups = _wqt_groups(wqt)
     # one broadcast of the (token, pack) tuple serves the seed pass and
-    # the main pass; destroyed at the start of the next search call
+    # the main pass
     import uuid
     bc = spark.sparkContext.broadcast((uuid.uuid4().hex, groups))
-    _PENDING_BC_DESTROY.append(bc)
+    owned = [bc]
     # group key: ranges are mapped ROUND-ROBIN onto ints that Spark
     # hash-partitions to distinct shuffle partitions (build._partition_slots
     # — grouping 128 range keys straight into 128 partitions loses ~2× to
@@ -855,12 +827,11 @@ def _score_ranges_broadcast(spark, index_dir, term_pred, config, wqt,
         if cached is None:
             # the seed pre-pass and the main pass both consume the
             # matched segments — persist so the segment scan + shuffle
-            # runs once (unpersisted at the next search call, see
-            # _PENDING_UNPERSIST; the serving cache needs no extra
-            # persist — it already is one)
+            # runs once (the serving cache needs no extra persist — it
+            # already is one)
             from pyspark import StorageLevel
             segs = segs.persist(StorageLevel.MEMORY_AND_DISK)
-            _PENDING_UNPERSIST.append(segs)
+            owned.append(segs)
         seeds = _theta_seeds_broadcast(spark, index_dir, term_pred,
                                        config, wqt, groups, bc, segs,
                                        slots, sp, k, mode,
@@ -879,8 +850,8 @@ def _score_ranges_broadcast(spark, index_dir, term_pred, config, wqt,
                             topk_fn, qb, seeds=seeds)
     cand = segs.groupBy("_g").applyInPandas(run, out_schema)
     if pack:
-        return _merge_topk_blobs(cand, k, sp, slot_arr)
-    return cand
+        cand = _merge_topk_blobs(cand, k, sp, slot_arr)
+    return cand, owned
 
 
 def _densest_ranges(spark, index_dir, term_pred, config,
@@ -941,9 +912,11 @@ def _theta_seeds_broadcast(spark, index_dir, term_pred, config, wqt,
     superset of the range — the k-th over any doc subset is still ≤ the
     global k-th, so the seed stays valid), take the k-th scores, seed
     just below them. bm25 dl loads lazily in-task."""
+    import pyarrow as pa
     qterms = F.broadcast(spark.createDataFrame(
-        wqt[["query_id", "term_id", "w", "idf"]].drop_duplicates(
-            ["query_id", "term_id"]),
+        pa.Table.from_pandas(
+            wqt[["query_id", "term_id", "w", "idf"]].drop_duplicates(
+                ["query_id", "term_id"]), preserve_index=False),
         "query_id long, term_id long, w double, idf double"))
     best = _densest_ranges(spark, index_dir, term_pred, config,
                            qterms, segs_meta=segs_meta).collect()

@@ -117,20 +117,12 @@ def synthetic_pages(spark: SparkSession, n_docs: int, seed: int = 42,
     # every job over the corpus then prunes columns JVM-side (a bounds
     # sample ships urls, not the 25%-of-rows html payloads) and skips
     # the per-job python unpickle of the full row set. Identical rows
-    # and schema (collect-compared); plain createDataFrame fallback if
-    # the pandas/Arrow conversion is unavailable.
-    try:
-        import pandas as pd
-        pdf = pd.DataFrame(rows, columns=[f.name for f in PAGES_SCHEMA])
-        key = "spark.sql.execution.arrow.pyspark.enabled"
-        old = spark.conf.get(key, "false")
-        spark.conf.set(key, "true")
-        try:
-            df = spark.createDataFrame(pdf, PAGES_SCHEMA)
-        finally:
-            spark.conf.set(key, old)
-    except Exception:
-        df = spark.createDataFrame(rows, PAGES_SCHEMA)
+    # and schema (collect-compared).
+    import pyarrow as pa
+    df = spark.createDataFrame(
+        pa.Table.from_pydict({f.name: [r[i] for r in rows]
+                              for i, f in enumerate(PAGES_SCHEMA)}),
+        PAGES_SCHEMA)
     if num_partitions:
         df = df.repartition(num_partitions, "url")
     return df
