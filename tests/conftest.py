@@ -25,3 +25,18 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture
+def scoring_gate(monkeypatch):
+    """``scoring_gate(on)`` forces driver-analyzed fast and WAND batches
+    onto the driver shape (True) or the Spark shape (False) whatever
+    their size, by patching the kernels' ``driver_max_postings`` rule."""
+    from word2doc_spark.query.fast import fast_topk
+    from word2doc_spark.query.wand import wand_topk
+
+    def force(on: bool):
+        for kernel in (fast_topk, wand_topk):
+            monkeypatch.setattr(kernel, "driver_max_postings",
+                                float("inf") if on else -1)
+    return force

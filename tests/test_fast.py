@@ -45,7 +45,7 @@ def test_fast_boundary_ties():
     assert len(top) == 1 and top[0][0] == 5
 
 
-def test_fast_spark_differential(spark, tmp_path):
+def test_fast_spark_differential(spark, tmp_path, scoring_gate):
     from word2doc_spark.config import IndexConfig
     from word2doc_spark.index.build import build_index
     from word2doc_spark.query.exact import search_exact
@@ -60,16 +60,19 @@ def test_fast_spark_differential(spark, tmp_path):
         [(1, "spark shuffle partition"), (2, "café naïve"),
          (3, "posting wand block heap"), (4, "webscale crawl")],
         "query_id long, query string")
+    key = lambda r: (r["query_id"], r["rank"])
     for mode in ("drqa", "bm25"):
         a = search_exact(spark, idx, qdf, k=10, score_mode=mode).collect()
-        b = search_fast(spark, idx, qdf, k=10, score_mode=mode).collect()
-        key = lambda r: (r["query_id"], r["rank"])
         a.sort(key=key)
-        b.sort(key=key)
-        assert [(r["query_id"], r["rank"], r["doc_id"]) for r in a] == \
-               [(r["query_id"], r["rank"], r["doc_id"]) for r in b]
-        for x, y in zip(a, b):
-            assert math.isclose(x["score"], y["score"], rel_tol=1e-9)
+        for on in (True, False):  # driver shape, then Spark shape
+            scoring_gate(on)
+            b = search_fast(spark, idx, qdf, k=10,
+                            score_mode=mode).collect()
+            b.sort(key=key)
+            assert [(r["query_id"], r["rank"], r["doc_id"]) for r in a] \
+                == [(r["query_id"], r["rank"], r["doc_id"]) for r in b], on
+            for x, y in zip(a, b):
+                assert math.isclose(x["score"], y["score"], rel_tol=1e-9)
 
 
 def test_pack_candidates_overflow_guard():

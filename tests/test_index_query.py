@@ -13,6 +13,8 @@ from word2doc_spark.functions.extract import extract_text
 from word2doc_spark.index.build import build_index
 from word2doc_spark.oracle import build_oracle_index, oracle_search
 from word2doc_spark.query.exact import search_exact
+from word2doc_spark.query.fast import search_fast
+from word2doc_spark.query.wand import search_wand
 from word2doc_spark.sources.pages import synthetic_pages, synthetic_pages_rows
 
 N_DOCS = 240
@@ -73,30 +75,45 @@ def test_corpus_stats_match_oracle(built, oracle_idx):
     assert math.isclose(metrics["avgdl"], oracle_idx.avgdl, rel_tol=1e-12)
 
 
-def _assert_rank_identical(spark, index_dir, oracle_idx, mode, k=10):
+def _assert_rank_identical(spark, index_dir, oracle_idx, mode, gate,
+                           k=10):
+    """Exact, and fast and WAND in both the driver and the Spark shape,
+    against the oracle."""
     qdf = spark.createDataFrame(QUERIES, "query_id long, query string")
-    got = search_exact(spark, index_dir, qdf, k=k, score_mode=mode).collect()
-    by_q = {}
-    for r in got:
-        by_q.setdefault(r["query_id"], []).append(r)
     oracle_idx.config = IndexConfig(**{**CFG.to_dict(), "score_mode": mode,
                                        "extras": {}})
-    for qid, qtext in QUERIES:
-        want = oracle_search(oracle_idx, qtext, k=k)
-        rows = sorted(by_q.get(qid, []), key=lambda r: r["rank"])
-        assert len(rows) == len(want), (qid, qtext, len(rows), len(want))
-        for row, (doc_id, url, score) in zip(rows, want):
-            assert row["doc_id"] == doc_id, (qid, row, doc_id, url)
-            assert row["url"] == url
-            assert math.isclose(row["score"], score, rel_tol=1e-9, abs_tol=1e-12)
+    wants = {qid: oracle_search(oracle_idx, qtext, k=k)
+             for qid, qtext in QUERIES}
+    runs = [(search_exact, None)] + [(fn, on)
+                                     for fn in (search_fast, search_wand)
+                                     for on in (True, False)]
+    for fn, on in runs:
+        if on is not None:
+            gate(on)
+        got = fn(spark, index_dir, qdf, k=k, score_mode=mode).collect()
+        by_q = {}
+        for r in got:
+            by_q.setdefault(r["query_id"], []).append(r)
+        for qid, qtext in QUERIES:
+            want = wants[qid]
+            rows = sorted(by_q.get(qid, []), key=lambda r: r["rank"])
+            assert len(rows) == len(want), (fn.__name__, on, qid, qtext,
+                                            len(rows), len(want))
+            for row, (doc_id, url, score) in zip(rows, want):
+                assert row["doc_id"] == doc_id, (fn.__name__, on, qid, row)
+                assert row["url"] == url
+                assert math.isclose(row["score"], score, rel_tol=1e-9,
+                                    abs_tol=1e-12)
 
 
-def test_drqa_rank_identity(spark, built, oracle_idx):
-    _assert_rank_identical(spark, built[0], oracle_idx, "drqa")
+def test_drqa_rank_identity(spark, built, oracle_idx, scoring_gate):
+    _assert_rank_identical(spark, built[0], oracle_idx, "drqa",
+                           scoring_gate)
 
 
-def test_bm25_rank_identity(spark, built, oracle_idx):
-    _assert_rank_identical(spark, built[0], oracle_idx, "bm25")
+def test_bm25_rank_identity(spark, built, oracle_idx, scoring_gate):
+    _assert_rank_identical(spark, built[0], oracle_idx, "bm25",
+                           scoring_gate)
 
 
 def test_extraction_byte_identity(spark, built):
@@ -185,10 +202,12 @@ def test_auto_n_ranges():
 
 
 @pytest.mark.parametrize("mode", ["drqa", "bm25"])
-def test_packed_candidate_merge_identity(spark, built, mode, monkeypatch):
+def test_packed_candidate_merge_identity(spark, built, mode, monkeypatch,
+                                        scoring_gate):
     """Force the big-batch packed-candidate merge (blobs + vectorized
     top-k) and assert row/score identity with the exact path — tiny
-    test batches otherwise take the rows+window bypass."""
+    test batches otherwise take the rows+window bypass (and the driver
+    shape, which has no merge at all)."""
     import math
     import word2doc_spark.query.ranges as R
     from word2doc_spark.query.exact import search_exact
@@ -200,6 +219,7 @@ def test_packed_candidate_merge_identity(spark, built, mode, monkeypatch):
     exact = search_exact(spark, index_dir, qdf, k=7,
                          score_mode=mode).collect()
     monkeypatch.setattr(R, "_PACK_MIN_CANDIDATES", 0)
+    scoring_gate(False)
     packed_fast = search_fast(spark, index_dir, qdf, k=7,
                               score_mode=mode).collect()
     packed_wand = search_wand(spark, index_dir, qdf, k=7, score_mode=mode,

@@ -158,12 +158,19 @@ def test_strip_repartitions_drops_caller_repartition(spark):
     assert sorted(r["id"] for r in out.collect()) == list(range(1000))
 
 
-def test_doc_partitioned_query_plan(spark, built):
-    """The fast/WAND scoring plan of a driver-analyzed batch: the
+def test_doc_partitioned_query_plan(spark, built, scoring_gate):
+    """The fast/WAND Spark-shape plan of a driver-analyzed batch: the
     range-group scoring tasks (FlatMapGroupsInPandas) feed ONE
     single-partition exchange into the one-task finish, and the docs
-    table is never scanned by Spark (no url join, no global sort)."""
+    table is never scanned by Spark (no url join, no global sort). The
+    driver shape's plan is a LocalTableScan."""
     from word2doc_spark.query.fast import search_fast
+    scoring_gate(True)
+    drv = search_fast(spark, built, spark.createDataFrame(
+        [(1, "spark shuffle partition")], "query_id long, query string"),
+        k=5, score_mode="drqa")
+    assert drv.isLocal() and "LocalTableScan" in plan_of(drv)
+    scoring_gate(False)
     qdf = spark.createDataFrame(
         [(1, "spark shuffle partition"), (2, "crawl warc html")],
         "query_id long, query string")
@@ -215,9 +222,11 @@ def _jobs_of_call(spark, fn):
 
 def test_warm_search_jobs_per_call(spark, built):
     """Jobs per warm search call: the analysis probe plus the jobs that
-    score and finish. No call infers a table schema from parquet footers
-    (a 'parquet at ...' job) — every index read declares its schema and
-    term stats are read without Spark."""
+    score and finish — none for a fast or WAND batch within its kernel's
+    driver size rule, which is scored on the driver. No call infers a
+    table schema from parquet footers (a 'parquet at ...' job) — every
+    index read declares its schema and term stats are read without
+    Spark."""
     from word2doc_spark.query.exact import search_exact
     from word2doc_spark.query.fast import search_fast
     from word2doc_spark.query.wand import search_wand
@@ -239,12 +248,38 @@ def test_warm_search_jobs_per_call(spark, built):
     }
     for call in calls.values():  # one warm-up call each
         call()
-    bounds = {"fast_one_question": 3, "wand": 3, "exact": 8}
+    bounds = {"fast_one_question": 1, "wand": 1, "exact": 8}
     for name, call in calls.items():
         n_jobs, stages = _jobs_of_call(spark, call)
         assert n_jobs <= bounds[name], (name, n_jobs, stages)
         assert not [s for s in stages if s.startswith("parquet at")], \
             (name, stages)
+
+
+@pytest.mark.parametrize("spj", [0, 1])
+def test_staged_read_declares_schema(spark, tmp_path, spj):
+    """The build reads its staged table twice (the dl thread and the
+    encode) through _staged_part, which declares STAGE_SCHEMA plus the
+    layout's partition column: in either staged layout the reads run no
+    schema-inference job, and each slice holds its own rows."""
+    from word2doc_spark.index.build import (STAGE_SCHEMA, _staged_part,
+                                            _write_staged)
+    cfg = IndexConfig(**{**CFG.to_dict(), "shards_per_job": spj,
+                         "extras": {}})
+    path = str(tmp_path / "stage")
+    rows = [(-1, 0, b"dl"), (0, 1, b"p0"), (3, 2, b"p3")]
+    _write_staged(spark.createDataFrame(rows, STAGE_SCHEMA), path, cfg)
+    parts = {}
+    n_jobs, stages = _jobs_of_call(spark, lambda: parts.update(
+        dl=_staged_part(spark, path, True, cfg),
+        post=_staged_part(spark, path, False, cfg)))
+    assert n_jobs == 0, stages
+
+    def got(df):
+        return sorted(tuple(r) for r in
+                      df.select("shard_id", "route", "blob").collect())
+    assert got(parts["dl"]) == [(-1, 0, b"dl")]
+    assert got(parts["post"]) == [(0, 1, b"p0"), (3, 2, b"p3")]
 
 
 @pytest.mark.parametrize("op", ["lsh_pairs", "ngram_jaccard",

@@ -40,7 +40,7 @@ def _random_queries(seed: int, n_q: int = 12):
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2])
-def test_random_corpus_rank_identity(spark, tmp_path, seed):
+def test_random_corpus_rank_identity(spark, tmp_path, seed, scoring_gate):
     cfg = IndexConfig(hash_size=2 ** 16, num_shards=3, block_size=16,
                       n_ranges=5, max_seg_postings=8)
     rows = _random_corpus(seed)
@@ -57,7 +57,12 @@ def test_random_corpus_rank_identity(spark, tmp_path, seed):
         oracle.config = IndexConfig(
             **{**cfg.to_dict(), "score_mode": mode, "extras": {}})
         wants = {qid: oracle_search(oracle, q, k=8) for qid, q in queries}
-        for fn in (search_exact, search_fast, search_wand):
+        # fast and WAND in the driver shape, then in the Spark shape
+        for fn, on in ((search_exact, None), (search_fast, True),
+                       (search_fast, False), (search_wand, True),
+                       (search_wand, False)):
+            if on is not None:
+                scoring_gate(on)
             got = fn(spark, idx, qdf, k=8, score_mode=mode).collect()
             by_q = {}
             for r in got:
@@ -65,7 +70,8 @@ def test_random_corpus_rank_identity(spark, tmp_path, seed):
             for qid, want in wants.items():
                 rows_q = sorted(by_q.get(qid, []), key=lambda r: r["rank"])
                 assert [(r["doc_id"], r["url"]) for r in rows_q] == \
-                    [(d, u) for d, u, _ in want], (fn.__name__, mode, qid)
+                    [(d, u) for d, u, _ in want], (fn.__name__, on, mode,
+                                                   qid)
                 for r, (_, _, s) in zip(rows_q, want):
                     assert math.isclose(r["score"], s, rel_tol=1e-9,
                                         abs_tol=1e-12)

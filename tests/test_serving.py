@@ -1,9 +1,10 @@
-"""Round-5 serving-path behavior: lazy executor-side dl loading, the
+"""Serving-path behavior: lazy executor-side dl loading, the
 serving-mode segment cache (repeat batches on one build run without a
-parquet scan or a shuffle), content-stable kernel cache keys, the
-byte-bounded per-task cache, and session hygiene: no build or search
-writes session conf, and a search's materializations are released with
-its result."""
+parquet scan or a shuffle; keyed by the live session; warmed by
+driver-shape searches too), the driver shape's size rule,
+content-stable kernel cache keys, the byte-bounded per-task cache, and
+session hygiene: no build or search writes session conf, and a search's
+materializations are released with its result."""
 
 import pytest
 
@@ -87,7 +88,7 @@ def test_dl_for_ranges_raises_on_missing_range(built):
 # ---------------------------------------------------------------------------
 
 def test_serving_cache_identical_results_and_no_exchange(
-        spark, built, monkeypatch):
+        spark, built, monkeypatch, scoring_gate):
     """Serving mode (JVM-persisted segment table): calls 1..3 on one
     build return identical rows; from call 2 the slot-keyed full segment
     table is persisted, and the warm plan has an InMemoryTableScan with
@@ -96,6 +97,8 @@ def test_serving_cache_identical_results_and_no_exchange(
     from tests.test_plans import plan_of
     from word2doc_spark.query import ranges as R
     from word2doc_spark.query.fast import search_fast
+
+    scoring_gate(False)
 
     for key in list(R._SEG_CACHE):
         R._SEG_CACHE.pop(key).unpersist()
@@ -146,9 +149,12 @@ def test_serving_cache_identical_results_and_no_exchange(
     R._SEG_CACHE_SEEN.clear()
 
 
-def test_serving_cache_evicts_oldest_build(spark, built, tmp_path_factory):
+def test_serving_cache_evicts_oldest_build(spark, built, tmp_path_factory,
+                                           scoring_gate):
     from word2doc_spark.query import ranges as R
     from word2doc_spark.query.fast import search_fast
+
+    scoring_gate(False)
 
     other_dir = str(tmp_path_factory.mktemp("servidx2"))
     build_index(spark, synthetic_pages(spark, 60, num_partitions=2),
@@ -328,20 +334,6 @@ def test_pack_candidates_query_id_overflow_guard():
         _pack_candidates([1 << 53], [5], [0.5], n_qb=8)
 
 
-def test_build_restores_conf_on_failure(spark, tmp_path):
-    key = "spark.sql.inMemoryColumnarStorage.compressed"
-    before = spark.conf.get(key, "true")
-
-    def boom(text):
-        raise ValueError("plugin failure")
-
-    with pytest.raises(Exception):
-        build_index(spark, synthetic_pages(spark, 30, num_partitions=2),
-                    str(tmp_path / "failidx"), CFG,
-                    input_token="conf-fail", preprocess=boom)
-    assert spark.conf.get(key, "true") == before
-
-
 def test_wqt_groups_matches_pandas_groupby_and_handles_empty():
     import numpy as np
     import pandas as pd
@@ -394,7 +386,8 @@ def test_align_to_pack():
 
 
 def test_derived_dataframe_survives_result_release(spark, built,
-                                                   monkeypatch):
+                                                   monkeypatch,
+                                                   scoring_gate):
     """A search result owns its query-pack broadcast and its seed-pass
     persist: both are released when the result is garbage collected.
     Release is unpersist, never destroy — a DataFrame derived from the
@@ -411,7 +404,9 @@ def test_derived_dataframe_survives_result_release(spark, built,
 
     real_release = R.release_with
     monkeypatch.setattr(R, "release_with", recording_release)
-    # no serving table: the seed pass persists its own matched segments
+    # Spark shape, no serving table: the seed pass persists its own
+    # matched segments
+    scoring_gate(False)
     monkeypatch.setattr(R, "_SEG_CACHE_MAX_BYTES", -1)
     qdf = spark.createDataFrame(QUERIES, "query_id long, query string")
     res = search_wand(spark, built, qdf, k=3, score_mode="drqa",
@@ -448,8 +443,6 @@ def test_serving_segs_concurrent_warmup_persists_once(spark, built,
     holds every racer that got past the cache lookup; the lock lets
     exactly one through, so the barrier times out instead."""
     import threading
-    import pyspark.sql.functions as F
-    from word2doc_spark.index.build import _partition_slots
     from word2doc_spark.index.manifest import Manifest
     from word2doc_spark.query import ranges as R
 
@@ -458,8 +451,8 @@ def test_serving_segs_concurrent_warmup_persists_once(spark, built,
     R._SEG_CACHE_SEEN.clear()
     _, stats = Manifest(built).load()
     bid, sp = stats["build_id"], 8
-    slot_arr = F.array(*[F.lit(x) for x in _partition_slots(sp)])
-    R._SEG_CACHE_SEEN[(bid, sp)] = 1  # the first call ran already
+    key = (spark.sparkContext.applicationId, bid, sp)
+    R._SEG_CACHE_SEEN[key] = 1  # the first call ran already
     barrier = threading.Barrier(2, timeout=3)
     reads = []
     real_read = R.read_table
@@ -476,7 +469,7 @@ def test_serving_segs_concurrent_warmup_persists_once(spark, built,
     got = [None, None]
 
     def call(i):
-        got[i] = R._serving_segs(spark, built, bid, sp, slot_arr,
+        got[i] = R._serving_segs(spark, built, bid, sp,
                                  stats["index_bytes"])
 
     threads = [threading.Thread(target=call, args=(i,)) for i in (0, 1)]
@@ -488,13 +481,137 @@ def test_serving_segs_concurrent_warmup_persists_once(spark, built,
         assert not any(t.is_alive() for t in threads)
         assert len(reads) == 1
         assert len(R._SEG_CACHE) == 1
-        assert got[0] is got[1] is R._SEG_CACHE[(bid, sp)]
+        assert got[0] is got[1] is R._SEG_CACHE[key]
     finally:
         for df in {id(d): d for d in got + list(R._SEG_CACHE.values())
                    if d is not None}.values():
             df.unpersist()
         R._SEG_CACHE.clear()
         R._SEG_CACHE_SEEN.clear()
+
+
+def _clear_seg_cache():
+    from word2doc_spark.query import ranges as R
+    for key in list(R._SEG_CACHE):
+        R._SEG_CACHE.pop(key).unpersist()
+    R._SEG_CACHE_SEEN.clear()
+
+
+def test_driver_searches_warm_the_serving_table(spark, built,
+                                                scoring_gate):
+    """Every driver-analyzed search counts toward the serving table's
+    warm-up, whichever shape scores it: two driver-shape calls persist the
+    table lazily (they run only their analysis probes), and a later
+    Spark-shape batch scores from it, with the driver shape's rows."""
+    from tests.test_plans import _jobs_of_call, plan_of
+    from word2doc_spark.query import ranges as R
+    from word2doc_spark.query.fast import search_fast
+
+    _clear_seg_cache()
+    qdf = spark.createDataFrame(QUERIES, "query_id long, query string")
+
+    def rows(df):
+        return sorted((r["query_id"], r["rank"], r["doc_id"], r["url"],
+                       round(r["score"], 9)) for r in df.collect())
+
+    scoring_gate(True)
+    got = []
+    n_jobs, _ = _jobs_of_call(spark, lambda: got.extend(
+        rows(search_fast(spark, built, qdf, k=5, score_mode="bm25"))
+        for _ in range(2)))
+    assert n_jobs == 2  # the two probes; the persist ran nothing
+    assert got[0] == got[1] and got[0]
+    assert len(R._SEG_CACHE) == 1
+    scoring_gate(False)
+    res = search_fast(spark, built, qdf, k=5, score_mode="bm25")
+    assert "InMemoryTableScan" in plan_of(res)
+    assert rows(res) == got[0]
+    _clear_seg_cache()
+
+
+def test_serving_cache_forgets_stopped_sessions(spark, built):
+    """Both serving-cache dicts key on the live session's applicationId:
+    what a stopped session left for the same (build, sp) is dropped and
+    never handed out; a key promoted into the cache leaves the warm-up
+    counts."""
+    from word2doc_spark.index.manifest import Manifest
+    from word2doc_spark.query import ranges as R
+
+    _clear_seg_cache()
+    _, stats = Manifest(built).load()
+    bid, sp, nbytes = stats["build_id"], 8, stats["index_bytes"]
+    live = (spark.sparkContext.applicationId, bid, sp)
+    stale = spark.range(1)  # stands in for a stopped session's table
+    R._SEG_CACHE[("app-stopped", bid, sp)] = stale
+    R._SEG_CACHE_SEEN[("app-stopped", bid, sp)] = 7
+    try:
+        assert R._serving_segs(spark, built, bid, sp, nbytes) is None
+        assert not R._SEG_CACHE
+        assert list(R._SEG_CACHE_SEEN) == [live]
+        table = R._serving_segs(spark, built, bid, sp, nbytes)
+        assert table is not None and table is not stale
+        assert list(R._SEG_CACHE) == [live] and not R._SEG_CACHE_SEEN
+    finally:
+        _clear_seg_cache()
+
+
+def test_serving_cache_warmup_counts_stay_bounded(spark, built):
+    """One-shot searches over many builds leave at most
+    _SEG_CACHE_MAX_ENTRIES warm-up counts behind."""
+    from word2doc_spark.query import ranges as R
+
+    _clear_seg_cache()
+    for i in range(3 * R._SEG_CACHE_MAX_ENTRIES):
+        assert R._serving_segs(spark, built, f"build-{i}", 8, 0) is None
+    assert len(R._SEG_CACHE_SEEN) == R._SEG_CACHE_MAX_ENTRIES
+    assert not R._SEG_CACHE
+    _clear_seg_cache()
+
+
+def test_worker_warmup_keyed_by_application_id(spark):
+    from word2doc_spark.index import build as B
+    th = B._warm_python_workers(spark)
+    if th is not None:
+        th.join()
+    assert spark.sparkContext.applicationId in B._WARMED_SESSIONS
+    assert B._warm_python_workers(spark) is None
+
+
+def test_driver_gate_is_matched_postings_bound(spark, built, monkeypatch):
+    """A driver-analyzed batch takes the driver shape exactly when Σ df
+    over its (query, term) rows is within the kernel's
+    driver_max_postings; its result is then a local relation."""
+    from word2doc_spark.index.manifest import Manifest
+    from word2doc_spark.query.exact import prepare_weighted_terms
+    from word2doc_spark.query.fast import fast_topk, search_fast
+    from word2doc_spark.query.wand import search_wand, wand_topk
+
+    config, stats = Manifest(built).load()
+    qdf = spark.createDataFrame(QUERIES, "query_id long, query string")
+    _, _, wqt, _ = prepare_weighted_terms(
+        spark, built, qdf, config, int(stats["n_docs"]), False, "driver")
+    bound = int(wqt["df"].sum())
+    for kernel, search in ((fast_topk, search_fast),
+                           (wand_topk, search_wand)):
+        monkeypatch.setattr(kernel, "driver_max_postings", bound)
+        assert search(spark, built, qdf, k=3).isLocal()
+        monkeypatch.setattr(kernel, "driver_max_postings", bound - 1)
+        assert not search(spark, built, qdf, k=3).isLocal()
+
+
+def test_finish_rows_and_url_lookup_take_empty_input(built):
+    import os
+    import numpy as np
+    from word2doc_spark.query.exact import _lookup_urls, finish_rows
+
+    docs = os.path.join(built, "docs")
+    found, urls = _lookup_urls(docs, np.empty(0, dtype=np.int64))
+    assert found.size == 0 and urls.size == 0
+    none = np.empty(0, dtype=np.int64)
+    out = finish_rows(docs, none, none, np.empty(0), k=5)
+    assert len(out) == 0
+    assert list(out.columns) == ["query_id", "rank", "doc_id", "url",
+                                 "score"]
 
 
 # ---------------------------------------------------------------------------
@@ -506,9 +623,10 @@ def _boom(text):
 
 
 def test_build_and_search_write_no_session_conf(spark, built, tmp_path,
-                                                monkeypatch):
+                                                monkeypatch, scoring_gate):
     """Every RuntimeConfig.set/unset during a build, a failing build and
-    one search on each path is recorded; there must be none."""
+    one search on each path (fast and WAND in both shapes) is recorded;
+    there must be none."""
     from pyspark.sql.conf import RuntimeConfig
     from word2doc_spark.query.exact import search_exact
     from word2doc_spark.query.fast import search_fast
@@ -529,8 +647,10 @@ def test_build_and_search_write_no_session_conf(spark, built, tmp_path,
                     str(tmp_path / "failidx"), CFG,
                     input_token="no-conf-fail", preprocess=_boom)
     qdf = spark.createDataFrame(QUERIES, "query_id long, query string")
-    for search in (search_fast, search_wand, search_exact):
-        assert search(spark, built, qdf, k=3).collect()
+    for on in (True, False):
+        scoring_gate(on)
+        for search in (search_fast, search_wand, search_exact):
+            assert search(spark, built, qdf, k=3).collect()
     assert writes == []
 
 

@@ -81,7 +81,8 @@ def test_head_term_actually_segmented(spark, tmp_path):
     assert all(r["max_seg"] <= 16 for r in per_term)
 
 
-def test_query_identity_across_segmentation(spark, tmp_path):
+def test_query_identity_across_segmentation(spark, tmp_path,
+                                            scoring_gate):
     """All three query paths return identical results on physically
     different segmentations of the same corpus (n_ranges/max_seg are pure
     layout knobs)."""
@@ -105,12 +106,17 @@ def test_query_identity_across_segmentation(spark, tmp_path):
          (3, "posting wand block heap")],
         "query_id long, query string")
     key = lambda r: (r["query_id"], r["rank"])
-    for fn in (search_exact, search_fast, search_wand):
+    for fn, on in ((search_exact, None), (search_fast, True),
+                   (search_fast, False), (search_wand, True),
+                   (search_wand, False)):
+        if on is not None:
+            scoring_gate(on)
         a = sorted(fn(spark, dirs[0], qdf, k=8, score_mode="bm25").collect(),
                    key=key)
         b = sorted(fn(spark, dirs[1], qdf, k=8, score_mode="bm25").collect(),
                    key=key)
         assert [(r["query_id"], r["rank"], r["doc_id"]) for r in a] == \
-               [(r["query_id"], r["rank"], r["doc_id"]) for r in b], fn
+               [(r["query_id"], r["rank"], r["doc_id"]) for r in b], \
+            (fn, on)
         for x, y in zip(a, b):
             assert math.isclose(x["score"], y["score"], rel_tol=1e-9)

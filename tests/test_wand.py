@@ -40,18 +40,22 @@ def built(spark, tmp_path_factory):
 
 @pytest.mark.parametrize("mode", ["drqa", "bm25"])
 @pytest.mark.parametrize("k", [5, 10])
-def test_wand_identical_to_exact(spark, built, mode, k):
+def test_wand_identical_to_exact(spark, built, mode, k, scoring_gate):
     qdf = spark.createDataFrame(QUERIES, "query_id long, query string")
     exact = search_exact(spark, built, qdf, k=k, score_mode=mode).collect()
-    fast = search_wand(spark, built, qdf, k=k, score_mode=mode).collect()
     key = lambda r: (r["query_id"], r["rank"])
     exact.sort(key=key)
-    fast.sort(key=key)
-    assert len(exact) == len(fast)
-    for a, b in zip(exact, fast):
-        assert (a["query_id"], a["rank"], a["doc_id"], a["url"]) == \
-               (b["query_id"], b["rank"], b["doc_id"], b["url"])
-        assert math.isclose(a["score"], b["score"], rel_tol=1e-9, abs_tol=1e-12)
+    for on in (True, False):  # driver shape, then Spark shape
+        scoring_gate(on)
+        fast = search_wand(spark, built, qdf, k=k,
+                           score_mode=mode).collect()
+        fast.sort(key=key)
+        assert len(exact) == len(fast), on
+        for a, b in zip(exact, fast):
+            assert (a["query_id"], a["rank"], a["doc_id"], a["url"]) == \
+                   (b["query_id"], b["rank"], b["doc_id"], b["url"]), on
+            assert math.isclose(a["score"], b["score"], rel_tol=1e-9,
+                                abs_tol=1e-12)
 
 
 # ---------------------------------------------------------------------------
@@ -153,16 +157,22 @@ def test_wand_topk_theta_seed_exact_and_prunes(mode):
     assert s["blocks_skipped"] > 0
 
 
-def test_wand_seeding_differential_on_index(spark, built):
-    """search_wand with and without θ seeding returns identical rows."""
+def test_wand_seeding_differential_on_index(spark, built, scoring_gate):
+    """search_wand with and without θ seeding returns identical rows.
+    Seeding runs only in the Spark shape, forced here; the driver shape
+    returns the same rows."""
+    scoring_gate(False)
     qdf = spark.createDataFrame(QUERIES, "query_id long, query string")
     on = search_wand(spark, built, qdf, k=7, score_mode="bm25",
                      seed_theta=True).collect()
     off = search_wand(spark, built, qdf, k=7, score_mode="bm25",
                       seed_theta=False).collect()
-    key = lambda r: (r["query_id"], r["rank"])
-    assert sorted(((r["query_id"], r["rank"], r["doc_id"]) for r in on)) \
-        == sorted(((r["query_id"], r["rank"], r["doc_id"]) for r in off))
+    scoring_gate(True)
+    drv = search_wand(spark, built, qdf, k=7, score_mode="bm25",
+                      seed_theta=True).collect()
+    rows = lambda res: sorted((r["query_id"], r["rank"], r["doc_id"])
+                              for r in res)
+    assert rows(on) == rows(off) == rows(drv)
 
 
 @pytest.mark.parametrize("mode", ["drqa", "bm25"])

@@ -381,20 +381,21 @@ def _write_staged(df: DataFrame, stage_path: str,
          .write.mode("overwrite").partitionBy("_dl").parquet(stage_path))
 
 
-def _staged_part(spark: SparkSession, stage_path: str,
-                 dl: bool) -> DataFrame:
+def _staged_part(spark: SparkSession, stage_path: str, dl: bool,
+                 config: IndexConfig) -> DataFrame:
     """The posting (dl=False) or dl-blob (dl=True) slice of a staged
-    table, pruning on whichever layout _write_staged chose: the ``_dl``
-    flag (shards_per_job == 0), or the per-shard hive partitioning with
-    the dl blobs under shard_id = -1 (shards_per_job > 0)."""
-    staged = spark.read.parquet(stage_path)
-    if "_dl" in staged.columns:
-        # cast-compare: hive partition values may surface as string or
-        # int depending on partition-type inference
-        return staged.filter(
-            F.col("_dl").cast("int") == F.lit(1 if dl else 0))
-    return staged.filter(F.col("shard_id") == -1 if dl
-                         else F.col("shard_id") >= 0)
+    table, pruning on the layout _write_staged chose for ``config``: the
+    ``_dl`` flag (shards_per_job == 0), or the per-shard hive partitioning
+    with the dl blobs under shard_id = -1 (shards_per_job > 0). The read
+    declares STAGE_SCHEMA plus the layout's partition column, so it runs
+    no schema-inference job."""
+    if config.shards_per_job > 0:
+        staged = spark.read.schema(STAGE_SCHEMA).parquet(stage_path)
+        return staged.filter(F.col("shard_id") == -1 if dl
+                             else F.col("shard_id") >= 0)
+    staged = (spark.read.schema(STAGE_SCHEMA + ", _dl int")
+              .parquet(stage_path))
+    return staged.filter(F.col("_dl") == F.lit(1 if dl else 0))
 
 
 def _build_doclen(spark: SparkSession, index_dir: str, stage_path: str,
@@ -424,7 +425,7 @@ def _build_doclen(spark: SparkSession, index_dir: str, stage_path: str,
     # concurrently as well was measured SLOWER (4 simultaneous python
     # stages × n_cores workers oversubscribe the box — encode wall
     # inflated ~2× at the sf0.1 bench)
-    (_staged_part(spark, stage_path, dl=True).select("blob")
+    (_staged_part(spark, stage_path, dl=True, config=config).select("blob")
            .coalesce(max(8, sp // 4))
            .mapInPandas(decode_dl_pairs, "doc_id long, dl long")
            .write.mode("overwrite")
@@ -648,7 +649,8 @@ def _warm_python_workers(spark: SparkSession):
     mapInPandas job in a background thread so it overlaps the JVM-only
     url-bounds sampling job. Once per SparkSession; on a long-lived
     cluster the workers are warm and this is a no-op."""
-    key = id(spark.sparkContext)
+    # applicationId, not id(): a stopped context's id can be reused
+    key = spark.sparkContext.applicationId
     if key in _WARMED_SESSIONS:
         return None
     _WARMED_SESSIONS.add(key)
@@ -943,7 +945,8 @@ def build_index(
             dl_thread.start()
         # exclude the dl blobs — segment encode consumes posting blobs
         # only (layout-adaptive pruning, see _staged_part)
-        staged_all = _staged_part(spark, stage_path, dl=False)
+        staged_all = _staged_part(spark, stage_path, dl=False,
+                                  config=config)
         for group in groups:
             todo = [s for s in group if s not in done]
             if not todo:

@@ -165,20 +165,29 @@ def _matched_segments(spark: SparkSession, index_dir: str,
     return _prune_terms(segs, term_ids, num_shards).select(*cols)
 
 
-def _term_dfs(index_dir: str, term_ids: list, num_shards: int) -> dict:
-    """{term_id: df} of the given terms present in the index, read on the
-    driver with pyarrow — no Spark job. Hive partition pruning on the
-    term→shard route plus a term_id filter pushed down to the row groups:
-    the same read the scoring workers use for dl and segment loads."""
+def read_term_rows(index_dir: str, table: str, term_ids: list,
+                   num_shards: int, columns: list):
+    """The rows of the given terms in a shard-partitioned index table
+    (``terms`` or ``shards``) as a pyarrow Table, read on the driver — no
+    Spark job. Hive partition pruning on the term→shard route plus a
+    term_id filter pushed down to the row groups: the same read the
+    scoring workers use for dl loads."""
     import pyarrow.compute as pc
     import pyarrow.dataset as pads
-    ds = pads.dataset(os.path.join(index_dir, "terms"), format="parquet",
+    ds = pads.dataset(os.path.join(index_dir, table), format="parquet",
                       partitioning="hive")
     filt = pc.field("term_id").isin(term_ids)
     shard_ids = sorted({t % num_shards for t in term_ids})
     if len(shard_ids) < num_shards:
         filt = filt & pc.field("shard_id").isin(shard_ids)
-    tbl = ds.to_table(columns=["term_id", "df"], filter=filt)
+    return ds.to_table(columns=columns, filter=filt)
+
+
+def _term_dfs(index_dir: str, term_ids: list, num_shards: int) -> dict:
+    """{term_id: df} of the given terms present in the index (the
+    ``terms/`` stats table via read_term_rows)."""
+    tbl = read_term_rows(index_dir, "terms", term_ids, num_shards,
+                         ["term_id", "df"])
     return dict(zip(tbl.column("term_id").to_pylist(),
                     tbl.column("df").to_pylist()))
 
@@ -394,6 +403,8 @@ def _lookup_urls(docs_path: str, doc_ids: np.ndarray):
     sorts docs by doc_id within each file)."""
     import pyarrow.compute as pc
     import pyarrow.dataset as pads
+    if doc_ids.size == 0:
+        return np.zeros(0, dtype=bool), np.empty(0, dtype=object)
     want = np.unique(doc_ids)
     f = pc.field("doc_id")
     tbl = pads.dataset(docs_path, format="parquet").to_table(
@@ -411,17 +422,30 @@ def _lookup_urls(docs_path: str, doc_ids: np.ndarray):
     return ids[pos] == doc_ids, urls[pos]
 
 
+def finish_rows(docs_path: str, qid: np.ndarray, doc: np.ndarray,
+                score: np.ndarray, k: int) -> pd.DataFrame:
+    """Candidate (query_id, doc_id, score) arrays → the final RESULT_SCHEMA
+    rows, ordered by (query_id, rank): one numpy lexsort merge
+    (topk_order), then the urls of just the winning doc_ids (pushed-down
+    doc_id filter). Docs absent from the docs table drop, as a url join
+    would drop them. Shared by the one-task Spark finish (finish_topk)
+    and the driver-resident search (ranges._search_on_driver)."""
+    idx, rank = topk_order(qid, doc, score, k)
+    found, urls = _lookup_urls(docs_path, doc[idx])
+    idx, rank = idx[found], rank[found]
+    return pd.DataFrame({"query_id": qid[idx], "rank": rank,
+                         "doc_id": doc[idx], "url": urls[found],
+                         "score": score[idx]})
+
+
 def finish_topk(index_dir: str, cand: DataFrame, k: int) -> DataFrame:
     """Final top-k + url lookup of a DRIVER-ANALYZED batch in ONE task:
-    candidates (query_id, doc_id, score) → repartition(1) → mapInPandas.
-    The task merges with one numpy lexsort (topk_order), reads the urls
-    of just the winning doc_ids (pushed-down doc_id filter), and emits
-    rows already ordered by (query_id, rank). It replaces a query_id
-    window, a broadcast join that scans the whole docs table, and a
-    global sort — each its own Spark job(s). The batch is bounded (≤
-    DISTRIBUTED_ANALYSIS_THRESHOLD queries), so its candidate set fits a
-    task; distributed batches keep attach_urls. Docs absent from the
-    docs table drop, as the join dropped them."""
+    candidates (query_id, doc_id, score) → repartition(1) → mapInPandas
+    running finish_rows. It replaces a query_id window, a broadcast join
+    that scans the whole docs table, and a global sort — each its own
+    Spark job(s). The batch is bounded (≤ DISTRIBUTED_ANALYSIS_THRESHOLD
+    queries), so its candidate set fits a task; distributed batches keep
+    attach_urls."""
     docs_path = os.path.join(index_dir, "docs")
 
     def run(it):
@@ -429,17 +453,12 @@ def finish_topk(index_dir: str, cand: DataFrame, k: int) -> DataFrame:
         if not parts:
             return
         pdf = pd.concat(parts, ignore_index=True)
-        qid = pdf["query_id"].to_numpy(dtype=np.int64)
-        doc = pdf["doc_id"].to_numpy(dtype=np.int64)
-        score = pdf["score"].to_numpy(dtype=np.float64)
-        idx, rank = topk_order(qid, doc, score, k)
-        if idx.size == 0:
-            return
-        found, urls = _lookup_urls(docs_path, doc[idx])
-        idx, rank = idx[found], rank[found]
-        yield pd.DataFrame({"query_id": qid[idx], "rank": rank,
-                            "doc_id": doc[idx], "url": urls[found],
-                            "score": score[idx]})
+        out = finish_rows(docs_path,
+                          pdf["query_id"].to_numpy(dtype=np.int64),
+                          pdf["doc_id"].to_numpy(dtype=np.int64),
+                          pdf["score"].to_numpy(dtype=np.float64), k)
+        if len(out):
+            yield out
 
     return (cand.select("query_id", "doc_id", "score").repartition(1)
             .mapInPandas(run, RESULT_SCHEMA))

@@ -310,6 +310,12 @@ def _grouped_fast(qids_l, offs, tids_l, w_l, idf_l, og_l, g, chains,
 # this batch implementation when the kernel advertises one — WAND keeps
 # the per-query loop (its pruning is inherently per-query)
 fast_topk.grouped_impl = _grouped_fast
+# ranges.search_doc_partitioned scores a driver-analyzed batch on the
+# driver (no Spark job) when its matched postings — Σ df over the
+# batch's (query, term) rows — are at most this: the grouped scorer
+# still beat the Spark shape's fixed cost at ~1.9M postings (1,600
+# questions); the bound keeps driver-side decoded postings to ~16 MB
+fast_topk.driver_max_postings = 1_000_000
 
 
 def search_fast(

@@ -7,31 +7,38 @@ so each document's full score is computed locally; the task emits only
 its per-query top-k candidates, and an exact global merge over the
 (n_groups × Q × k) candidate set yields the final top-k.
 
-The final merge, by how the batch was analyzed:
+Three shapes, picked by how the query batch was analyzed and how much
+it matches:
 
-* driver-analyzed batches finish in ONE task (exact.finish_topk):
-  candidates → repartition(1) → mapInPandas, where one numpy lexsort
-  merges the per-group top-ks and the urls of just the winners are read
-  with a pushed-down doc_id filter; rows leave ordered by (query_id,
-  rank). Above _PACK_MIN_CANDIDATES estimated candidate rows, the
-  candidates first travel as numpy-packed blobs and merge vectorized per
-  query bucket (_merge_topk_blobs), so the one task sees ≤ Q·k rows.
-* distributed batches — no driver-known size bound — keep the query_id
-  window, the broadcast url join (exact.attach_urls) and a global sort.
+* driver — a driver-analyzed batch whose matched postings (Σ df over
+  its (query, term) rows) are within the kernel's size rule
+  (``fast_topk.driver_max_postings``, ``wand_topk.driver_max_postings``)
+  is scored without Spark (_search_on_driver): a pruned pyarrow read of
+  the matched segments, the range tasks' own scorer over ONE group
+  holding every range, and the shared finish (exact.finish_rows). The
+  result is a LocalRelation; the caller's action runs no job. At serving
+  sizes a Spark-shape call is all fixed cost: its scoring and finish
+  jobs take longer than the driver takes to score the same postings.
+* broadcast — a bigger driver-analyzed batch: the weighted-terms table
+  rides in the kernel closure and each matched segment is shuffled
+  ONCE, keyed by a range-slot group. (A join of queries × segments
+  emits one row per (query, segment), so a Q-query batch over shared
+  hot terms would ship each hot segment's payload up to Q× through
+  shuffle + Arrow — measured 4× wall at Q=500.) The candidates finish
+  in ONE task (exact.finish_topk): repartition(1) → mapInPandas running
+  exact.finish_rows — one numpy lexsort merge, then the urls of just
+  the winners via a pushed-down doc_id filter; rows leave ordered by
+  (query_id, rank). Above _PACK_MIN_CANDIDATES estimated candidate
+  rows, the candidates first travel as numpy-packed blobs and merge
+  vectorized per query bucket (_merge_topk_blobs), so the one task sees
+  ≤ Q·k rows.
+* join — distributed (huge) batches, with no driver-known size bound:
+  segments ⋈ query terms, sub-bucketed by query id for task balance
+  (shuffle volume is the join output, the price of a query table too
+  large for a closure), then the query_id window, the broadcast url
+  join (exact.attach_urls) and a global sort.
 
-Two shapes, picked by how the query batch was analyzed:
-
-* driver-analyzed (small) batches — BROADCAST-QUERY scoring: the
-  weighted-terms table rides in the kernel closure and each matched
-  segment is shuffled ONCE, keyed by a range-slot group. (A join of
-  queries × segments emits one row per (query, segment), so a Q-query
-  batch over shared hot terms would ship each hot segment's payload up
-  to Q× through shuffle + Arrow — measured 4× wall at Q=500.)
-* distributed (huge) batches — the join shape, sub-bucketed by query id
-  for task balance; shuffle volume is the join output, which is the
-  price of a query table too large for a closure.
-
-Two partitioning rules both shapes obey (measured, not theoretical):
+Two partitioning rules both Spark shapes obey (measured, not theoretical):
 group keys are mapped onto hash-slot ints so every group gets its own
 shuffle partition (n keys hashed into n partitions loses 2-3× to
 balls-in-bins collisions), and the kernel exchanges use explicit
@@ -47,9 +54,10 @@ the range-group count (set ≫ cores at build time), not n_queries.
 bm25 needs per-doc dl at scoring time: each scoring task loads the
 compressed dl blobs written at build (index/build.py doclen_seg) for
 exactly its ranges, LAZILY inside the task through a process-lifetime
-per-range cache (_dl_for_ranges) — never a driver-side N-row
-materialization, and no per-batch dl shuffle: warm batches read nothing
-and the bm25 physical plan equals the drqa plan.
+per-range cache (_dl_for_ranges) — never an N-row materialization, and
+no per-batch dl shuffle: warm batches read nothing and the bm25 physical
+plan equals the drqa plan. The driver shape loads the same per-range
+blobs through the same cache in the driver process.
 
 Exactness: per-group scores are complete (a doc's postings for every term
 live in its range), and the global top-k is contained in the union of
@@ -66,6 +74,7 @@ import time
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
@@ -73,8 +82,9 @@ from word2doc_spark.index.manifest import Manifest, read_table
 from word2doc_spark.index.postings import decode_postings
 from word2doc_spark.lifetime import release_with
 from word2doc_spark.query.exact import (
-    _empty_result, _matched_segments, attach_urls, finish_topk,
-    prepare_weighted_terms, topk_order,
+    RESULT_SCHEMA, _empty_result, _matched_segments, attach_urls,
+    finish_rows, finish_topk, prepare_weighted_terms, read_term_rows,
+    topk_order,
 )
 
 CAND_SCHEMA = "query_id long, doc_id long, score double"
@@ -134,9 +144,12 @@ def get_stats() -> dict:
 # across tasks, so warm batches pay ZERO dl cost and the bm25 plan is
 # byte-identical to the drqa plan. Keyed by the per-publish build_id
 # (never the config fingerprint — two builds from different corpora can
-# share a fingerprint); bounded by bytes with FIFO eviction.
+# share a fingerprint); bounded by bytes with FIFO eviction. The driver
+# shape (_search_on_driver) fills it from caller threads, so inserts and
+# evictions hold a lock.
 _DL_CACHE: dict = {}
 _DL_CACHE_BYTES = [0]
+_DL_CACHE_LOCK = threading.Lock()
 _DL_CACHE_MAX_BYTES = int(os.environ.get("W2D_DL_CACHE_MAX_BYTES",
                                          256 << 20))
 
@@ -202,13 +215,17 @@ def _dl_for_ranges(index_dir: str, bid: str | None,
             if bid is None:
                 continue
             nbytes = int(dv[0].nbytes + dv[1].nbytes)
-            while _DL_CACHE and \
-                    _DL_CACHE_BYTES[0] + nbytes > _DL_CACHE_MAX_BYTES:
-                old = _DL_CACHE.pop(next(iter(_DL_CACHE)))
-                _DL_CACHE_BYTES[0] -= int(old[0].nbytes + old[1].nbytes)
-            if nbytes <= _DL_CACHE_MAX_BYTES:
-                _DL_CACHE[(bid, rid)] = dv
-                _DL_CACHE_BYTES[0] += nbytes
+            with _DL_CACHE_LOCK:
+                if (bid, rid) in _DL_CACHE:  # another thread loaded it
+                    continue
+                while _DL_CACHE and \
+                        _DL_CACHE_BYTES[0] + nbytes > _DL_CACHE_MAX_BYTES:
+                    old = _DL_CACHE.pop(next(iter(_DL_CACHE)))
+                    _DL_CACHE_BYTES[0] -= int(old[0].nbytes
+                                              + old[1].nbytes)
+                if nbytes <= _DL_CACHE_MAX_BYTES:
+                    _DL_CACHE[(bid, rid)] = dv
+                    _DL_CACHE_BYTES[0] += nbytes
     # ranges are ascending disjoint doc intervals, so concatenation in
     # range_id order keeps docs globally sorted (single range: no copy)
     if len(rids) == 1:
@@ -316,7 +333,10 @@ def search_doc_partitioned(
 ) -> DataFrame:
     """Shared driver for the fast and WAND paths. topk_fn: DAAT kernel
     (term_rows=[(w, idf, [payload,...])], k, mode, k1, b, avgdl, dl,
-    theta0=) → [(doc_id, score)] ordered (score desc, doc_id asc).
+    theta0=) → [(doc_id, score)] ordered (score desc, doc_id asc); its
+    ``driver_max_postings`` attribute is the size rule under which a
+    driver-analyzed batch is scored on the driver (see the module
+    docstring's driver shape).
 
     analysis: 'driver' | 'distributed' | 'auto' — see search_exact.
 
@@ -334,6 +354,8 @@ def search_doc_partitioned(
     per-range θ restarts lose as n_ranges grows (10^4+ ranges at the
     10^12-doc sizing).
 
+    Seeding applies to the Spark shapes only (the driver shape scores
+    one group, so there is no per-range θ restart to make up for).
     Driver-analyzed batches seed through an O(Q)-row driver collect;
     distributed batches stay fully executor-side (per-query densest
     range and k-th seed computed by joins, seeds delivered to the range
@@ -392,16 +414,30 @@ def search_doc_partitioned(
         n_q, do_seed = nq, False
 
     if wqt is not None:
-        # driver-analyzed batch: the weighted-terms table is SMALL — ship
-        # it to the range tasks in the kernel closure and ship each
-        # matched segment ONCE per range. (The join formulation emits one
-        # row per (query, segment), so a 500-query batch over shared hot
-        # terms shipped each hot segment's payload ~500× through the
-        # shuffle + Arrow — measured 4× wall on the 500k scaling bench.)
-        # The candidates merge and get their urls in one task.
+        # every driver-analyzed search counts toward the serving table's
+        # warm-up, whichever shape scores it: the persist is lazy, so a
+        # build served from the driver pays nothing until a Spark batch
+        # runs — and that batch then finds the table
+        sp = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        cached = _serving_segs(spark, index_dir, bid, sp, index_bytes)
+        # driver shape: the matched postings (Σ df over the batch's
+        # (query, term) rows — the work the kernel does) fit the kernel's
+        # size rule, so scoring them here beats the scoring and finish
+        # jobs' fixed cost
+        if float(wqt["df"].sum()) <= topk_fn.driver_max_postings:
+            return _search_on_driver(spark, index_dir, term_pred,
+                                     config.num_shards, wqt, k, mode, k1,
+                                     b, avgdl, topk_fn, bid)
+        # broadcast shape: the weighted-terms table is SMALL — ship it to
+        # the range tasks in the kernel closure and ship each matched
+        # segment ONCE per range. (The join formulation emits one row per
+        # (query, segment), so a 500-query batch over shared hot terms
+        # shipped each hot segment's payload ~500× through the shuffle +
+        # Arrow — measured 4× wall on the 500k scaling bench.) The
+        # candidates merge and get their urls in one task.
         cand, owned = _score_ranges_broadcast(
             spark, index_dir, term_pred, config, wqt, k, mode, k1, b,
-            avgdl, topk_fn, do_seed, bid, index_bytes)
+            avgdl, topk_fn, do_seed, bid, sp, cached)
         return release_with(finish_topk(index_dir, cand, k), *owned)
     else:
         # distributed batch: query table is executor-resident; fall back
@@ -432,6 +468,38 @@ def search_doc_partitioned(
         topk = (cand.withColumn("rank", F.row_number().over(w))
                     .filter(F.col("rank") <= k))
         return attach_urls(spark, index_dir, topk)
+
+
+# RESULT_SCHEMA as Arrow: the driver shape hands Spark a typed table
+_RESULT_ARROW = pa.schema([("query_id", pa.int64()), ("rank", pa.int32()),
+                           ("doc_id", pa.int64()), ("url", pa.string()),
+                           ("score", pa.float64())])
+
+
+def _search_on_driver(spark, index_dir, term_ids, num_shards, wqt, k,
+                      mode, k1, b, avgdl, topk_fn, bid) -> DataFrame:
+    """A driver-sized batch scored without Spark: the matched segments
+    come from a pruned pyarrow read of ``shards/`` (read_term_rows), and
+    the very code the range tasks run scores them — _score_range_broadcast
+    over ONE group holding every range (exact by the same argument as
+    per-group top-k; θ seeding has no cross-range threshold to restore)
+    and finish_rows. The result is a LocalRelation, so the caller's action
+    runs no job. A failed read raises; there is no fallback to Spark."""
+    segs = read_term_rows(index_dir, "shards", term_ids, num_shards,
+                          ["term_id", "range_id", "doc_lo",
+                           "payload"]).to_pandas()
+    segs["_g"] = 0
+    dl = (_dl_for_ranges(index_dir, bid, segs["range_id"].unique())
+          if mode == "bm25" else None)
+    unpacked = tuple(a.tolist() for a in _wqt_groups(wqt))
+    cand = _score_range_broadcast(segs, unpacked, dl, k, mode, k1, b,
+                                  avgdl, topk_fn)
+    out = finish_rows(os.path.join(index_dir, "docs"),
+                      cand["query_id"].to_numpy(), cand["doc_id"].to_numpy(),
+                      cand["score"].to_numpy(), k)
+    return spark.createDataFrame(
+        pa.Table.from_pandas(out, schema=_RESULT_ARROW,
+                             preserve_index=False), RESULT_SCHEMA)
 
 
 # worker-side unpacked query packs, keyed by the pack's uuid token (never
@@ -678,14 +746,16 @@ def _merge_topk_blobs(blobs: DataFrame, k: int, sp: int,
 # query-INDEPENDENT — for a stable index, every broadcast-shape batch
 # re-ran the same pruned parquet scan + shuffle as pure per-batch fixed
 # cost (the dominant term in the per-batch scaling ratio once the
-# kernels got fast). From the second broadcast-shape search against the
+# kernels got fast). From the second driver-analyzed search against the
 # same build, the FULL slot-keyed segment table is persisted
 # (MEMORY_AND_DISK — the cluster analog is the index resident across
 # the serving fleet's memory/SSD, partitioned by doc range); per batch
 # only an in-memory term filter remains, which preserves the hash
 # partitioning on _g, so the scoring stage needs NO exchange and NO
-# parquet scan. Keyed by (build_id, shuffle partitions); bounded to
-# _SEG_CACHE_MAX_ENTRIES builds and gated on the published index_bytes.
+# parquet scan. Keyed by (applicationId, build_id, shuffle partitions):
+# a table persisted by a stopped session is never handed to its
+# successor in the same process. Both dicts hold at most
+# _SEG_CACHE_MAX_ENTRIES keys; gated on the published index_bytes.
 _SEG_CACHE: dict = {}
 _SEG_CACHE_SEEN: dict = {}
 _SEG_CACHE_MAX_BYTES = int(os.environ.get("W2D_SEG_CACHE_MAX_BYTES",
@@ -694,24 +764,36 @@ _SEG_CACHE_MAX_ENTRIES = 2
 _SEG_CACHE_LOCK = threading.Lock()
 
 
-def _serving_segs(spark, index_dir, bid, sp, slot_arr, index_bytes):
-    """Persisted slot-keyed FULL segment table for (build, sp), or None
-    when the index exceeds _SEG_CACHE_MAX_BYTES or the table is not yet
-    warranted (first call on a build stays on the per-batch pruned scan
-    — one-shot batches should not pay a whole-index materialization).
-    Lookup, persist and insert hold one lock: two threads warming one
-    build must not both persist the table and orphan one copy."""
+def _serving_segs(spark, index_dir, bid, sp, index_bytes):
+    """Persisted slot-keyed FULL segment table for (session, build, sp),
+    or None when the index exceeds _SEG_CACHE_MAX_BYTES or the table is
+    not yet warranted (first call on a build stays on the per-batch
+    pruned scan — one-shot batches should not pay a whole-index
+    materialization). The persist is lazy: nothing is read until a
+    broadcast-shape batch runs on the table. Lookup, persist and insert
+    hold one lock: two threads warming one build must not both persist
+    the table and orphan one copy."""
     if (index_bytes or 0) > _SEG_CACHE_MAX_BYTES:
         return None
-    key = (bid, sp)
+    app = spark.sparkContext.applicationId
+    key = (app, bid, sp)
     with _SEG_CACHE_LOCK:
+        for d in (_SEG_CACHE, _SEG_CACHE_SEEN):
+            # entries of a stopped session: its persisted data is gone
+            for stale in [key_ for key_ in d if key_[0] != app]:
+                del d[stale]
         df = _SEG_CACHE.get(key)
         if df is not None:
             return df
-        _SEG_CACHE_SEEN[key] = _SEG_CACHE_SEEN.get(key, 0) + 1
-        if _SEG_CACHE_SEEN[key] < 2:
+        seen = _SEG_CACHE_SEEN.pop(key, 0) + 1
+        if seen < 2:
+            while len(_SEG_CACHE_SEEN) >= _SEG_CACHE_MAX_ENTRIES:
+                _SEG_CACHE_SEEN.pop(next(iter(_SEG_CACHE_SEEN)))
+            _SEG_CACHE_SEEN[key] = seen
             return None
         from pyspark import StorageLevel
+        from word2doc_spark.index.build import _partition_slots
+        slot_arr = F.array(*[F.lit(x) for x in _partition_slots(sp)])
         segs = (read_table(spark, index_dir, "shards")
                 .select("term_id", "range_id", "doc_lo", "n_postings",
                         "payload")
@@ -776,13 +858,14 @@ def _broadcast_runner(index_dir, bid, bc, k, mode, k1, b, avgdl,
 
 def _score_ranges_broadcast(spark, index_dir, term_pred, config, wqt,
                             k, mode, k1, b, avgdl, topk_fn, do_seed,
-                            bid, index_bytes=0):
+                            bid, sp, cached):
     """Range-grouped scoring with the query table in the kernel closure.
     Shuffle volume = each matched segment once (keyed by range_id) —
     independent of batch size; parallelism = n_ranges tasks (set ≫ cores
     at build time). In serving mode (repeat batches on one build) even
-    that per-batch exchange disappears: the scoring stage reads the
-    persisted slot-keyed segment table (_serving_segs). Returns per-group
+    that per-batch exchange disappears: the scoring stage reads
+    ``cached``, the persisted slot-keyed segment table of ``sp`` shuffle
+    partitions (_serving_segs; None = scan parquet). Returns per-group
     candidate rows (CAND_SCHEMA), or blob-merged top-k rows (TOPK_SCHEMA)
     above _PACK_MIN_CANDIDATES — either is input to exact.finish_topk —
     plus the call's materializations, which the search result owns
@@ -799,12 +882,9 @@ def _score_ranges_broadcast(spark, index_dir, term_pred, config, wqt,
     # balls-in-bins lumping, measured on the 500k bench). Merging several
     # ranges per task is exact — see _score_range_broadcast.
     from word2doc_spark.index.build import _partition_slots
-    sp = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     slots = _partition_slots(sp)
     slot_arr = F.array(*[F.lit(x) for x in slots])
 
-    cached = _serving_segs(spark, index_dir, bid, sp, slot_arr,
-                           index_bytes)
     if cached is not None:
         segs = (_prune_cached_segs(cached, term_pred)
                 .select("range_id", "term_id", "doc_lo", "payload", "_g"))

@@ -353,6 +353,12 @@ def wand_topk(
     return out
 
 
+# driver-shape size rule (see fast_topk.driver_max_postings): WAND's
+# per-query python loop breaks even with the Spark shape near 100k
+# matched postings
+wand_topk.driver_max_postings = 100_000
+
+
 def search_wand(
     spark: SparkSession,
     index_dir: str,
