@@ -4,8 +4,7 @@
     spark-submit --py-files word2doc_spark.zip scripts/run_queries.py \\
         --index-dir /path/to/index --queries /path/to/queries.parquet \\
         --out /path/to/results [--k 10] [--path fast|wand|exact] \\
-        [--score-mode drqa|bm25] [--strict] \\
-        [--analysis auto|driver|distributed] [--seed-theta auto|on|off]
+        [--score-mode drqa|bm25] [--strict] [--seed-theta auto|on|off]
 
 queries parquet schema: (query_id long, query string). Results are written
 as parquet (query_id, rank, doc_id, url, score).
@@ -26,13 +25,6 @@ def main(argv=None):
     p.add_argument("--strict", action="store_true",
                    help="raise on queries with zero valid terms (reference "
                         "B9 semantics)")
-    p.add_argument("--analysis", default="auto",
-                   choices=["auto", "driver", "distributed"],
-                   help="query-batch analysis mode: 'driver' collects the "
-                        "batch (small batches), 'distributed' keeps "
-                        "tokenization + term weighting executor-side "
-                        "(multi-million-query batches), 'auto' switches "
-                        "on batch size")
     p.add_argument("--seed-theta", default="auto",
                    choices=["auto", "on", "off"],
                    help="WAND pruning-threshold seeding across doc ranges "
@@ -56,7 +48,7 @@ def main(argv=None):
     queries = spark.read.parquet(args.queries)
     fn = {"fast": search_fast, "wand": search_wand,
           "exact": search_exact}[args.path]
-    kw = {"analysis": args.analysis}
+    kw = {}
     if args.path == "wand":
         kw["seed_theta"] = {"auto": "auto", "on": True,
                             "off": False}[args.seed_theta]

@@ -40,3 +40,16 @@ def scoring_gate(monkeypatch):
             monkeypatch.setattr(kernel, "driver_max_postings",
                                 float("inf") if on else -1)
     return force
+
+
+@pytest.fixture
+def slicing(monkeypatch):
+    """``slicing(n)`` sends every list-built query batch through the
+    executor-analyzed path in slices of about ``n`` queries, by patching
+    the driver-analysis bound to 0 and the slice size to ``n``."""
+    from word2doc_spark.query import exact
+
+    def force(slice_queries: int):
+        monkeypatch.setattr(exact, "_DRIVER_ANALYZE_MAX", 0)
+        monkeypatch.setattr(exact, "SLICE_MAX_QUERIES", slice_queries)
+    return force

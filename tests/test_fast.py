@@ -131,6 +131,24 @@ def test_grouped_fast_matches_per_query(mode):
     and rank order as per-query fast_topk with scores within the last
     ulp (reduceat reduces pairwise, bincount sequentially), including
     multi-segment chains and the idf=0 zero-scale fallback."""
+    _check_grouped_vs_per_query(mode)
+
+
+@pytest.mark.parametrize("base,per_posting", [(0, 1), (-10 ** 9, 1)])
+def test_grouped_fast_sparse_rule_matches_per_query(monkeypatch, base,
+                                                    per_posting):
+    """Queries the dense-vs-sparse rule sends to fast_topk inside a
+    grouped task — some of them (a low base), or all — score exactly as
+    the per-query reference, next to dense-path queries of the same
+    task."""
+    from word2doc_spark.query import fast as FM
+    monkeypatch.setattr(FM, "_SPARSE_ACTIVE_BASE", base)
+    monkeypatch.setattr(FM, "_SPARSE_ACTIVE_PER_POSTING", per_posting)
+    for mode in ("drqa", "bm25"):
+        _check_grouped_vs_per_query(mode)
+
+
+def _check_grouped_vs_per_query(mode):
     from word2doc_spark.query.fast import _grouped_fast
     from word2doc_spark.query.kcache import TaskCache
 

@@ -152,42 +152,75 @@ def test_sparse_dl_guard():
         dl[np.array([9, 11])]
 
 
-def test_distributed_analysis_identity(spark, built):
-    """analysis='distributed' (executor-side tokenize + stats join) gives
-    the same rows as the driver-side collect path on all three search
-    surfaces (VERDICT r2 item 5)."""
-    from word2doc_spark.query.fast import search_fast
-    from word2doc_spark.query.wand import search_wand
+def _keyed(res):
+    return sorted((r["query_id"], r["rank"], r["doc_id"], r["score"])
+                  for r in res)
+
+
+def _assert_same_rows(got, want):
+    assert [g[:3] for g in got] == [w[:3] for w in want]
+    for g, w in zip(got, want):
+        assert math.isclose(g[3], w[3], rel_tol=1e-9, abs_tol=1e-12)
+
+
+def test_distributed_analysis_identity(spark, built, slicing,
+                                       scoring_gate):
+    """A batch past the driver-analysis bound is analyzed executor-side
+    and scored in slices: the same rows (scores within 1e-9) as the
+    default driver-analyzed path on all three search surfaces, with fast
+    and WAND slices in both shapes. The query ids are strided — every id
+    is ≡ 0 mod the slice count — so a raw pmod(query_id, n) slice key
+    would put the whole batch in one slice; the hashed key must spread
+    it over several."""
+    from word2doc_spark.index.manifest import Manifest
+    from word2doc_spark.query.exact import prepare_weighted_terms
+
+    built, _ = built
+    n_slices = 5
+    qdf = spark.createDataFrame(
+        [(qid * n_slices, q) for qid, q in QUERIES],
+        "query_id long, query string")
+    searches = (search_exact, search_fast, search_wand)
+    want = {fn.__name__: _keyed(fn(spark, built, qdf, k=5,
+                                   score_mode="bm25").collect())
+            for fn in searches}
+    assert all(want.values())
+
+    slicing(-(-len(QUERIES) // n_slices))
+    config, stats = Manifest(built).load()
+    slices = prepare_weighted_terms(spark, built, qdf, config,
+                                    int(stats["n_docs"]), False)
+    assert len(slices) >= 2
+    qids = [set(s["query_id"]) for s in slices]
+    assert sum(map(len, qids)) == len(set().union(*qids))
+    for on in (True, False):
+        scoring_gate(on)
+        for fn in searches:
+            got = _keyed(fn(spark, built, qdf, k=5,
+                            score_mode="bm25").collect())
+            _assert_same_rows(got, want[fn.__name__])
+
+
+def test_distributed_strict_raises(spark, built, slicing):
+    """strict=True on a sliced batch raises for a stopword-only query,
+    and the analyzed batch it persisted for the check is released."""
+    import gc
 
     built, _ = built
 
-    qdf = spark.createDataFrame(
-        [(1, "spark shuffle partition"), (2, "crawl warc html"),
-         (3, "zzz-no-such-term"), (4, "the and of")],
-        "query_id long, query string")
-    for fn in (search_exact, search_fast, search_wand):
-        drv = fn(spark, built, qdf, k=5, score_mode="bm25",
-                 analysis="driver").collect()
-        dst = fn(spark, built, qdf, k=5, score_mode="bm25",
-                 analysis="distributed").collect()
-        assert sorted(((r["query_id"], r["rank"], r["doc_id"],
-                        round(r["score"], 9)) for r in drv)) == \
-            sorted(((r["query_id"], r["rank"], r["doc_id"],
-                     round(r["score"], 9)) for r in dst)), fn.__name__
-
-
-def test_distributed_strict_raises(spark, built):
-    import pytest
-    from word2doc_spark.query.fast import search_fast
-
-    built, _ = built
+    def n_persisted():
+        gc.collect()
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
 
     qdf = spark.createDataFrame(
-        [(1, "spark shuffle"), (2, "the and of")],  # q2: stopwords only
+        [(1, "spark shuffle"), (2, "the and of"),  # q2: stopwords only
+         (3, "crawl warc html")],
         "query_id long, query string")
+    before = n_persisted()
+    slicing(1)
     with pytest.raises(RuntimeError, match="No valid word"):
-        search_fast(spark, built, qdf, k=5, strict=True,
-                    analysis="distributed").collect()
+        search_fast(spark, built, qdf, k=5, strict=True).collect()
+    assert n_persisted() == before
 
 
 def test_auto_n_ranges():

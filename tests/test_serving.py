@@ -273,6 +273,43 @@ def test_env_reads_are_byte_budgets_only():
     assert not extra, f"env reads beyond the byte budgets: {extra}"
 
 
+def test_library_threads_are_inheritable():
+    """Library threads submit Spark jobs, so they must carry the
+    caller's thread-local properties (job group, scheduler pool):
+    pyspark.InheritableThread, never a plain threading.Thread."""
+    import pathlib
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "word2doc_spark"
+    hits = [f"{path.relative_to(pkg)}:{i}"
+            for path in sorted(pkg.rglob("*.py"))
+            for i, line in enumerate(path.read_text().splitlines(), 1)
+            if "threading.Thread(" in line]
+    assert not hits, f"plain threads: {hits}"
+
+
+def test_build_jobs_stay_in_the_callers_job_group(spark, tmp_path,
+                                                  monkeypatch):
+    """Every job a build submits — from its concurrent-job threads, its
+    dl thread and its python-worker warm-up too — lands in the job group
+    the caller set, so the caller's cancelJobGroup reaches all of them."""
+    from word2doc_spark.index import build as B
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    # the warm-up runs once per application: make this build run it
+    monkeypatch.setattr(B, "_WARMED_SESSIONS", set())
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("caller", "job-group test build")
+    try:
+        build_index(spark, synthetic_pages(spark, 40, num_partitions=2),
+                    str(tmp_path / "idx"), CFG, input_token="job-group")
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert tracker.getJobIdsForGroup("caller")
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+
+
 def test_library_writes_no_session_conf():
     """Session conf belongs to the caller: a library write of it races
     every other thread on the same SparkSession. Per-call APIs (writer
@@ -420,6 +457,51 @@ def test_derived_dataframe_survives_result_release(spark, built,
     gc.collect()
     assert not segs[0].is_cached
     assert sorted(tuple(r) for r in derived.collect()) == want
+
+
+def test_sliced_search_releases_what_it_persists(spark, built,
+                                                monkeypatch, slicing,
+                                                scoring_gate):
+    """A multi-slice search persists the analyzed batch for its strict
+    check and the weighted slices while it collects them — both are
+    released before it returns — and each slice's seed-pass persist,
+    which the result owns. Once the result is collected and dropped, the
+    session's persisted-RDD count is back at its baseline."""
+    import gc
+    from word2doc_spark.query import ranges as R
+    from word2doc_spark.query.wand import search_wand
+
+    def n_persisted():
+        gc.collect()
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    owned = []
+
+    def recording_release(owner, *resources):
+        owned.extend(r for r in resources if hasattr(r, "storageLevel"))
+        return real_release(owner, *resources)
+
+    real_release = R.release_with
+    monkeypatch.setattr(R, "release_with", recording_release)
+    # Spark shape, no serving table: each slice's seed pass persists its
+    # own matched segments
+    scoring_gate(False)
+    monkeypatch.setattr(R, "_SEG_CACHE_MAX_BYTES", -1)
+    qdf = spark.createDataFrame(QUERIES, "query_id long, query string")
+    want = sorted(tuple(r) for r in search_wand(
+        spark, built, qdf, k=3, score_mode="drqa").collect())
+    owned.clear()
+    before = n_persisted()
+    slicing(1)
+    res = search_wand(spark, built, qdf, k=3, score_mode="drqa",
+                      strict=True, seed_theta=True)
+    # the seed passes already ran; only their persists are still held
+    assert len(owned) >= 2
+    assert n_persisted() == before + len(owned)
+    got = sorted(tuple(r) for r in res.collect())
+    assert [g[:3] for g in got] == [w[:3] for w in want]
+    del res
+    assert n_persisted() == before
 
 
 def test_release_with_unpersists_when_owner_is_collected(spark):
@@ -588,8 +670,8 @@ def test_driver_gate_is_matched_postings_bound(spark, built, monkeypatch):
 
     config, stats = Manifest(built).load()
     qdf = spark.createDataFrame(QUERIES, "query_id long, query string")
-    _, _, wqt, _ = prepare_weighted_terms(
-        spark, built, qdf, config, int(stats["n_docs"]), False, "driver")
+    (wqt,) = prepare_weighted_terms(spark, built, qdf, config,
+                                    int(stats["n_docs"]), False)
     bound = int(wqt["df"].sum())
     for kernel, search in ((fast_topk, search_fast),
                            (wand_topk, search_wand)):

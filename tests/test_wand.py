@@ -176,17 +176,19 @@ def test_wand_seeding_differential_on_index(spark, built, scoring_gate):
 
 
 @pytest.mark.parametrize("mode", ["drqa", "bm25"])
-def test_wand_seeding_distributed_identity(spark, built, mode):
-    """Distributed-analyzed batch + θ seeding (the executor-side seed
-    join path): identical rows to the exact path and the unseeded run."""
+def test_wand_seeding_distributed_identity(spark, built, mode, slicing,
+                                           scoring_gate):
+    """An executor-analyzed batch scored in slices, each slice on the
+    Spark shape with and without θ seeding: identical rows to the exact
+    path on the default (driver-analyzed) batch."""
     qdf = spark.createDataFrame(QUERIES, "query_id long, query string")
+    exact = search_exact(spark, built, qdf, k=6, score_mode=mode).collect()
+    slicing(3)
+    scoring_gate(False)
     seeded = search_wand(spark, built, qdf, k=6, score_mode=mode,
-                         analysis="distributed",
                          seed_theta=True).collect()
     plain = search_wand(spark, built, qdf, k=6, score_mode=mode,
-                        analysis="distributed",
                         seed_theta=False).collect()
-    exact = search_exact(spark, built, qdf, k=6, score_mode=mode).collect()
     key = lambda r: (r["query_id"], r["rank"], r["doc_id"])
     assert sorted(map(key, seeded)) == sorted(map(key, plain)) \
         == sorted(map(key, exact))
@@ -206,15 +208,17 @@ def test_seed_range_carries_rare_term_mass(spark, built):
     from word2doc_spark.index.manifest import Manifest
     from word2doc_spark.query import ranges as R
     from word2doc_spark.query.exact import (_matched_segments,
-                                            prepare_weighted_terms)
+                                            prepare_weighted_terms,
+                                            term_ids_of)
 
     config, stats = Manifest(built).load()
     n_docs = int(stats["n_docs"])
     # "137" is a title number → df≈1 (max idf); the rest are topic words
     qdf = spark.createDataFrame([(1, "137 spark shuffle partition")],
                                 "query_id long, query string")
-    _, term_pred, wqt, _ = prepare_weighted_terms(
-        spark, built, qdf, config, n_docs, False, "driver")
+    (wqt,) = prepare_weighted_terms(spark, built, qdf, config, n_docs,
+                                    False)
+    term_pred = term_ids_of(wqt)
     rare_tid = int(wqt.loc[(wqt["w"] * wqt["idf"]).idxmax(), "term_id"])
     qterms = spark.createDataFrame(
         wqt[["query_id", "term_id", "w", "idf"]],

@@ -65,13 +65,13 @@ import hashlib
 import json
 import os
 import shutil
-import threading
 import time
 import uuid
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
@@ -620,6 +620,8 @@ def _concurrent_jobs(*named_fns):
     """Run independent Spark actions from driver threads so the tail of
     one job back-fills executors freed by the other (the scheduler runs
     concurrent jobs FIFO — exactly the overlap shape of guide §2.6).
+    InheritableThreads, so the jobs carry the caller's thread-local
+    properties (job group, scheduler pool) like the caller's own jobs.
     Re-raises the first failure after all threads join."""
     errs: list = []
     threads = []
@@ -629,7 +631,7 @@ def _concurrent_jobs(*named_fns):
                 fn()
             except BaseException as e:  # noqa: BLE001 — re-raised below
                 errs.append((name, e))
-        t = threading.Thread(target=w, name=f"build-{name}", daemon=True)
+        t = InheritableThread(w, name=f"build-{name}", daemon=True)
         t.start()
         threads.append(t)
     for t in threads:
@@ -669,7 +671,7 @@ def _warm_python_workers(spark: SparkSession):
         except Exception:
             pass
 
-    th = threading.Thread(target=_run, daemon=True)
+    th = InheritableThread(_run, daemon=True)
     th.start()
     return th
 
@@ -940,8 +942,8 @@ def build_index(
                 except BaseException as e:  # noqa: BLE001 — re-raised below
                     dl_errs.append(e)
 
-            dl_thread = threading.Thread(target=_dl_work, name="build-dl",
-                                         daemon=True)
+            dl_thread = InheritableThread(_dl_work, name="build-dl",
+                                          daemon=True)
             dl_thread.start()
         # exclude the dl blobs — segment encode consumes posting blobs
         # only (layout-adaptive pruning, see _staged_part)

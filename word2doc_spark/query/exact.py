@@ -7,9 +7,14 @@ reference's in-process ``batch_closest_docs`` —
 (query_id, term_id, qtf, w, idf) → broadcast-join against the matched
 posting SEGMENTS (term_id-pruned shard scan) → decode+score inside one
 Arrow pass → groupBy(query_id, doc_id) sum → per-query top-k window with
-deterministic ties (score desc, doc_id asc) → ordering + url lookup
-(one task for driver-analyzed batches, ``finish_topk``; the broadcast
-url join ``attach_urls`` for distributed ones).
+deterministic ties (score desc, doc_id asc) → ordering + url lookup in
+one task (``finish_topk``).
+
+Batch sizes (prepare_weighted_terms): up to _DRIVER_ANALYZE_MAX queries
+are analyzed on the driver; a bigger batch is analyzed and weighted
+executor-side in one pass and collected in slices of about
+SLICE_MAX_QUERIES queries, each of which runs the shape above; the
+slices' results are unioned.
 
 Scale notes:
 * the segment scan is pruned two ways: parquet row-group predicate
@@ -33,6 +38,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import functools
 import os
 
 import numpy as np
@@ -53,22 +59,23 @@ RESULT_SCHEMA = ("query_id long, rank int, doc_id long, url string, "
 # useful parquet filter (and bloats the plan); switch to a semi-join
 _ISIN_PRUNE_LIMIT = 20_000
 
-# above this many queries in a batch, driver-side analysis (one collect of
-# the batch) stops being safe — switch to the distributed pipeline where
-# analysis/weighting stay executor-side (ADVICE r2: multi-million-query
-# batches must not funnel through the driver)
-DISTRIBUTED_ANALYSIS_THRESHOLD = 50_000
-
-# within driver mode, batches above this size tokenize executor-side and
-# collect only the weighted-terms result (perf crossover, not a safety
-# bound — see prepare_weighted_terms)
+# batches above this size tokenize executor-side and collect only the
+# weighted-terms result (perf crossover, not a safety bound — see
+# prepare_weighted_terms)
 _DRIVER_ANALYZE_MAX = 4096
+
+# an executor-analyzed batch is collected and scored in slices of about
+# this many queries, so no single driver collect, query pack or one-task
+# finish grows with the batch (ADVICE r2: multi-million-query batches
+# must not funnel through the driver in one piece)
+SLICE_MAX_QUERIES = 50_000
 
 
 def analyze_queries(queries: DataFrame, config: IndexConfig) -> DataFrame:
-    """Distributed variant: (query_id, query) → (query_id, term_id, qtf);
-    identical analysis pipeline as documents (tfidf_doc_ranker.py:84-107
-    semantics). Used when a query batch is too large to collect."""
+    """Executor-side variant: (query_id, query) → (query_id, term_id,
+    qtf); identical analysis pipeline as documents
+    (tfidf_doc_ranker.py:84-107 semantics). Used when a query batch is
+    too large to analyze serially on the driver."""
     ngram, hash_size = config.ngram, config.hash_size
     tokenizer = config.analyzer
 
@@ -127,36 +134,32 @@ def term_in(term_ids: list):
     return F.expr(f"term_id IN ({','.join(str(int(t)) for t in term_ids)})")
 
 
-def _prune_terms(df: DataFrame, term_ids,
-                 num_shards: int) -> DataFrame:
-    """Prune a shard-partitioned table to the query batch's terms.
-    ``term_ids`` is a list (driver-analyzed batch) or a DataFrame with a
-    distinct ``term_id`` column (distributed batch: shard ids come from a
-    tiny ≤num_shards-row collect; term pruning is a broadcast semi-join,
-    the same shape the >_ISIN_PRUNE_LIMIT list path already uses)."""
-    if isinstance(term_ids, DataFrame):
-        shard_ids = sorted(
-            r["s"] for r in term_ids.select(
-                F.pmod(F.col("term_id"), F.lit(num_shards))
-                .cast("int").alias("s")).distinct().collect())
-        if len(shard_ids) < num_shards:
-            df = df.filter(F.col("shard_id").isin(shard_ids))
-        return df.join(F.broadcast(term_ids.select("term_id")),
-                       "term_id", "left_semi")
-    shard_ids = sorted({t % num_shards for t in term_ids})
-    if len(shard_ids) < num_shards:
-        df = df.filter(F.col("shard_id").isin(shard_ids))
+def filter_terms(df: DataFrame, term_ids: list) -> DataFrame:
+    """``df`` restricted to the given term ids: one parsed IN filter (on
+    a parquet scan, pushed down to the row groups) up to _ISIN_PRUNE_LIMIT
+    terms, a broadcast left-semi join against an Arrow-built term table
+    above. Both keep the streamed side's partitioning, so a filtered
+    hash-partitioned table needs no new exchange downstream."""
     if len(term_ids) <= _ISIN_PRUNE_LIMIT:
-        # row-group predicate pushdown on term_id
         return df.filter(term_in(term_ids))
-    spark = df.sparkSession
-    wanted = spark.createDataFrame([(int(t),) for t in term_ids],
-                                   "term_id long")
+    wanted = df.sparkSession.createDataFrame(
+        pa.table({"term_id": pa.array(term_ids, pa.int64())}),
+        "term_id long")
     return df.join(F.broadcast(wanted), "term_id", "left_semi")
 
 
+def _prune_terms(df: DataFrame, term_ids: list,
+                 num_shards: int) -> DataFrame:
+    """Prune a shard-partitioned table to the query batch's terms: hive
+    partition pruning on the terms' shards, then filter_terms."""
+    shard_ids = sorted({t % num_shards for t in term_ids})
+    if len(shard_ids) < num_shards:
+        df = df.filter(F.col("shard_id").isin(shard_ids))
+    return filter_terms(df, term_ids)
+
+
 def _matched_segments(spark: SparkSession, index_dir: str,
-                      term_ids, num_shards: int,
+                      term_ids: list, num_shards: int,
                       with_counts: bool = False) -> DataFrame:
     segs = read_table(spark, index_dir, "shards")
     cols = ["term_id", "range_id", "doc_lo", "payload"]
@@ -220,68 +223,55 @@ def weighted_query_terms(spark: SparkSession, index_dir: str,
 
 
 def weighted_query_terms_distributed(spark: SparkSession, index_dir: str,
-                                     qt: DataFrame, n_docs: int,
-                                     with_df: bool = False) -> DataFrame:
-    """Distributed twin of ``weighted_query_terms``: join the analyzed
+                                     qt: DataFrame, n_docs: int) -> DataFrame:
+    """Executor-side twin of ``weighted_query_terms``: join the analyzed
     query terms against the ``terms/`` stats table executor-side instead
-    of collecting per-term stats to the driver. Terms absent from the
-    index and zero-weight terms drop, exactly as in the driver variant.
-    The stats side is vocabulary-bounded (≤ hash_size rows), the qt side
-    is batch-sized — a plain shuffle join AQE can re-plan."""
+    of reading per-term stats on the driver. Terms absent from the index
+    and zero-weight terms drop, exactly as in the driver variant. The
+    stats side is vocabulary-bounded (≤ hash_size rows), the qt side is
+    batch-sized — a plain shuffle join AQE can re-plan."""
     stats = read_table(spark, index_dir, "terms").select("term_id", "df")
     idf = F.greatest(
         F.lit(0.0),
         F.log((F.lit(float(n_docs)) - F.col("df") + 0.5)
               / (F.col("df") + 0.5)))
-    cols = ["query_id", "term_id", "w", "idf"]
-    if with_df:
-        cols.append("df")
     return (qt.join(stats, "term_id")
               .withColumn("idf", idf)
               .withColumn("w", F.log1p(F.col("qtf").cast("double"))
                           * F.col("idf"))
               .filter(F.col("w") > 0.0)
-              .select(*cols))
+              .select("query_id", "term_id", "w", "idf", "df"))
 
 
-def resolve_analysis_mode(queries: DataFrame, analysis: str):
-    """'driver' | 'distributed' | 'auto' → (concrete mode, head), where
-    head is the collected batch as (query_ids, texts) columns, or None.
+def probe_batch(queries: DataFrame):
+    """The batch as collected (query_ids, texts) columns when it holds at
+    most _DRIVER_ANALYZE_MAX queries, else None.
 
-    The auto probe first collects a BOUNDED limit(_DRIVER_ANALYZE_MAX+1)
-    head as one Arrow table — toArrow runs the limit as a single
-    all-partition job (a Row collect runs the staged take: 1, 4, 16, …
-    partitions = 2-4 jobs): a batch small enough for SERIAL driver
-    analysis is then fully in hand with one tiny job and no second
-    collect. A bigger batch escalates to a bounded COUNT with no row
-    materialization (the old probe shipped up to THRESHOLD rows to the
-    driver only to measure the batch's size — ~1.2 s of serial wall per
-    40k-query batch, pure per-batch fixed cost) to pick
-    driver-resident-wqt vs fully distributed analysis."""
-    if analysis in ("driver", "distributed"):
-        return analysis, None
-    if analysis != "auto":
-        raise ValueError(analysis)
+    A LocalRelation batch is driver-resident already: its Row collect
+    runs no job (NOTE: list-built createDataFrame goes through
+    parallelize and is NOT local; only pandas/Arrow input produces a
+    LocalRelation). Any other batch is probed with a BOUNDED
+    limit(_DRIVER_ANALYZE_MAX+1) head collected as one Arrow table —
+    toArrow runs the limit as a single all-partition job (a Row collect
+    runs the staged take: 1, 4, 16, … partitions = 2-4 jobs) — so a batch
+    small enough for SERIAL driver analysis is fully in hand after one
+    tiny job and no second collect."""
     if queries.isLocal():
-        # a LocalRelation batch is driver-resident already — no job
-        # needed to know it is small (NOTE: list-built createDataFrame
-        # goes through parallelize and is NOT local; only pandas/Arrow
-        # input produces a LocalRelation)
-        return "driver", None
+        rows = queries.select("query_id", "query").collect()
+        if len(rows) > _DRIVER_ANALYZE_MAX:
+            return None
+        return [r[0] for r in rows], [r[1] for r in rows]
     tbl = (queries.select("query_id", "query")
            .limit(_DRIVER_ANALYZE_MAX + 1).toArrow())
-    if tbl.num_rows <= _DRIVER_ANALYZE_MAX:
-        return "driver", (tbl.column("query_id").to_numpy(),
-                          tbl.column("query").to_pylist())
-    n = (queries.select("query_id")
-         .limit(DISTRIBUTED_ANALYSIS_THRESHOLD + 1).count())
-    return ("distributed" if n > DISTRIBUTED_ANALYSIS_THRESHOLD
-            else "driver"), None
+    if tbl.num_rows > _DRIVER_ANALYZE_MAX:
+        return None
+    return (tbl.column("query_id").to_numpy(),
+            tbl.column("query").to_pylist())
 
 
 def _strict_check_distributed(queries: DataFrame, qt: DataFrame) -> None:
-    """B9 strict semantics for the distributed path: raise when any query
-    analyzed to zero kept terms (tfidf_doc_ranker.py:98-103)."""
+    """B9 strict semantics for an executor-analyzed batch: raise when any
+    query analyzed to zero kept terms (tfidf_doc_ranker.py:98-103)."""
     missing = (queries.select("query_id", "query")
                .join(qt.select("query_id").distinct(), "query_id",
                      "left_anti").limit(1).collect())
@@ -289,97 +279,79 @@ def _strict_check_distributed(queries: DataFrame, qt: DataFrame) -> None:
         raise RuntimeError(f"No valid word in: {missing[0]['query']}")
 
 
+def _executor_weighted_slices(spark: SparkSession, index_dir: str,
+                              queries: DataFrame, config: IndexConfig,
+                              n_docs: int, strict: bool) -> list:
+    """Weighted query terms of a batch too big for driver analysis: ONE
+    executor pass (analyze_queries → weighted_query_terms_distributed),
+    collected in n = ceil(Q / SLICE_MAX_QUERIES) slices. A query's slice
+    is pmod(xxhash64(query_id), n) — a hash, not the raw id, so strided
+    ids still spread — and all its terms land in that slice. With n > 1
+    the weighted frame is persisted so the pass runs once, and each
+    slice is one filtered toArrow. Every collect is eager, so whatever
+    this persists is unpersisted before it returns. The strict check
+    covers the whole batch, once."""
+    from pyspark import StorageLevel
+    n = max(1, -(-queries.count() // SLICE_MAX_QUERIES))
+    qt = analyze_queries(queries, config)
+    held = []
+    try:
+        if strict:
+            qt = qt.persist(StorageLevel.MEMORY_AND_DISK)
+            held.append(qt)
+            _strict_check_distributed(queries, qt)
+        wqt = weighted_query_terms_distributed(spark, index_dir, qt, n_docs)
+        if n == 1:
+            return [wqt.toArrow().to_pandas()]
+        wqt = (wqt.withColumn("_slice",
+                              F.pmod(F.xxhash64("query_id"), F.lit(n)))
+               .persist(StorageLevel.MEMORY_AND_DISK))
+        held.append(wqt)
+        return [wqt.filter(F.col("_slice") == i).drop("_slice")
+                .toArrow().to_pandas() for i in range(n)]
+    finally:
+        for df in held:
+            df.unpersist()
+
+
 def prepare_weighted_terms(spark: SparkSession, index_dir: str,
                            queries: DataFrame, config: IndexConfig,
-                           n_docs: int, strict: bool, analysis: str,
-                           build_qdf: bool = True):
-    """Shared query-side prep for all three search paths.
+                           n_docs: int, strict: bool) -> list:
+    """Shared query-side prep for all three search paths → the batch's
+    weighted query terms (query_id, term_id, w, idf, df) as driver-resident
+    pandas frames, one per slice; a query's terms all sit in one slice.
+    Slices with no term in the index drop, so [] means nothing matches.
 
-    → (qdf, term_pred, wqt_pandas, n_queries_hint) where qdf is the
-    weighted term DataFrame (query_id, term_id, w, idf), term_pred prunes
-    the segment scan (list of term_ids, or a distinct-term DataFrame),
-    wqt_pandas is the driver-resident weighted-terms table when the batch
-    was analyzed driver-side (None in distributed mode — its presence IS
-    the broadcastable signal), and n_queries_hint is the distinct query
-    count when driver-known. Returns (None, None, None, 0) when no query
-    term matches the index (driver mode only — in distributed mode
-    emptiness propagates lazily)."""
-    mode, head = resolve_analysis_mode(queries, analysis)
-    if mode == "driver":
-        # a small auto-probed batch already delivered its rows (one
-        # bounded job); a big auto-probed batch was only COUNTED and
-        # goes straight to executor-side analysis; an explicit
-        # analysis='driver' or a LocalRelation batch collects here —
-        # one plain job, never a staged limit().collect() take
-        # (1, 4, 16, … partitions = 3-4 extra jobs per call, measured
-        # +0.5 s on the sf0.1 toy bench)
-        probed_big = (head is None and analysis == "auto"
-                      and not queries.isLocal())
-        if head is None and not probed_big:
-            # a Row collect: on a LocalRelation it runs no job at all
-            rows = queries.select("query_id", "query").collect()
-            head = ([r[0] for r in rows], [r[1] for r in rows])
-        if probed_big or len(head[1]) > _DRIVER_ANALYZE_MAX:
-            # big-but-driver-sized batch: tokenization+weighting run
-            # EXECUTOR-side (they scale with cores; serial driver
-            # analysis of a 20k-query batch measured 2.6 s flat at any
-            # parallelism) and only the SMALL weighted-terms result —
-            # O(Q × matched terms) rows — collects back, preserving the
-            # broadcast-closure scoring shape
-            from pyspark import StorageLevel
-            qt = analyze_queries(queries, config)
-            if strict:
-                qt = qt.persist(StorageLevel.MEMORY_AND_DISK)
-                _strict_check_distributed(queries, qt)
-            wqt = weighted_query_terms_distributed(
-                spark, index_dir, qt, n_docs,
-                with_df=True).toArrow().to_pandas()
-            if strict:
-                qt.unpersist()
-            if wqt.empty:
-                return None, None, None, 0
-        else:
-            qt = analyze_query_rows(*head, config, strict=strict)
-            if qt.empty:
-                return None, None, None, 0
-            wqt = weighted_query_terms(spark, index_dir, qt, n_docs,
-                                       config.num_shards)
-            if wqt.empty:
-                return None, None, None, 0
-        # the broadcast-closure scoring shape never touches qdf — a 40k
-        # query batch's qdf cost ~1.1 s of serial driver wall per batch
-        # for nothing (ranges passes build_qdf=False)
-        qdf = None
-        if build_qdf:
-            qdf = spark.createDataFrame(
-                pa.Table.from_pandas(wqt[["query_id", "term_id", "w", "idf"]],
-                                     preserve_index=False),
-                "query_id long, term_id long, w double, idf double")
-        return (qdf, sorted({int(t) for t in wqt["term_id"]}), wqt,
-                int(wqt["query_id"].nunique()))
-    from pyspark import StorageLevel
-    qt = analyze_queries(queries, config).persist(
-        StorageLevel.MEMORY_AND_DISK)
-    if strict:
-        _strict_check_distributed(queries, qt)
-    qdf = weighted_query_terms_distributed(spark, index_dir, qt, n_docs)
-    return qdf, qdf.select("term_id").distinct(), None, None
+    Up to _DRIVER_ANALYZE_MAX queries, the probe's rows are analyzed and
+    weighted on the driver: one slice. A bigger batch tokenizes and
+    weights EXECUTOR-side (that scales with cores; serial driver analysis
+    of a 20k-query batch measured 2.6 s flat at any parallelism) and
+    only the O(Q × matched terms) weighted rows come back, in slices of
+    about SLICE_MAX_QUERIES queries (_executor_weighted_slices)."""
+    head = probe_batch(queries)
+    if head is None:
+        slices = _executor_weighted_slices(spark, index_dir, queries,
+                                           config, n_docs, strict)
+    else:
+        qt = analyze_query_rows(*head, config, strict=strict)
+        slices = [] if qt.empty else [weighted_query_terms(
+            spark, index_dir, qt, n_docs, config.num_shards)]
+    return [wqt for wqt in slices if len(wqt)]
+
+
+def term_ids_of(wqt: pd.DataFrame) -> list:
+    """Sorted distinct term ids of a weighted-terms slice: the list that
+    prunes its segment scan."""
+    return np.unique(wqt["term_id"].to_numpy(dtype=np.int64)).tolist()
+
+
+def union_slices(parts: list) -> DataFrame:
+    """One DataFrame over the slices' results (same schema, by position)."""
+    return functools.reduce(DataFrame.unionAll, parts)
 
 
 def _empty_result(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame([], RESULT_SCHEMA)
-
-
-def attach_urls(spark: SparkSession, index_dir: str,
-                topk: DataFrame) -> DataFrame:
-    """url lookup + global order for DISTRIBUTED batches, whose top-k has
-    no driver-known size bound: broadcast the top-k rows so the docs
-    table is never shuffled (it is scanned whole, though). Driver-analyzed
-    batches finish in one task instead — see finish_topk."""
-    docs = read_table(spark, index_dir, "docs")
-    return (docs.join(F.broadcast(topk), "doc_id")
-                .select("query_id", "rank", "doc_id", "url", "score")
-                .orderBy("query_id", "rank"))
 
 
 def topk_order(qid: np.ndarray, doc: np.ndarray, score: np.ndarray,
@@ -439,13 +411,12 @@ def finish_rows(docs_path: str, qid: np.ndarray, doc: np.ndarray,
 
 
 def finish_topk(index_dir: str, cand: DataFrame, k: int) -> DataFrame:
-    """Final top-k + url lookup of a DRIVER-ANALYZED batch in ONE task:
-    candidates (query_id, doc_id, score) → repartition(1) → mapInPandas
-    running finish_rows. It replaces a query_id window, a broadcast join
-    that scans the whole docs table, and a global sort — each its own
-    Spark job(s). The batch is bounded (≤ DISTRIBUTED_ANALYSIS_THRESHOLD
-    queries), so its candidate set fits a task; distributed batches keep
-    attach_urls."""
+    """Final top-k + url lookup of one slice in ONE task: candidates
+    (query_id, doc_id, score) → repartition(1) → mapInPandas running
+    finish_rows. It replaces a query_id window, a broadcast join that
+    scans the whole docs table, and a global sort — each its own Spark
+    job(s). A slice holds at most about SLICE_MAX_QUERIES queries, so its
+    candidate set fits a task."""
     docs_path = os.path.join(index_dir, "docs")
 
     def run(it):
@@ -471,13 +442,12 @@ def search_exact(
     k: int = 10,
     score_mode: str | None = None,
     strict: bool = False,
-    analysis: str = "auto",
 ) -> DataFrame:
     """→ (query_id long, rank int, doc_id long, url string, score double).
 
-    analysis: 'driver' (collect the query batch — the small-batch default),
-    'distributed' (analysis + weighting stay executor-side for huge
-    batches), or 'auto' (switch on DISTRIBUTED_ANALYSIS_THRESHOLD)."""
+    Each slice of the batch (see prepare_weighted_terms) is scored by its
+    own broadcast join and finish; the result is the union of the slices'
+    rows, ordered by (query_id, rank) within a slice."""
     manifest = Manifest(index_dir)
     config, stats = manifest.load()
     mode = score_mode or config.score_mode
@@ -487,14 +457,10 @@ def search_exact(
     avgdl = float(stats["avgdl"])
     k1, b = config.k1, config.b
 
-    qdf, term_pred, wqt, _nq = prepare_weighted_terms(
-        spark, index_dir, queries, config, n_docs, strict, analysis)
-    if qdf is None:
+    slices = prepare_weighted_terms(spark, index_dir, queries, config,
+                                    n_docs, strict)
+    if not slices:
         return _empty_result(spark)
-    segs = _matched_segments(spark, index_dir, term_pred,
-                             config.num_shards)
-    joined = segs.join(F.broadcast(qdf) if wqt is not None else qdf,
-                       "term_id")
 
     if mode == "drqa":
         out_schema = "query_id long, doc_id long, contrib double"
@@ -527,34 +493,36 @@ def search_exact(
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-    contribs = joined.mapInPandas(score_terms, schema=out_schema)
-
     # one exchange for BOTH the aggregation and the top-k window: an
     # explicit hash repartition on query_id satisfies the clustering
     # requirement of groupBy(query_id, doc_id) (subset partitioning) AND
     # of the query_id window, so the agg + window run in the same stage
     # — the naive plan paid two back-to-back Exchanges (one per key set)
     sp = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    if mode == "drqa":
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("score"), F.asc("doc_id"))
+
+    def run_slice(wqt: pd.DataFrame) -> DataFrame:
+        qdf = spark.createDataFrame(
+            pa.Table.from_pandas(wqt[["query_id", "term_id", "w", "idf"]],
+                                 preserve_index=False),
+            "query_id long, term_id long, w double, idf double")
+        segs = _matched_segments(spark, index_dir, term_ids_of(wqt),
+                                 config.num_shards)
+        contribs = (segs.join(F.broadcast(qdf), "term_id")
+                    .mapInPandas(score_terms, schema=out_schema))
+        if mode == "bm25":
+            doclen = read_table(spark, index_dir, "doclen")
+            contribs = contribs.join(doclen, "doc_id").withColumn(
+                "contrib",
+                F.col("w") * (F.col("tf") * (k1 + 1.0)) /
+                (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / avgdl)),
+            )
         scored = (contribs.repartition(sp, "query_id")
                   .groupBy("query_id", "doc_id")
                   .agg(F.sum("contrib").alias("score")))
-    else:
-        doclen = read_table(spark, index_dir, "doclen")
-        with_dl = contribs.join(doclen, "doc_id")
-        per_term = with_dl.withColumn(
-            "contrib",
-            F.col("w") * (F.col("tf") * (k1 + 1.0)) /
-            (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / avgdl)),
-        )
-        scored = (per_term.repartition(sp, "query_id")
-                  .groupBy("query_id", "doc_id")
-                  .agg(F.sum("contrib").alias("score")))
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id"))
-    topk = (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= k))
-    if wqt is not None:
+        topk = (scored.withColumn("rank", F.row_number().over(w))
+                      .filter(F.col("rank") <= k))
         return finish_topk(index_dir, topk, k)
-    return attach_urls(spark, index_dir, topk)
+
+    return union_slices([run_slice(wqt) for wqt in slices])

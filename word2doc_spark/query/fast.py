@@ -132,6 +132,18 @@ def fast_topk(
     return [(int(uniq[i]), float(acc[i])) for i in order]
 
 
+# dense-vs-sparse rule of _grouped_fast, per query: a dense accumulator
+# row costs ~30 µs + 16 ns × n_active (zero, partition, mask) whatever the
+# query matches; fast_topk ~50 µs + 70 ns × its matched postings P
+# (synthetic chains, 2,000 queries per task, one core). Break-even is
+# n_active ≈ 1,250 + 4.4·P; the base is set above the ~3k-doc active
+# spaces of small indexes, where the dense path keeps every query.
+# Measured: n_active 125k, P≈20: dense 2.1 ms, fast_topk 1.1 ms per query;
+# n_active 60k, P≈600: 864 vs 281 µs; n_active 3k, P≈2,500: 111 vs 183 µs
+_SPARSE_ACTIVE_BASE = 4096
+_SPARSE_ACTIVE_PER_POSTING = 4
+
+
 def _grouped_fast(qids_l, offs, tids_l, w_l, idf_l, og_l, g, chains,
                   dl, k: int, mode: str, k1: float, b: float,
                   avgdl: float, cache) -> tuple[list, list, list, int]:
@@ -173,7 +185,11 @@ def _grouped_fast(qids_l, offs, tids_l, w_l, idf_l, og_l, g, chains,
     Queries where some matched term has scale == 0 (idf clamped to 0 on
     a >N/3-df head term) fall back to fast_topk: such terms mark a doc
     as MATCHED at score contribution 0, which the zero-pruned dense
-    accumulator cannot represent when the match count is ≤ k.
+    accumulator cannot represent when the match count is ≤ k. So do
+    queries with few matched postings against a wide active doc space
+    (n_active > _SPARSE_ACTIVE_BASE + _SPARSE_ACTIVE_PER_POSTING × the
+    query's postings): a dense row costs O(n_active) whatever the query
+    matches, fast_topk O(its postings) plus a fixed call cost.
     Returns (out_q, out_d, out_s, n_scored)."""
     charge = getattr(cache, "charge", None)
     def get_chain(tid):
@@ -193,6 +209,11 @@ def _grouped_fast(qids_l, offs, tids_l, w_l, idf_l, og_l, g, chains,
     n_active = int(active.size)
     if n_active == 0:
         return [], [], [], 0
+    # a query with fewer matched postings than this scores cheaper alone
+    # (see _SPARSE_ACTIVE_BASE); ≤ 0: every query takes the dense path
+    sparse_below = ((n_active - _SPARSE_ACTIVE_BASE)
+                    / _SPARSE_ACTIVE_PER_POSTING)
+    n_post = {tid: p.size for tid, p in zip(chains, parts)}
 
     def term_factors(tid):
         fk = ("gf", tid, mode)
@@ -279,7 +300,8 @@ def _grouped_fast(qids_l, offs, tids_l, w_l, idf_l, og_l, g, chains,
         if not terms:
             continue
         n_scored += 1
-        if zero_scale:
+        if zero_scale or (sparse_below > 0 and sum(
+                n_post[tid] for _, tid in terms) < sparse_below):
             term_rows = [
                 (w_l[j], idf_l[j], chains_get(tids_l[j]), tids_l[j])
                 for j in range(offs[i], offs[i + 1])
@@ -310,9 +332,9 @@ def _grouped_fast(qids_l, offs, tids_l, w_l, idf_l, og_l, g, chains,
 # this batch implementation when the kernel advertises one — WAND keeps
 # the per-query loop (its pruning is inherently per-query)
 fast_topk.grouped_impl = _grouped_fast
-# ranges.search_doc_partitioned scores a driver-analyzed batch on the
+# ranges.search_doc_partitioned scores a slice of a batch on the
 # driver (no Spark job) when its matched postings — Σ df over the
-# batch's (query, term) rows — are at most this: the grouped scorer
+# slice's (query, term) rows — are at most this: the grouped scorer
 # still beat the Spark shape's fixed cost at ~1.9M postings (1,600
 # questions); the bound keeps driver-side decoded postings to ~16 MB
 fast_topk.driver_max_postings = 1_000_000
@@ -325,10 +347,10 @@ def search_fast(
     k: int = 10,
     score_mode: str | None = None,
     strict: bool = False,
-    analysis: str = "auto",
 ) -> DataFrame:
-    """Same output contract (and rows) as search_exact / search_wand."""
+    """Same output contract (and rows) as search_exact / search_wand:
+    ordered by (query_id, rank) within a slice of the batch (see
+    ranges.search_doc_partitioned)."""
     from word2doc_spark.query.ranges import search_doc_partitioned
     return search_doc_partitioned(spark, index_dir, queries, k, score_mode,
-                                  fast_topk, strict=strict,
-                                  analysis=analysis)
+                                  fast_topk, strict=strict)

@@ -7,38 +7,39 @@ so each document's full score is computed locally; the task emits only
 its per-query top-k candidates, and an exact global merge over the
 (n_groups × Q × k) candidate set yields the final top-k.
 
-Three shapes, picked by how the query batch was analyzed and how much
-it matches:
+Two scoring shapes, picked per slice of the batch by how much it
+matches. A batch of up to exact._DRIVER_ANALYZE_MAX queries is one
+slice, analyzed on the driver; a bigger one is analyzed executor-side in
+one pass and collected in slices of about exact.SLICE_MAX_QUERIES
+queries (exact.prepare_weighted_terms). Each slice runs one shape and
+the slices' results are unioned, ordered by (query_id, rank) within a
+slice:
 
-* driver — a driver-analyzed batch whose matched postings (Σ df over
-  its (query, term) rows) are within the kernel's size rule
+* driver — a slice whose matched postings (Σ df over its (query, term)
+  rows) are within the kernel's size rule
   (``fast_topk.driver_max_postings``, ``wand_topk.driver_max_postings``)
   is scored without Spark (_search_on_driver): a pruned pyarrow read of
   the matched segments, the range tasks' own scorer over ONE group
   holding every range, and the shared finish (exact.finish_rows). The
-  result is a LocalRelation; the caller's action runs no job. At serving
-  sizes a Spark-shape call is all fixed cost: its scoring and finish
-  jobs take longer than the driver takes to score the same postings.
-* broadcast — a bigger driver-analyzed batch: the weighted-terms table
-  rides in the kernel closure and each matched segment is shuffled
-  ONCE, keyed by a range-slot group. (A join of queries × segments
-  emits one row per (query, segment), so a Q-query batch over shared
-  hot terms would ship each hot segment's payload up to Q× through
-  shuffle + Arrow — measured 4× wall at Q=500.) The candidates finish
-  in ONE task (exact.finish_topk): repartition(1) → mapInPandas running
-  exact.finish_rows — one numpy lexsort merge, then the urls of just
-  the winners via a pushed-down doc_id filter; rows leave ordered by
-  (query_id, rank). Above _PACK_MIN_CANDIDATES estimated candidate
+  result is a LocalRelation; the caller's action runs no job for it. At
+  serving sizes a Spark-shape call is all fixed cost: its scoring and
+  finish jobs take longer than the driver takes to score the same
+  postings.
+* broadcast — a bigger slice: its weighted-terms table rides to the
+  range tasks as a broadcast query pack and each matched segment is
+  shuffled ONCE, keyed by a range-slot group. (A join of queries ×
+  segments emits one row per (query, segment), so a Q-query batch over
+  shared hot terms would ship each hot segment's payload up to Q×
+  through shuffle + Arrow — measured 4× wall at Q=500.) The candidates
+  finish in ONE task (exact.finish_topk): repartition(1) → mapInPandas
+  running exact.finish_rows — one numpy lexsort merge, then the urls of
+  just the winners via a pushed-down doc_id filter; rows leave ordered
+  by (query_id, rank). Above _PACK_MIN_CANDIDATES estimated candidate
   rows, the candidates first travel as numpy-packed blobs and merge
   vectorized per query bucket (_merge_topk_blobs), so the one task sees
   ≤ Q·k rows.
-* join — distributed (huge) batches, with no driver-known size bound:
-  segments ⋈ query terms, sub-bucketed by query id for task balance
-  (shuffle volume is the join output, the price of a query table too
-  large for a closure), then the query_id window, the broadcast url
-  join (exact.attach_urls) and a global sort.
 
-Two partitioning rules both Spark shapes obey (measured, not theoretical):
+Two partitioning rules the broadcast shape obeys (measured, not theoretical):
 group keys are mapped onto hash-slot ints so every group gets its own
 shuffle partition (n keys hashed into n partitions loses 2-3× to
 balls-in-bins collisions), and the kernel exchanges use explicit
@@ -75,16 +76,16 @@ import time
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
 from word2doc_spark.index.manifest import Manifest, read_table
 from word2doc_spark.index.postings import decode_postings
 from word2doc_spark.lifetime import release_with
 from word2doc_spark.query.exact import (
-    RESULT_SCHEMA, _empty_result, _matched_segments, attach_urls,
+    RESULT_SCHEMA, _empty_result, _matched_segments, filter_terms,
     finish_rows, finish_topk, prepare_weighted_terms, read_term_rows,
-    topk_order,
+    term_ids_of, topk_order, union_slices,
 )
 
 CAND_SCHEMA = "query_id long, doc_id long, score double"
@@ -98,9 +99,6 @@ CAND_BLOB_SCHEMA = "qb int, blob binary"
 SEED_KTH_SCHEMA = "query_id long, score double"
 TOPK_SCHEMA = "query_id long, rank int, doc_id long, score double"
 
-# θ seeding collects O(Q) (id, float) rows to the driver — safe far past
-# the analysis threshold, but skip it for truly enormous batches
-SEED_MAX_QUERIES = 200_000
 # 'auto' seeding threshold: the seed pre-pass costs ~3 extra Spark jobs
 # (densest-range agg, seed scoring, k-th window) — a CONSTANT overhead —
 # while the pruning it buys grows linearly with n_ranges (each range's θ
@@ -263,63 +261,6 @@ class SparseDL:
         return self.vals[idx]
 
 
-def _score_range(pdf: pd.DataFrame, dl, k: int, mode: str, k1: float,
-                 b: float, avgdl: float, topk_fn) -> pd.DataFrame:
-    """Score one doc range: group matched segments per query, chain each
-    term's segments in doc order, run the DAAT kernel, emit candidates.
-    Grouping is one lexsort + numpy boundary walks (no per-group pandas
-    frames — the hot loop runs once per (query, term), not per row).
-    An optional ``theta0`` COLUMN on ``pdf`` (the distributed-batch seed
-    join; the query's k-th seed-pass score, NaN when unseeded) seeds the
-    kernel's threshold, nudged strictly below it, preserving exactness."""
-    from word2doc_spark.query.kcache import TaskCache
-    qids = pdf["query_id"].to_numpy()
-    tids = pdf["term_id"].to_numpy()
-    dlos = pdf["doc_lo"].to_numpy()
-    order = np.lexsort((dlos, tids, qids))
-    qids, tids, dlos = qids[order], tids[order], dlos[order]
-    ws = pdf["w"].to_numpy()[order]
-    idfs = pdf["idf"].to_numpy()[order]
-    payloads = pdf["payload"].to_numpy()[order]
-    thetas = (pdf["theta0"].to_numpy(dtype=np.float64)[order]
-              if "theta0" in pdf.columns else None)
-    n = len(pdf)
-    q_change = np.flatnonzero(
-        np.concatenate(([True], qids[1:] != qids[:-1])))
-    q_ends = np.concatenate((q_change[1:], [n]))
-    t_change = np.concatenate(
-        ([True], (qids[1:] != qids[:-1]) | (tids[1:] != tids[:-1])))
-    out_q, out_d, out_s = [], [], []
-    # per-task byte-bounded decode cache shared across the queries; the
-    # 4th term-row element is the chain's content-stable cache key
-    # (term_id + first doc_lo — unique within this task's doc ranges)
-    cache = TaskCache()
-    for qs, qe in zip(q_change, q_ends):
-        starts = qs + np.flatnonzero(t_change[qs:qe])
-        ends = np.concatenate((starts[1:], [qe]))
-        term_rows = [
-            (float(ws[s]), float(idfs[s]),
-             [bytes(p) for p in payloads[s:e]],
-             (int(tids[s]), int(dlos[s])))
-            for s, e in zip(starts, ends)
-        ]
-        qid = int(qids[qs])
-        if thetas is not None and np.isfinite(thetas[qs]):
-            theta0 = float(np.nextafter(thetas[qs], -np.inf))
-        else:
-            theta0 = -1.0
-        for doc, score in topk_fn(term_rows, k, mode, k1, b, avgdl, dl,
-                                  theta0=theta0, cache=cache):
-            out_q.append(qid)
-            out_d.append(doc)
-            out_s.append(score)
-    return pd.DataFrame({
-        "query_id": np.asarray(out_q, dtype=np.int64),
-        "doc_id": np.asarray(out_d, dtype=np.int64),
-        "score": np.asarray(out_s, dtype=np.float64),
-    })
-
-
 def search_doc_partitioned(
     spark: SparkSession,
     index_dir: str,
@@ -328,41 +269,30 @@ def search_doc_partitioned(
     score_mode: str | None,
     topk_fn,
     strict: bool = False,
-    analysis: str = "auto",
     seed_theta: bool | str = False,
 ) -> DataFrame:
     """Shared driver for the fast and WAND paths. topk_fn: DAAT kernel
     (term_rows=[(w, idf, [payload,...])], k, mode, k1, b, avgdl, dl,
     theta0=) → [(doc_id, score)] ordered (score desc, doc_id asc); its
     ``driver_max_postings`` attribute is the size rule under which a
-    driver-analyzed batch is scored on the driver (see the module
-    docstring's driver shape).
-
-    analysis: 'driver' | 'distributed' | 'auto' — see search_exact.
+    slice is scored on the driver (see the module docstring's driver
+    shape). Rows are ordered by (query_id, rank) within a slice.
 
     seed_theta (WAND): True, False, or 'auto' (seed only when the index
-    has ≥ SEED_MIN_RANGES deep-segment doc ranges — where per-range θ
-    restarts actually cost pruning power). The pre-pass scores, per
-    query, only its seed range (the w·idf presence-mass winner over
-    payload-free segment METADATA — see _densest_ranges) and seeds every
-    range task's pruning
-    threshold with just-below that range's k-th score. A range's local
-    k-th score is ≤ the global k-th score, and the seed sits strictly
-    below it, so a doc scoring ≥ the global k-th can never be pruned —
-    exactness (incl. doc_id tie-breaks) is preserved; differential tests
-    assert identity. This restores cross-range pruning power that
-    per-range θ restarts lose as n_ranges grows (10^4+ ranges at the
-    10^12-doc sizing).
-
-    Seeding applies to the Spark shapes only (the driver shape scores
-    one group, so there is no per-range θ restart to make up for).
-    Driver-analyzed batches seed through an O(Q)-row driver collect;
-    distributed batches stay fully executor-side (per-query densest
-    range and k-th seed computed by joins, seeds delivered to the range
-    tasks as a broadcast ``theta0`` column). Batches beyond
-    SEED_MAX_QUERIES skip seeding — a ≤SEED_MAX_QUERIES seed table
-    broadcasts in single-digit MB; beyond it the seed join would carry
-    more weight than the pruning it buys."""
+    has ≥ SEED_MIN_RANGES doc ranges and the slice's matched lists are
+    deep — where per-range θ restarts actually cost pruning power). The
+    pre-pass scores, per query, only its seed range (the w·idf
+    presence-mass winner over payload-free segment METADATA — see
+    _densest_ranges) and seeds every range task's pruning threshold with
+    just-below that range's k-th score. A range's local k-th score is ≤
+    the global k-th score, and the seed sits strictly below it, so a doc
+    scoring ≥ the global k-th can never be pruned — exactness (incl.
+    doc_id tie-breaks) is preserved; differential tests assert identity.
+    This restores cross-range pruning power that per-range θ restarts
+    lose as n_ranges grows (10^4+ ranges at the 10^12-doc sizing).
+    Seeding applies to the broadcast shape only (the driver shape scores
+    one group, so there is no per-range θ restart to make up for); its
+    seeds reach the driver through an O(Q)-row collect per slice."""
     manifest = Manifest(index_dir)
     config, stats = manifest.load()
     mode = score_mode or config.score_mode
@@ -376,98 +306,64 @@ def search_doc_partitioned(
     bid = stats["build_id"]
     index_bytes = int(stats.get("index_bytes", 0) or 0)
 
-    qdf, term_pred, wqt, nq = prepare_weighted_terms(
-        spark, index_dir, queries, config, n_docs, strict, analysis,
-        build_qdf=False)
-    if term_pred is None:
+    slices = prepare_weighted_terms(spark, index_dir, queries, config,
+                                    n_docs, strict)
+    if not slices:
         return _empty_result(spark)
     # actual range count from the published layout (config.n_ranges may be
     # 0 = auto-sized at build)
     n_ranges = -(-n_docs // max(int(stats.get("range_width", n_docs)), 1))
-    # auto-seed gate: many ranges (per-range θ restarts cost pruning) AND
-    # deep matched runs (avg matched postings per (term, range) cell ≥ 2
-    # blocks — shallow cells leave block-max nothing to skip, so the
-    # pre-pass is pure overhead; measured +20% on a tiny corpus whose
-    # cells average 5 postings). Depth is BATCH-aware when the batch was
-    # driver-analyzed (per-term dfs are already in hand — a rare+head
-    # query batch seeds even on an index whose average segment is
-    # shallow); distributed batches fall back to the index-global mean.
-    if wqt is not None and len(wqt):
-        u = wqt.drop_duplicates("term_id")["df"].to_numpy(
-            dtype=np.float64)
-        depth = float(u.sum()
-                      / max(np.minimum(u, n_ranges).sum(), 1.0))
-    else:
-        depth = (float(stats.get("n_postings", 0))
-                 / max(float(stats.get("n_segments", 0) or 0), 1.0))
-    want_seed = (seed_theta is True
-                 or (seed_theta == "auto"
-                     and n_ranges >= SEED_MIN_RANGES
-                     and depth >= 2 * config.block_size))
-    if want_seed:
-        # bounded count — only run the extra job when seeding is on the
-        # table at all (a driver-analyzed batch already knows its size)
-        n_q = nq if nq is not None else \
-            queries.limit(SEED_MAX_QUERIES + 1).count()
-        do_seed = n_q <= SEED_MAX_QUERIES
-    else:
-        n_q, do_seed = nq, False
+    # every search counts toward the serving table's warm-up, whichever
+    # shape scores it: the persist is lazy, so a build served from the
+    # driver pays nothing until a Spark batch runs — and that batch then
+    # finds the table
+    sp = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    cached = _serving_segs(spark, index_dir, bid, sp, index_bytes)
 
-    if wqt is not None:
-        # every driver-analyzed search counts toward the serving table's
-        # warm-up, whichever shape scores it: the persist is lazy, so a
-        # build served from the driver pays nothing until a Spark batch
-        # runs — and that batch then finds the table
-        sp = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        cached = _serving_segs(spark, index_dir, bid, sp, index_bytes)
-        # driver shape: the matched postings (Σ df over the batch's
+    def run_slice(wqt: pd.DataFrame):
+        term_ids = term_ids_of(wqt)
+        # driver shape: the matched postings (Σ df over the slice's
         # (query, term) rows — the work the kernel does) fit the kernel's
         # size rule, so scoring them here beats the scoring and finish
         # jobs' fixed cost
         if float(wqt["df"].sum()) <= topk_fn.driver_max_postings:
-            return _search_on_driver(spark, index_dir, term_pred,
+            return _search_on_driver(spark, index_dir, term_ids,
                                      config.num_shards, wqt, k, mode, k1,
-                                     b, avgdl, topk_fn, bid)
+                                     b, avgdl, topk_fn, bid), []
+        # auto-seed gate: many ranges (per-range θ restarts cost pruning)
+        # AND deep matched runs (avg matched postings per (term, range)
+        # cell ≥ 2 blocks — shallow cells leave block-max nothing to
+        # skip, so the pre-pass is pure overhead; measured +20% on a tiny
+        # corpus whose cells average 5 postings). Depth comes from the
+        # slice's own per-term dfs, so a rare+head query batch seeds even
+        # on an index whose average segment is shallow.
+        u = wqt.drop_duplicates("term_id")["df"].to_numpy(dtype=np.float64)
+        depth = float(u.sum() / max(np.minimum(u, n_ranges).sum(), 1.0))
+        do_seed = (seed_theta is True
+                   or (seed_theta == "auto"
+                       and n_ranges >= SEED_MIN_RANGES
+                       and depth >= 2 * config.block_size))
         # broadcast shape: the weighted-terms table is SMALL — ship it to
-        # the range tasks in the kernel closure and ship each matched
+        # the range tasks as a broadcast pack and ship each matched
         # segment ONCE per range. (The join formulation emits one row per
         # (query, segment), so a 500-query batch over shared hot terms
         # shipped each hot segment's payload ~500× through the shuffle +
         # Arrow — measured 4× wall on the 500k scaling bench.) The
         # candidates merge and get their urls in one task.
         cand, owned = _score_ranges_broadcast(
-            spark, index_dir, term_pred, config, wqt, k, mode, k1, b,
+            spark, index_dir, term_ids, config, wqt, k, mode, k1, b,
             avgdl, topk_fn, do_seed, bid, sp, cached)
-        return release_with(finish_topk(index_dir, cand, k), *owned)
-    else:
-        # distributed batch: query table is executor-resident; fall back
-        # to the join shape, sub-bucketed by query for task balance
-        # (join output is already one row per (query, segment) — extra
-        # buckets add no shuffle volume)
-        segs = _matched_segments(spark, index_dir, term_pred,
-                                 config.num_shards)
-        n_buckets = 32 if n_q is None else int(min(32, max(1, n_q // 32)))
-        joined = (segs.join(qdf, "term_id")
-                  .withColumn("qb",
-                              F.pmod(F.col("query_id"), F.lit(n_buckets))
-                              .cast("int"))
-                  .select("range_id", "qb", "query_id", "term_id", "w",
-                          "idf", "doc_lo", "payload"))
-        if do_seed:
-            theta0 = _theta_seeds_distributed(
-                spark, index_dir, term_pred, config, qdf, joined, k,
-                mode, k1, b, avgdl, topk_fn, n_buckets, bid)
-            if theta0 is not None:
-                joined = joined.join(F.broadcast(theta0), "query_id",
-                                     "left")
-        cand = _score_all_ranges(spark, index_dir, joined, k, mode, k1, b,
-                                 avgdl, topk_fn, n_buckets, bid)
+        return finish_topk(index_dir, cand, k), owned
 
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("doc_id"))
-        topk = (cand.withColumn("rank", F.row_number().over(w))
-                    .filter(F.col("rank") <= k))
-        return attach_urls(spark, index_dir, topk)
+    parts, owned = [], []
+    for wqt in slices:
+        part, res = run_slice(wqt)
+        parts.append(part)
+        owned.extend(res)
+    # the union owns every slice's broadcasts and persists: a slice's
+    # own DataFrame is not referenced by the union and may be collected
+    # before the caller's action runs
+    return release_with(union_slices(parts), *owned)
 
 
 # RESULT_SCHEMA as Arrow: the driver shape hands Spark a typed table
@@ -746,8 +642,8 @@ def _merge_topk_blobs(blobs: DataFrame, k: int, sp: int,
 # query-INDEPENDENT — for a stable index, every broadcast-shape batch
 # re-ran the same pruned parquet scan + shuffle as pure per-batch fixed
 # cost (the dominant term in the per-batch scaling ratio once the
-# kernels got fast). From the second driver-analyzed search against the
-# same build, the FULL slot-keyed segment table is persisted
+# kernels got fast). From the second search against the same build,
+# the FULL slot-keyed segment table is persisted
 # (MEMORY_AND_DISK — the cluster analog is the index resident across
 # the serving fleet's memory/SSD, partitioned by doc range); per batch
 # only an in-memory term filter remains, which preserves the hash
@@ -809,19 +705,6 @@ def _serving_segs(spark, index_dir, bid, sp, index_bytes):
                 pass
         _SEG_CACHE[key] = segs
         return segs
-
-
-def _prune_cached_segs(segs: DataFrame, term_ids: list) -> DataFrame:
-    """Term pruning over the cached slot-keyed table. Both shapes (isin
-    filter, broadcast left-semi) preserve the streamed side's hash
-    partitioning on _g — no exchange reappears downstream."""
-    from word2doc_spark.query.exact import _ISIN_PRUNE_LIMIT, term_in
-    if len(term_ids) <= _ISIN_PRUNE_LIMIT:
-        return segs.filter(term_in(term_ids))
-    spark = segs.sparkSession
-    wanted = spark.createDataFrame([(int(t),) for t in term_ids],
-                                   "term_id long")
-    return segs.join(F.broadcast(wanted), "term_id", "left_semi")
 
 
 def _broadcast_runner(index_dir, bid, bc, k, mode, k1, b, avgdl,
@@ -886,7 +769,7 @@ def _score_ranges_broadcast(spark, index_dir, term_pred, config, wqt,
     slot_arr = F.array(*[F.lit(x) for x in slots])
 
     if cached is not None:
-        segs = (_prune_cached_segs(cached, term_pred)
+        segs = (filter_terms(cached, term_pred)
                 .select("range_id", "term_id", "doc_lo", "payload", "_g"))
     else:
         # explicit repartition(n, _g): (a) the slot mapping gives every
@@ -959,7 +842,7 @@ def _densest_ranges(spark, index_dir, term_pred, config,
     ``segs_meta``: serving-cache segment table to read the metadata from
     (in-memory columnar, payload column pruned) instead of parquet."""
     if segs_meta is not None:
-        base = (_prune_cached_segs(segs_meta, term_pred)
+        base = (filter_terms(segs_meta, term_pred)
                 .select("term_id", "range_id", "n_postings"))
     else:
         base = _matched_segments(spark, index_dir, term_pred,
@@ -1027,54 +910,3 @@ def _theta_seeds_broadcast(spark, index_dir, term_pred, config, wqt,
         [int(r["query_id"]) for r in kth],
         [float(np.nextafter(r["score"], -np.inf)) for r in kth],
         default=-1.0, dtype=np.float64)
-
-
-def _theta_seeds_distributed(spark, index_dir, term_pred, config, qdf,
-                             joined, k, mode, k1, b, avgdl, topk_fn,
-                             n_buckets, bid=None):
-    """Executor-side θ seeding for distributed-analyzed batches: the
-    per-query densest range comes from joins (no driver collect at all),
-    the seed pass scores each query only in that range (a left-semi
-    restriction of the main join), and the k-th scores return as a
-    (query_id, theta0) DataFrame the caller broadcast-joins onto the
-    main pass (capped at SEED_MAX_QUERIES rows — single-digit MB)."""
-    best = _densest_ranges(spark, index_dir, term_pred, config,
-                           qdf.select("query_id", "term_id", "w", "idf"))
-    seed_joined = joined.join(best, ["query_id", "range_id"],
-                              "left_semi")
-    seed_cand = _score_all_ranges(spark, index_dir, seed_joined, k, mode,
-                                  k1, b, avgdl, topk_fn, n_buckets, bid)
-    wk = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id"))
-    return (seed_cand.withColumn("_r", F.row_number().over(wk))
-            .filter(F.col("_r") == k)
-            .select("query_id", F.col("score").alias("theta0")))
-
-
-def _score_all_ranges(spark, index_dir, joined, k, mode, k1, b, avgdl,
-                      topk_fn, n_buckets, bid=None):
-    """(range_id, qb)-partitioned scoring of a joined (segments × query
-    terms) DataFrame → candidate rows (the distributed-batch shape). An
-    optional ``theta0`` column on ``joined`` carries per-query pruning
-    seeds (see _theta_seeds_distributed). bm25 dl blobs load lazily
-    inside the task (one range per task; the per-range process cache
-    means the n_buckets replicas of a range decode its dl once per
-    executor, and warm batches read nothing)."""
-
-    joined = _pin_partitions(joined, spark, "range_id", "qb")
-
-    def run1(pdf: pd.DataFrame) -> pd.DataFrame:
-        dl = (_dl_for_ranges(index_dir, bid, pdf["range_id"].unique())
-              if mode == "bm25" else None)
-        return _score_range(pdf, dl, k, mode, k1, b, avgdl, topk_fn)
-
-    return (joined.groupBy("range_id", "qb")
-            .applyInPandas(run1, CAND_SCHEMA))
-
-
-def _pin_partitions(df: DataFrame, spark, *cols) -> DataFrame:
-    """Explicit numbered repartition on the grouping keys: exempts the
-    downstream applyInPandas exchange from AQE byte-based coalescing
-    (kernel cost is CPU-per-group, not bytes)."""
-    sp = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    return df.repartition(sp, *cols)

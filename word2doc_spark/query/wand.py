@@ -366,15 +366,15 @@ def search_wand(
     k: int = 10,
     score_mode: str | None = None,
     strict: bool = False,
-    analysis: str = "auto",
     seed_theta: bool | str = "auto",
 ) -> DataFrame:
     """→ (query_id, rank, doc_id, url, score); identical output contract
-    (and, by differential test, identical rows) to ``search_exact``.
+    (and, by differential test, identical rows) to ``search_exact``,
+    ordered by (query_id, rank) within a slice of the batch.
     seed_theta ('auto' = only on indexes with many doc ranges) pre-scores
     each query's densest range and seeds every range task's θ so pruning
     power survives large n_ranges (see ranges.search_doc_partitioned)."""
     from word2doc_spark.query.ranges import search_doc_partitioned
     return search_doc_partitioned(spark, index_dir, queries, k, score_mode,
                                   wand_topk, strict=strict,
-                                  analysis=analysis, seed_theta=seed_theta)
+                                  seed_theta=seed_theta)
