@@ -29,16 +29,19 @@ def spark():
 
 @pytest.fixture
 def scoring_gate(monkeypatch):
-    """``scoring_gate(on)`` forces driver-analyzed fast and WAND batches
-    onto the driver shape (True) or the Spark shape (False) whatever
-    their size, by patching the kernels' ``driver_max_postings`` rule."""
+    """``scoring_gate(on)`` forces every slice of an exact, fast or WAND
+    batch onto the driver shape (True) or the Spark shape (False)
+    whatever its size, by patching the kernels' ``driver_max_postings``
+    rule and exact's ``DRIVER_MAX_POSTINGS``."""
+    from word2doc_spark.query import exact
     from word2doc_spark.query.fast import fast_topk
     from word2doc_spark.query.wand import wand_topk
 
     def force(on: bool):
+        bound = float("inf") if on else -1
         for kernel in (fast_topk, wand_topk):
-            monkeypatch.setattr(kernel, "driver_max_postings",
-                                float("inf") if on else -1)
+            monkeypatch.setattr(kernel, "driver_max_postings", bound)
+        monkeypatch.setattr(exact, "DRIVER_MAX_POSTINGS", bound)
     return force
 
 

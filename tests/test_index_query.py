@@ -77,19 +77,17 @@ def test_corpus_stats_match_oracle(built, oracle_idx):
 
 def _assert_rank_identical(spark, index_dir, oracle_idx, mode, gate,
                            k=10):
-    """Exact, and fast and WAND in both the driver and the Spark shape,
+    """Exact, fast and WAND, each in both the driver and the Spark shape,
     against the oracle."""
     qdf = spark.createDataFrame(QUERIES, "query_id long, query string")
     oracle_idx.config = IndexConfig(**{**CFG.to_dict(), "score_mode": mode,
                                        "extras": {}})
     wants = {qid: oracle_search(oracle_idx, qtext, k=k)
              for qid, qtext in QUERIES}
-    runs = [(search_exact, None)] + [(fn, on)
-                                     for fn in (search_fast, search_wand)
-                                     for on in (True, False)]
+    runs = [(fn, on) for fn in (search_exact, search_fast, search_wand)
+            for on in (True, False)]
     for fn, on in runs:
-        if on is not None:
-            gate(on)
+        gate(on)
         got = fn(spark, index_dir, qdf, k=k, score_mode=mode).collect()
         by_q = {}
         for r in got:
@@ -114,6 +112,36 @@ def test_drqa_rank_identity(spark, built, oracle_idx, scoring_gate):
 def test_bm25_rank_identity(spark, built, oracle_idx, scoring_gate):
     _assert_rank_identical(spark, built[0], oracle_idx, "bm25",
                            scoring_gate)
+
+
+@pytest.mark.parametrize("mode", ["drqa", "bm25"])
+def test_exact_driver_shape_is_independent(spark, built, oracle_idx, mode,
+                                           monkeypatch, scoring_gate):
+    """The exact driver shape is the reference fast and WAND are checked
+    against, so it must not score through their kernels: with fast_topk,
+    its grouped scorer, wand_topk and the range scorer all raising, a
+    driver-shape search_exact still returns the oracle's rows."""
+    from word2doc_spark.query import fast, ranges, wand
+
+    def boom(*a, **kw):
+        raise AssertionError("exact called a fast/WAND kernel")
+
+    for mod, name in ((fast, "fast_topk"), (fast, "_grouped_fast"),
+                      (wand, "wand_topk"),
+                      (ranges, "_score_range_broadcast")):
+        monkeypatch.setattr(mod, name, boom)
+    scoring_gate(True)
+    qdf = spark.createDataFrame(QUERIES, "query_id long, query string")
+    res = search_exact(spark, built[0], qdf, k=10, score_mode=mode)
+    assert res.isLocal()
+    oracle_idx.config = IndexConfig(**{**CFG.to_dict(), "score_mode": mode,
+                                       "extras": {}})
+    got = _keyed(res.collect())
+    want = sorted((qid, rank, doc_id, score) for qid, qtext in QUERIES
+                  for rank, (doc_id, _url, score) in
+                  enumerate(oracle_search(oracle_idx, qtext, k=10), 1))
+    assert got
+    _assert_same_rows(got, want)
 
 
 def test_extraction_byte_identity(spark, built):
@@ -150,6 +178,45 @@ def test_sparse_dl_guard():
         dl[np.array([2, 4])]
     with pytest.raises(KeyError):
         dl[np.array([9, 11])]
+
+
+@pytest.mark.parametrize("mode", ["drqa", "bm25"])
+def test_expand_postings_decodes_each_payload_once(mode, monkeypatch):
+    """expand_postings expands each row over its segment's postings in
+    row order — the per-row loop it replaced — and decodes a payload
+    shared by several rows once."""
+    import numpy as np
+    from word2doc_spark.index.postings import (decode_postings,
+                                               encode_postings)
+    from word2doc_spark.query import exact
+
+    payloads = [encode_postings(np.array([3, 7, 40]), np.array([1, 2, 5]),
+                                block_size=2),
+                encode_postings(np.array([9]), np.array([4]))]
+    seg_ix = np.array([0, 1, 0])
+    qid = np.array([10, 10, 11])
+    w = np.array([0.5, 1.5, 2.0])
+    idf = np.array([1.25, 3.0, 1.25])
+    calls = []
+
+    def counted(p):
+        calls.append(p)
+        return decode_postings(p)
+    monkeypatch.setattr(exact, "decode_postings", counted)
+    got = exact.expand_postings(payloads, seg_ix, qid, w, idf, mode)
+    assert len(calls) == 2
+    want = {c: [] for c in got}
+    for i, s in enumerate(seg_ix):
+        docs, tfs = decode_postings(payloads[s])
+        tfs = tfs.astype(np.float64)
+        want["query_id"] += [qid[i]] * docs.size
+        want["doc_id"] += docs.tolist()
+        if mode == "drqa":
+            want["contrib"] += (w[i] * idf[i] * np.log1p(tfs)).tolist()
+        else:
+            want["w"] += [w[i]] * docs.size
+            want["tf"] += tfs.tolist()
+    assert {c: v.tolist() for c, v in got.items()} == want
 
 
 def _keyed(res):

@@ -89,13 +89,18 @@ def test_segment_scan_is_pruned(spark, built):
     assert "n_postings" not in plan.split("ReadSchema")[1].split("\n")[0]
 
 
-def test_exact_search_broadcasts_small_sides(spark, built):
-    """Query terms are broadcast — the segment table is never shuffled by
-    a join — and the url lookup reads no docs table through Spark (a
-    driver-analyzed batch finishes in one task, exact.finish_topk)."""
+def test_exact_search_broadcasts_small_sides(spark, built, scoring_gate):
+    """The exact Spark-shape plan: query terms are broadcast — the segment
+    table is never shuffled by a join — and the url lookup reads no docs
+    table through Spark (a driver-analyzed batch finishes in one task,
+    exact.finish_topk). The driver shape's plan is a LocalTableScan."""
     from word2doc_spark.query.exact import search_exact
     qdf = spark.createDataFrame([(1, "spark shuffle partition")],
                                 "query_id long, query string")
+    scoring_gate(True)
+    drv = search_exact(spark, built, qdf, k=5, score_mode="drqa")
+    assert drv.isLocal() and "LocalTableScan" in plan_of(drv)
+    scoring_gate(False)
     res = search_exact(spark, built, qdf, k=5, score_mode="drqa")
     assert res.count() > 0, "query must match the synthetic vocabulary"
     plan = plan_of(res)
@@ -222,11 +227,13 @@ def _jobs_of_call(spark, fn):
 
 def test_warm_search_jobs_per_call(spark, built):
     """Jobs per warm search call: the analysis probe plus the jobs that
-    score and finish — none for a fast or WAND batch within its kernel's
-    driver size rule, which is scored on the driver. No call infers a
+    score and finish — none for a batch within its path's driver size
+    rule, which is scored on the driver. The exact batch is counted in
+    both shapes (the Spark one forced by a -1 rule). No call infers a
     table schema from parquet footers (a 'parquet at ...' job) — every
     index read declares its schema and term stats are read without
     Spark."""
+    from word2doc_spark.query import exact
     from word2doc_spark.query.exact import search_exact
     from word2doc_spark.query.fast import search_fast
     from word2doc_spark.query.wand import search_wand
@@ -246,9 +253,16 @@ def test_warm_search_jobs_per_call(spark, built):
         "exact": lambda: search_exact(
             spark, built, batch(20), k=5, score_mode="bm25").collect(),
     }
+
+    def spark_shape():
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(exact, "DRIVER_MAX_POSTINGS", -1)
+            calls["exact"]()
+    calls["exact_spark"] = spark_shape
     for call in calls.values():  # one warm-up call each
         call()
-    bounds = {"fast_one_question": 1, "wand": 1, "exact": 8}
+    bounds = {"fast_one_question": 1, "wand": 1, "exact": 1,
+              "exact_spark": 8}
     for name, call in calls.items():
         n_jobs, stages = _jobs_of_call(spark, call)
         assert n_jobs <= bounds[name], (name, n_jobs, stages)

@@ -57,12 +57,11 @@ def test_random_corpus_rank_identity(spark, tmp_path, seed, scoring_gate):
         oracle.config = IndexConfig(
             **{**cfg.to_dict(), "score_mode": mode, "extras": {}})
         wants = {qid: oracle_search(oracle, q, k=8) for qid, q in queries}
-        # fast and WAND in the driver shape, then in the Spark shape
-        for fn, on in ((search_exact, None), (search_fast, True),
-                       (search_fast, False), (search_wand, True),
-                       (search_wand, False)):
-            if on is not None:
-                scoring_gate(on)
+        # each path in the driver shape, then in the Spark shape
+        for fn, on in [(fn, on)
+                       for fn in (search_exact, search_fast, search_wand)
+                       for on in (True, False)]:
+            scoring_gate(on)
             got = fn(spark, idx, qdf, k=8, score_mode=mode).collect()
             by_q = {}
             for r in got:

@@ -661,10 +661,13 @@ def test_worker_warmup_keyed_by_application_id(spark):
 
 def test_driver_gate_is_matched_postings_bound(spark, built, monkeypatch):
     """A driver-analyzed batch takes the driver shape exactly when Σ df
-    over its (query, term) rows is within the kernel's
-    driver_max_postings; its result is then a local relation."""
+    over its (query, term) rows is within its path's rule (the kernel's
+    driver_max_postings, exact's DRIVER_MAX_POSTINGS); its result is
+    then a local relation."""
     from word2doc_spark.index.manifest import Manifest
-    from word2doc_spark.query.exact import prepare_weighted_terms
+    from word2doc_spark.query import exact
+    from word2doc_spark.query.exact import (prepare_weighted_terms,
+                                            search_exact)
     from word2doc_spark.query.fast import fast_topk, search_fast
     from word2doc_spark.query.wand import search_wand, wand_topk
 
@@ -679,6 +682,10 @@ def test_driver_gate_is_matched_postings_bound(spark, built, monkeypatch):
         assert search(spark, built, qdf, k=3).isLocal()
         monkeypatch.setattr(kernel, "driver_max_postings", bound - 1)
         assert not search(spark, built, qdf, k=3).isLocal()
+    monkeypatch.setattr(exact, "DRIVER_MAX_POSTINGS", bound)
+    assert search_exact(spark, built, qdf, k=3).isLocal()
+    monkeypatch.setattr(exact, "DRIVER_MAX_POSTINGS", bound - 1)
+    assert not search_exact(spark, built, qdf, k=3).isLocal()
 
 
 def test_finish_rows_and_url_lookup_take_empty_input(built):
@@ -707,8 +714,8 @@ def _boom(text):
 def test_build_and_search_write_no_session_conf(spark, built, tmp_path,
                                                 monkeypatch, scoring_gate):
     """Every RuntimeConfig.set/unset during a build, a failing build and
-    one search on each path (fast and WAND in both shapes) is recorded;
-    there must be none."""
+    one search on each path (exact, fast and WAND, each in both shapes)
+    is recorded; there must be none."""
     from pyspark.sql.conf import RuntimeConfig
     from word2doc_spark.query.exact import search_exact
     from word2doc_spark.query.fast import search_fast

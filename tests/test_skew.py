@@ -83,9 +83,9 @@ def test_head_term_actually_segmented(spark, tmp_path):
 
 def test_query_identity_across_segmentation(spark, tmp_path,
                                             scoring_gate):
-    """All three query paths return identical results on physically
-    different segmentations of the same corpus (n_ranges/max_seg are pure
-    layout knobs)."""
+    """All three query paths, each in both shapes, return identical
+    results on physically different segmentations of the same corpus
+    (n_ranges/max_seg are pure layout knobs)."""
     import math
     from word2doc_spark.query.exact import search_exact
     from word2doc_spark.query.fast import search_fast
@@ -106,11 +106,10 @@ def test_query_identity_across_segmentation(spark, tmp_path,
          (3, "posting wand block heap")],
         "query_id long, query string")
     key = lambda r: (r["query_id"], r["rank"])
-    for fn, on in ((search_exact, None), (search_fast, True),
-                   (search_fast, False), (search_wand, True),
-                   (search_wand, False)):
-        if on is not None:
-            scoring_gate(on)
+    for fn, on in [(fn, on)
+                   for fn in (search_exact, search_fast, search_wand)
+                   for on in (True, False)]:
+        scoring_gate(on)
         a = sorted(fn(spark, dirs[0], qdf, k=8, score_mode="bm25").collect(),
                    key=key)
         b = sorted(fn(spark, dirs[1], qdf, k=8, score_mode="bm25").collect(),

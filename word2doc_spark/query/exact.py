@@ -1,20 +1,32 @@
 """Exact batch query path (the goldens-grade scorer).
 
-Shape (SURVEY.md §3.2 Spark shape): queries → analyze (driver-side; the
-query batch is the small side by construction, the analog of the
-reference's in-process ``batch_closest_docs`` —
-/root/reference/src/word2doc/retriever/tfidf_doc_ranker.py:75-82) →
-(query_id, term_id, qtf, w, idf) → broadcast-join against the matched
-posting SEGMENTS (term_id-pruned shard scan) → decode+score inside one
-Arrow pass → groupBy(query_id, doc_id) sum → per-query top-k window with
-deterministic ties (score desc, doc_id asc) → ordering + url lookup in
-one task (``finish_topk``).
+Every (query, term) row is expanded into one contribution per posting of
+the term, the contributions are summed per (query_id, doc_id), and each
+query keeps its top-k with deterministic ties (score desc, doc_id asc) —
+the reference's in-process ``batch_closest_docs``
+(retriever/tfidf_doc_ranker.py:75-82) without any pruning, so the fast
+and WAND paths are checked against it.
 
 Batch sizes (prepare_weighted_terms): up to _DRIVER_ANALYZE_MAX queries
 are analyzed on the driver; a bigger batch is analyzed and weighted
 executor-side in one pass and collected in slices of about
-SLICE_MAX_QUERIES queries, each of which runs the shape above; the
-slices' results are unioned.
+SLICE_MAX_QUERIES queries. Each slice runs one of two shapes, picked by
+its matched postings (Σ df over its (query, term) rows); the slices'
+results are unioned.
+
+* driver — a slice within DRIVER_MAX_POSTINGS is scored in the driver
+  process (_search_on_driver): a pruned pyarrow read of the matched
+  segments (read_term_rows), each segment decoded once, the rows
+  expanded by expand_postings, one lexsort + ``np.add.reduceat``
+  group-sum, and the shared finish (finish_rows). The result is a
+  LocalRelation, so a warm call runs only the analysis probe. It shares
+  I/O and finish helpers with ranges.py and no scoring kernel: it stays
+  an independent reference for fast and WAND.
+* Spark (SURVEY.md §3.2 Spark shape) — a bigger slice: (query_id,
+  term_id, w, idf) → broadcast-join against the matched posting SEGMENTS
+  (term_id-pruned shard scan) → expand_postings inside one Arrow pass →
+  groupBy(query_id, doc_id) sum → per-query top-k window → ordering +
+  url lookup in one task (``finish_topk``).
 
 Scale notes:
 * the segment scan is pruned two ways: parquet row-group predicate
@@ -30,7 +42,7 @@ Scale notes:
 * posting payloads are bounded segments (≤ max_seg_postings), never one
   unbounded cell per term — a df=N stop-bigram decodes as many small
   tasks, not one multi-GB row.
-* this path shuffles the matched per-doc contributions into the
+* the Spark shape shuffles the matched per-doc contributions into the
   (query_id, doc_id) aggregation — simple and exactly twin-able, but the
   shuffle grows with matched postings; the doc-partitioned fast/wand
   paths (query/fast.py, query/wand.py) are the scale surface.
@@ -69,6 +81,14 @@ _DRIVER_ANALYZE_MAX = 4096
 # finish grows with the batch (ADVICE r2: multi-million-query batches
 # must not funnel through the driver in one piece)
 SLICE_MAX_QUERIES = 50_000
+
+# a slice whose matched postings (Σ df over its (query, term) rows) are
+# at most this is scored on the driver (search_exact's driver shape). On
+# 4 cores the driver shape beat the Spark shape at every driver-analyzed
+# size measured (1.8 vs 3.5 s at 1.9M postings, 3.1 vs 5.3 s at 3.9M), so
+# the bound is the driver's memory, not its wall: the expanded arrays
+# peak at ~100 bytes per matched posting, ~100 MB at this bound
+DRIVER_MAX_POSTINGS = 1_000_000
 
 
 def analyze_queries(queries: DataFrame, config: IndexConfig) -> DataFrame:
@@ -401,13 +421,27 @@ def finish_rows(docs_path: str, qid: np.ndarray, doc: np.ndarray,
     (topk_order), then the urls of just the winning doc_ids (pushed-down
     doc_id filter). Docs absent from the docs table drop, as a url join
     would drop them. Shared by the one-task Spark finish (finish_topk)
-    and the driver-resident search (ranges._search_on_driver)."""
+    and the driver shapes (_search_on_driver here and in ranges.py)."""
     idx, rank = topk_order(qid, doc, score, k)
     found, urls = _lookup_urls(docs_path, doc[idx])
     idx, rank = idx[found], rank[found]
     return pd.DataFrame({"query_id": qid[idx], "rank": rank,
                          "doc_id": doc[idx], "url": urls[found],
                          "score": score[idx]})
+
+
+# RESULT_SCHEMA as Arrow: a driver shape hands Spark a typed table
+_RESULT_ARROW = pa.schema([("query_id", pa.int64()), ("rank", pa.int32()),
+                           ("doc_id", pa.int64()), ("url", pa.string()),
+                           ("score", pa.float64())])
+
+
+def local_result(spark: SparkSession, out: pd.DataFrame) -> DataFrame:
+    """finish_rows output as a LocalRelation: the caller's action runs no
+    job for it."""
+    return spark.createDataFrame(
+        pa.Table.from_pandas(out, schema=_RESULT_ARROW,
+                             preserve_index=False), RESULT_SCHEMA)
 
 
 def finish_topk(index_dir: str, cand: DataFrame, k: int) -> DataFrame:
@@ -435,6 +469,85 @@ def finish_topk(index_dir: str, cand: DataFrame, k: int) -> DataFrame:
             .mapInPandas(run, RESULT_SCHEMA))
 
 
+def _spans(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """The index ranges [starts[i], starts[i] + counts[i]) concatenated."""
+    ends = np.cumsum(counts)
+    return np.arange(ends[-1] if ends.size else 0) + np.repeat(
+        starts - (ends - counts), counts)
+
+
+def expand_postings(payloads, seg_ix: np.ndarray, query_id: np.ndarray,
+                    w: np.ndarray, idf: np.ndarray, mode: str) -> dict:
+    """Both exact shapes' per-posting work, on column arrays: row i —
+    (query_id[i], w[i], idf[i]) joined with the segment
+    ``payloads[seg_ix[i]]`` — becomes one entry per posting of that
+    segment. Each payload is decoded once however many rows share it.
+    → {query_id, doc_id, contrib = w·idf·log1p(tf)} (drqa) or
+    {query_id, doc_id, w, tf} (bm25: its tf part needs dl, which each
+    shape looks up its own way), concatenated in row order. ``payloads``
+    must not be empty."""
+    parts = [decode_postings(p) for p in payloads]
+    lens = np.fromiter((d.size for d, _ in parts), np.int64, len(parts))
+    n = lens[seg_ix]
+    row = np.repeat(np.arange(seg_ix.size), n)
+    pos = _spans((np.cumsum(lens) - lens)[seg_ix], n)
+    docs = np.concatenate([d for d, _ in parts])[pos].astype(np.int64)
+    tfs = np.concatenate([t for _, t in parts])[pos].astype(np.float64)
+    if mode == "drqa":
+        return {"query_id": query_id[row], "doc_id": docs,
+                "contrib": (w * idf)[row] * np.log1p(tfs)}
+    return {"query_id": query_id[row], "doc_id": docs, "w": w[row],
+            "tf": tfs}
+
+
+def _search_on_driver(spark: SparkSession, index_dir: str,
+                      wqt: pd.DataFrame, k: int, mode: str, k1: float,
+                      b: float, avgdl: float, num_shards: int,
+                      bid: str | None) -> DataFrame:
+    """A driver-sized slice scored without Spark: a pruned pyarrow read of
+    its terms' segments, each (query, term) row joined with its term's
+    segments by a searchsorted over the term-sorted segments,
+    expand_postings, bm25's dl from the per-range dl cache
+    (ranges._dl_for_ranges), one lexsort + reduceat group-sum per
+    (query_id, doc_id), and finish_rows. No fast or WAND kernel runs:
+    this is the exact reference. A failed read raises; there is no
+    fallback to Spark."""
+    segs = read_term_rows(index_dir, "shards", term_ids_of(wqt),
+                          num_shards, ["term_id", "range_id", "payload"])
+    if segs.num_rows == 0:
+        return _empty_result(spark)
+    seg_term = segs.column("term_id").to_numpy()
+    order = np.argsort(seg_term, kind="stable")
+    seg_term = seg_term[order]
+    tid = wqt["term_id"].to_numpy(dtype=np.int64)
+    lo = np.searchsorted(seg_term, tid, "left")
+    cnt = np.searchsorted(seg_term, tid, "right") - lo
+    row = np.repeat(np.arange(tid.size), cnt)
+    cols = expand_postings(
+        segs.column("payload").take(order).to_pylist(), _spans(lo, cnt),
+        wqt["query_id"].to_numpy(dtype=np.int64)[row],
+        wqt["w"].to_numpy(dtype=np.float64)[row],
+        wqt["idf"].to_numpy(dtype=np.float64)[row], mode)
+    qid, doc = cols["query_id"], cols["doc_id"]
+    if mode == "drqa":
+        contrib = cols["contrib"]
+    else:
+        from word2doc_spark.query.ranges import _dl_for_ranges
+        dl = _dl_for_ranges(index_dir, bid,
+                            segs.column("range_id").to_numpy())[doc]
+        tf = cols["tf"]
+        contrib = cols["w"] * (tf * (k1 + 1.0)) / (
+            tf + k1 * (1.0 - b + b * dl / avgdl))
+    order = np.lexsort((doc, qid))
+    qid, doc, contrib = qid[order], doc[order], contrib[order]
+    new_key = np.ones(qid.size, dtype=bool)
+    new_key[1:] = (qid[1:] != qid[:-1]) | (doc[1:] != doc[:-1])
+    first = np.flatnonzero(new_key)
+    return local_result(spark, finish_rows(
+        os.path.join(index_dir, "docs"), qid[first], doc[first],
+        np.add.reduceat(contrib, first), k))
+
+
 def search_exact(
     spark: SparkSession,
     index_dir: str,
@@ -445,9 +558,12 @@ def search_exact(
 ) -> DataFrame:
     """→ (query_id long, rank int, doc_id long, url string, score double).
 
-    Each slice of the batch (see prepare_weighted_terms) is scored by its
-    own broadcast join and finish; the result is the union of the slices'
-    rows, ordered by (query_id, rank) within a slice."""
+    Each slice of the batch (see prepare_weighted_terms) is scored in one
+    of two shapes (module docstring): on the driver when its matched
+    postings (Σ df over its (query, term) rows) are within
+    DRIVER_MAX_POSTINGS, else by its own broadcast join and finish. The
+    result is the union of the slices' rows, ordered by (query_id, rank)
+    within a slice."""
     manifest = Manifest(index_dir)
     config, stats = manifest.load()
     mode = score_mode or config.score_mode
@@ -471,27 +587,15 @@ def search_exact(
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            outs = []
-            for i in range(len(pdf)):
-                docs, tfs = decode_postings(pdf["payload"].iloc[i])
-                tfs = tfs.astype(np.float64)
-                w = pdf["w"].iloc[i]
-                if mode == "drqa":
-                    contrib = w * pdf["idf"].iloc[i] * np.log1p(tfs)
-                    outs.append(pd.DataFrame({
-                        "query_id": np.full(docs.size, pdf["query_id"].iloc[i]),
-                        "doc_id": docs.astype(np.int64),
-                        "contrib": contrib,
-                    }))
-                else:
-                    outs.append(pd.DataFrame({
-                        "query_id": np.full(docs.size, pdf["query_id"].iloc[i]),
-                        "doc_id": docs.astype(np.int64),
-                        "w": np.full(docs.size, w),
-                        "tf": tfs,
-                    }))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+            # rows of one segment joined with several queries share a
+            # payload: factorize so each decodes once per Arrow batch
+            seg_ix, payloads = pd.factorize(pdf["payload"].to_numpy())
+            cols = expand_postings(
+                payloads, seg_ix, pdf["query_id"].to_numpy(dtype=np.int64),
+                pdf["w"].to_numpy(dtype=np.float64),
+                pdf["idf"].to_numpy(dtype=np.float64), mode)
+            if cols["doc_id"].size:
+                yield pd.DataFrame(cols)
 
     # one exchange for BOTH the aggregation and the top-k window: an
     # explicit hash repartition on query_id satisfies the clustering
@@ -503,6 +607,10 @@ def search_exact(
         F.desc("score"), F.asc("doc_id"))
 
     def run_slice(wqt: pd.DataFrame) -> DataFrame:
+        if float(wqt["df"].sum()) <= DRIVER_MAX_POSTINGS:
+            return _search_on_driver(spark, index_dir, wqt, k, mode, k1, b,
+                                     avgdl, config.num_shards,
+                                     stats["build_id"])
         qdf = spark.createDataFrame(
             pa.Table.from_pandas(wqt[["query_id", "term_id", "w", "idf"]],
                                  preserve_index=False),

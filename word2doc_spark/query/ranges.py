@@ -83,8 +83,8 @@ from word2doc_spark.index.manifest import Manifest, read_table
 from word2doc_spark.index.postings import decode_postings
 from word2doc_spark.lifetime import release_with
 from word2doc_spark.query.exact import (
-    RESULT_SCHEMA, _empty_result, _matched_segments, filter_terms,
-    finish_rows, finish_topk, prepare_weighted_terms, read_term_rows,
+    _empty_result, _matched_segments, filter_terms, finish_rows,
+    finish_topk, local_result, prepare_weighted_terms, read_term_rows,
     term_ids_of, topk_order, union_slices,
 )
 
@@ -249,15 +249,10 @@ class SparseDL:
         idx = np.searchsorted(self.docs, key)
         # loud failure on a doc absent from the dl blobs (e.g. a gap in
         # doclen_seg coverage) — silently returning a neighbor's dl would
-        # mis-score bm25 without any signal
-        if np.isscalar(key) or getattr(key, "ndim", 0) == 0:
-            if idx >= len(self.docs) or self.docs[idx] != key:
-                raise KeyError(f"doc_id {key} missing from dl blobs")
-        else:
-            if np.any(idx >= len(self.docs)) or \
-                    np.any(self.docs[np.minimum(idx, len(self.docs) - 1)]
-                           != key):
-                raise KeyError("doc_id(s) missing from dl blobs")
+        # mis-score bm25 without any signal. One pass: a key past the last
+        # doc clips to the last doc, which differs from it.
+        if np.any(self.docs.take(idx, mode="clip") != key):
+            raise KeyError("doc_id(s) missing from dl blobs")
         return self.vals[idx]
 
 
@@ -366,12 +361,6 @@ def search_doc_partitioned(
     return release_with(union_slices(parts), *owned)
 
 
-# RESULT_SCHEMA as Arrow: the driver shape hands Spark a typed table
-_RESULT_ARROW = pa.schema([("query_id", pa.int64()), ("rank", pa.int32()),
-                           ("doc_id", pa.int64()), ("url", pa.string()),
-                           ("score", pa.float64())])
-
-
 def _search_on_driver(spark, index_dir, term_ids, num_shards, wqt, k,
                       mode, k1, b, avgdl, topk_fn, bid) -> DataFrame:
     """A driver-sized batch scored without Spark: the matched segments
@@ -390,12 +379,9 @@ def _search_on_driver(spark, index_dir, term_ids, num_shards, wqt, k,
     unpacked = tuple(a.tolist() for a in _wqt_groups(wqt))
     cand = _score_range_broadcast(segs, unpacked, dl, k, mode, k1, b,
                                   avgdl, topk_fn)
-    out = finish_rows(os.path.join(index_dir, "docs"),
-                      cand["query_id"].to_numpy(), cand["doc_id"].to_numpy(),
-                      cand["score"].to_numpy(), k)
-    return spark.createDataFrame(
-        pa.Table.from_pandas(out, schema=_RESULT_ARROW,
-                             preserve_index=False), RESULT_SCHEMA)
+    return local_result(spark, finish_rows(
+        os.path.join(index_dir, "docs"), cand["query_id"].to_numpy(),
+        cand["doc_id"].to_numpy(), cand["score"].to_numpy(), k))
 
 
 # worker-side unpacked query packs, keyed by the pack's uuid token (never
