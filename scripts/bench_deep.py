@@ -13,23 +13,16 @@ BASELINE.md by scripts/sync_baseline_counts.py):
   (5 topic head words, df~200k each, + one tok<digits> rare term,
   df~80), k=1.
 
-* ``ranges1024`` (--config ranges1024): the MANY-RANGES regime — what
-  θ seeding is FOR. Per-range θ restarts cost pruning power linearly in
-  n_ranges (ranges.SEED_MIN_RANGES); at n_ranges=1024 a selective query
-  (bare-number rare term, df~10, + one dense topic word) has its rare
-  term PRESENT in ≲10 ranges, so with a seed θ0 that carries the rare
-  idf mass (see ranges._densest_ranges), the ~1014 dense-only ranges
-  fail the chain-ub short-circuit in O(terms) without decoding a block.
-  Unseeded WAND must re-earn θ per range; the full scan decodes
-  everything. seed_theta=True is explicit here: the auto DEPTH gate
-  stays off at this shallow per-cell layout — the gate keys on list
-  depth, and this config demonstrates the n_ranges axis.
+* ``deep8m`` (--config deep8m): the 10^12-doc DEPTH sizing — 8M docs /
+  8 ranges, per-range dense lists of ~2×10^5 postings, rare + ONE dense
+  head word per query.
 
-Each config runs the same query batch through search_fast, search_wand
-unseeded, and search_wand seed_theta=True, reporting q/s plus sampled
-per-worker block skip/decode counters.
+Each config runs the same query batch through search_fast and
+search_wand, reporting q/s plus sampled per-worker block skip/decode
+counters. (The summary's ``ranges1024`` rows and ``wand_seeded``
+contender were measured on WAND θ seeding, since deleted.)
 
-Usage: python scripts/bench_deep.py [--config deep8|ranges1024]
+Usage: python scripts/bench_deep.py [--config deep8|deep8m]
                                     [--cpus 32] [--n-queries N]
 """
 
@@ -45,19 +38,8 @@ sys.path.insert(0, REPO)
 
 def deep_queries(n: int) -> list:
     """rare term (df~80) + one dense head word per topic (df~200k each):
-    the rare term's idf² contribution dominates every dense upper bound,
-    so a seeded θ lets WAND short-circuit all dense-only ranges."""
+    the rare term's idf² contribution dominates every dense upper bound."""
     return [(i, f"tok{(i * 7919) % 100000} spark index crawl café query")
-            for i in range(n)]
-
-
-def selective_queries(n: int) -> list:
-    """bare-number rare term (a title number, df~10 — present in only a
-    handful of the 1024 ranges) + one dense topic head word: the
-    many-ranges seeding regime."""
-    from word2doc_spark.sources.pages import _TOPICS
-    words = [ws[0] for _, ws in _TOPICS]
-    return [(i, f"{(i * 7919) % 100000} {words[i % len(words)]}")
             for i in range(n)]
 
 
@@ -81,9 +63,6 @@ def narrow_deep_queries(n: int) -> list:
 CONFIGS = {
     "deep8": {"n_ranges": 8, "queries": deep_queries,
               "index_dir": "/tmp/w2d_deep_idx_1m", "n_queries": 8000},
-    "ranges1024": {"n_ranges": 1024, "queries": selective_queries,
-                   "index_dir": "/tmp/w2d_deep_idx_1m_r1024",
-                   "n_queries": 8000},
     # the 10^12-doc DEPTH sizing: 8M docs / 8 ranges → per-range dense
     # lists of ~2×10^5 postings, rare+single-dense queries
     "deep8m": {"n_ranges": 8, "queries": narrow_deep_queries,
@@ -154,17 +133,13 @@ def main():
         search_fast(spark, index_dir, warm, k=args.k,
                     score_mode="drqa").count()
         search_wand(spark, index_dir, warm, k=args.k,
-                    score_mode="drqa", seed_theta=False).count()
+                    score_mode="drqa").count()
 
     contenders = [
         ("fast", lambda: search_fast(spark, index_dir, qdf, k=args.k,
                                      score_mode="drqa")),
-        ("wand_unseeded", lambda: search_wand(
-            spark, index_dir, qdf, k=args.k, score_mode="drqa",
-            seed_theta=False)),
-        ("wand_seeded", lambda: search_wand(
-            spark, index_dir, qdf, k=args.k, score_mode="drqa",
-            seed_theta=True)),
+        ("wand", lambda: search_wand(spark, index_dir, qdf, k=args.k,
+                                     score_mode="drqa")),
     ]
     entry = {"n_docs": int(stats["n_docs"]), "n_ranges": conf["n_ranges"],
              "range_width": int(stats["range_width"]),

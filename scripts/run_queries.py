@@ -4,7 +4,7 @@
     spark-submit --py-files word2doc_spark.zip scripts/run_queries.py \\
         --index-dir /path/to/index --queries /path/to/queries.parquet \\
         --out /path/to/results [--k 10] [--path fast|wand|exact] \\
-        [--score-mode drqa|bm25] [--strict] [--seed-theta auto|on|off]
+        [--score-mode drqa|bm25] [--strict]
 
 queries parquet schema: (query_id long, query string). Results are written
 as parquet (query_id, rank, doc_id, url, score).
@@ -25,11 +25,6 @@ def main(argv=None):
     p.add_argument("--strict", action="store_true",
                    help="raise on queries with zero valid terms (reference "
                         "B9 semantics)")
-    p.add_argument("--seed-theta", default="auto",
-                   choices=["auto", "on", "off"],
-                   help="WAND pruning-threshold seeding across doc ranges "
-                        "(wand path only; 'auto' engages on many-range, "
-                        "deep-segment indexes)")
     args = p.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -48,12 +43,8 @@ def main(argv=None):
     queries = spark.read.parquet(args.queries)
     fn = {"fast": search_fast, "wand": search_wand,
           "exact": search_exact}[args.path]
-    kw = {}
-    if args.path == "wand":
-        kw["seed_theta"] = {"auto": "auto", "on": True,
-                            "off": False}[args.seed_theta]
     out = fn(spark, args.index_dir, queries, k=args.k,
-             score_mode=args.score_mode, strict=args.strict, **kw)
+             score_mode=args.score_mode, strict=args.strict)
     out.write.mode("overwrite").parquet(args.out)
     print(f"wrote {spark.read.parquet(args.out).count()} result rows to {args.out}")
 

@@ -47,8 +47,9 @@ def selective_queries(n: int) -> list[tuple[int, str]]:
     """Rare term + dense topic term — the block-max WAND regime at k=1:
     the rare term (a title number, df≈1 → idf≈ln N) sets θ far above
     anything the dense term (df≈15%, deep posting runs) can reach alone,
-    so a θ-seeded WAND skips the dense term's blocks in every doc range
-    while the full scan must decode+accumulate them all. (A df>50% head
+    so once a range's θ holds a rare-term doc's score WAND skips the
+    dense term's blocks there, while the full scan must decode and
+    accumulate them all. (A df>50% head
     term can't play this role: the drqa/bm25 idf clamp zeroes it out of
     the query.)"""
     words = [ws[0] for _, ws in _TOPICS]

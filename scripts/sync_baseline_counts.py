@@ -111,8 +111,7 @@ def deep_block() -> str | None:
             "blocks skipped (sampled) |",
             "|---|---|---|---|---|",
         ]
-        for name in ("fast", "wand_unseeded", "wand_seeded"):
-            p = c["phases"][name]
+        for name, p in c["phases"].items():
             lines.append(
                 f"| {name} | {p['wall_s']} | {p['qps']:,} | "
                 f"{p['blocks_decoded_sampled']:,} | "

@@ -178,7 +178,7 @@ def _check_grouped_vs_per_query(mode):
         dl = dlv
     for k in (1, 10):
         oq, od, os_, ns = _grouped_fast(
-            qids, offs, tl, wl, il, None, None, chains, dl,
+            qids, offs, tl, wl, il, chains, dl,
             k, mode, 1.2, 0.75, 130.0, TaskCache())
         got: dict = {}
         for q, d, s in zip(oq, od, os_):
@@ -197,26 +197,3 @@ def _check_grouped_vs_per_query(mode):
                 assert math.isclose(gs, rs, rel_tol=1e-12, abs_tol=0.0)
         assert ns == n_ref
 
-
-def test_grouped_fast_only_groups_filter():
-    """The seed-pre-pass group filter must restrict scoring to queries
-    whose only_groups entry matches the task's slot group."""
-    from word2doc_spark.query.fast import _grouped_fast
-    from word2doc_spark.query.kcache import TaskCache
-
-    rng = np.random.default_rng(3)
-    tids = [1, 2, 3]
-    chains = {}
-    for t in tids:
-        docs = np.sort(rng.choice(500, size=60,
-                                  replace=False)).astype(np.uint64)
-        tfs = rng.integers(1, 9, size=60).astype(np.uint64)
-        chains[t] = [encode_postings(docs, tfs)]
-    idf_map = {t: 1.5 for t in tids}
-    qids, offs, tl, wl, il = _grouped_pack(rng, tids, idf_map, n_q=30)
-    og = [q % 2 for q in qids]
-    oq, _, _, ns = _grouped_fast(qids, offs, tl, wl, il, og, 1, chains,
-                                 None, 5, "drqa", 1.2, 0.75, 50.0,
-                                 TaskCache())
-    assert set(oq) <= {q for q in qids if q % 2 == 1}
-    assert ns == sum(1 for q in qids if q % 2 == 1)

@@ -230,15 +230,16 @@ def _assert_same_rows(got, want):
         assert math.isclose(g[3], w[3], rel_tol=1e-9, abs_tol=1e-12)
 
 
-def test_distributed_analysis_identity(spark, built, slicing,
+@pytest.mark.parametrize("mode", ["drqa", "bm25"])
+def test_distributed_analysis_identity(spark, built, mode, slicing,
                                        scoring_gate):
     """A batch past the driver-analysis bound is analyzed executor-side
     and scored in slices: the same rows (scores within 1e-9) as the
     default driver-analyzed path on all three search surfaces, with fast
-    and WAND slices in both shapes. The query ids are strided — every id
-    is ≡ 0 mod the slice count — so a raw pmod(query_id, n) slice key
-    would put the whole batch in one slice; the hashed key must spread
-    it over several."""
+    and WAND slices in both shapes, in both score modes. The query ids
+    are strided — every id is ≡ 0 mod the slice count — so a raw
+    pmod(query_id, n) slice key would put the whole batch in one slice;
+    the hashed key must spread it over several."""
     from word2doc_spark.index.manifest import Manifest
     from word2doc_spark.query.exact import prepare_weighted_terms
 
@@ -249,7 +250,7 @@ def test_distributed_analysis_identity(spark, built, slicing,
         "query_id long, query string")
     searches = (search_exact, search_fast, search_wand)
     want = {fn.__name__: _keyed(fn(spark, built, qdf, k=5,
-                                   score_mode="bm25").collect())
+                                   score_mode=mode).collect())
             for fn in searches}
     assert all(want.values())
 
@@ -264,7 +265,7 @@ def test_distributed_analysis_identity(spark, built, slicing,
         scoring_gate(on)
         for fn in searches:
             got = _keyed(fn(spark, built, qdf, k=5,
-                            score_mode="bm25").collect())
+                            score_mode=mode).collect())
             _assert_same_rows(got, want[fn.__name__])
 
 
@@ -322,8 +323,8 @@ def test_packed_candidate_merge_identity(spark, built, mode, monkeypatch,
     scoring_gate(False)
     packed_fast = search_fast(spark, index_dir, qdf, k=7,
                               score_mode=mode).collect()
-    packed_wand = search_wand(spark, index_dir, qdf, k=7, score_mode=mode,
-                              seed_theta=True).collect()
+    packed_wand = search_wand(spark, index_dir, qdf, k=7,
+                              score_mode=mode).collect()
     key = lambda r: (r["query_id"], r["rank"])
     for got in (packed_fast, packed_wand):
         assert sorted(map(key, got)) == sorted(map(key, exact))

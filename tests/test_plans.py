@@ -228,11 +228,14 @@ def _jobs_of_call(spark, fn):
 def test_warm_search_jobs_per_call(spark, built):
     """Jobs per warm search call: the analysis probe plus the jobs that
     score and finish — none for a batch within its path's driver size
-    rule, which is scored on the driver. The exact batch is counted in
-    both shapes (the Spark one forced by a -1 rule). No call infers a
-    table schema from parquet footers (a 'parquet at ...' job) — every
-    index read declares its schema and term stats are read without
-    Spark."""
+    rule, which is scored on the driver. An Arrow-built batch is a
+    local relation, so it needs no probe either: a driver-scored
+    question and a query that matches nothing run no job at all. The
+    exact batch is counted in both shapes (the Spark one forced by a -1
+    rule). No call infers a table schema from parquet footers (a
+    'parquet at ...' job) — every index read declares its schema and
+    term stats are read without Spark."""
+    import pyarrow as pa
     from word2doc_spark.query import exact
     from word2doc_spark.query.exact import search_exact
     from word2doc_spark.query.fast import search_fast
@@ -245,9 +248,18 @@ def test_warm_search_jobs_per_call(spark, built):
             [(i, words[i % len(words)]) for i in range(n)],
             "query_id long, query string")
 
+    def arrow_batch(text):
+        return spark.createDataFrame(
+            pa.table({"query_id": pa.array([0], pa.int64()),
+                      "query": [text]}), "query_id long, query string")
+
     calls = {
         "fast_one_question": lambda: search_fast(
             spark, built, batch(1), k=5).collect(),
+        "fast_one_question_arrow": lambda: search_fast(
+            spark, built, arrow_batch(words[0]), k=5).collect(),
+        "no_match_arrow": lambda: search_exact(
+            spark, built, arrow_batch("zyzzyva quixotry"), k=5).collect(),
         "wand": lambda: search_wand(
             spark, built, batch(20), k=5, score_mode="bm25").collect(),
         "exact": lambda: search_exact(
@@ -261,7 +273,10 @@ def test_warm_search_jobs_per_call(spark, built):
     calls["exact_spark"] = spark_shape
     for call in calls.values():  # one warm-up call each
         call()
-    bounds = {"fast_one_question": 1, "wand": 1, "exact": 1,
+    assert calls["fast_one_question_arrow"]()
+    assert calls["no_match_arrow"]() == []
+    bounds = {"fast_one_question": 1, "fast_one_question_arrow": 0,
+              "no_match_arrow": 0, "wand": 1, "exact": 1,
               "exact_spark": 8}
     for name, call in calls.items():
         n_jobs, stages = _jobs_of_call(spark, call)

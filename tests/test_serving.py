@@ -406,56 +406,52 @@ def test_wqt_groups_matches_pandas_groupby_and_handles_empty():
     assert len(e_q) == 0 and len(e_t) == 0 and e_off.tolist() == [0]
 
 
-def test_align_to_pack():
-    import numpy as np
-    from word2doc_spark.query.ranges import _align_to_pack
+def _recording_release(monkeypatch, owned, unpersisted):
+    """Patch ranges.release_with to record each resource a search result
+    takes ownership of, and every unpersist call made on one."""
+    from word2doc_spark.query import ranges as R
+    real_release = R.release_with
 
-    qids = np.array([3, 7, 10, 50], dtype=np.int64)
-    out = _align_to_pack(qids, [7, 50, 99], [1.5, 2.5, 9.9],
-                         default=-1.0, dtype=np.float64)
-    assert out.tolist() == [-1.0, 1.5, -1.0, 2.5]  # 99 not in pack
-    out = _align_to_pack(qids, [], [], default=-1, dtype=np.int64)
-    assert out.tolist() == [-1, -1, -1, -1]
-    # key beyond the last pack qid must not index out of bounds
-    out = _align_to_pack(qids, [51, 3], [8, 4], default=-1,
-                         dtype=np.int64)
-    assert out.tolist() == [4, -1, -1, -1]
+    def recording(owner, *resources):
+        for r in resources:
+            real = r.unpersist
+
+            def counted(*a, _real=real, _r=r, **kw):
+                unpersisted.append(_r)
+                return _real(*a, **kw)
+            r.unpersist = counted
+        owned.extend(resources)
+        return real_release(owner, *resources)
+    monkeypatch.setattr(R, "release_with", recording)
 
 
 def test_derived_dataframe_survives_result_release(spark, built,
                                                    monkeypatch,
                                                    scoring_gate):
-    """A search result owns its query-pack broadcast and its seed-pass
-    persist: both are released when the result is garbage collected.
-    Release is unpersist, never destroy — a DataFrame derived from the
-    result must still re-execute to identical rows after it is gone."""
+    """A Spark-shape search result owns exactly its query-pack broadcast,
+    which is unpersisted when the result is garbage collected. Release
+    is unpersist, never destroy — a DataFrame derived from the result
+    must still re-execute to identical rows after it is gone."""
     import gc
+    from pyspark.broadcast import Broadcast
     from word2doc_spark.query import ranges as R
     from word2doc_spark.query.wand import search_wand
 
-    owned = []
-
-    def recording_release(owner, *resources):
-        owned.extend(resources)
-        return real_release(owner, *resources)
-
-    real_release = R.release_with
-    monkeypatch.setattr(R, "release_with", recording_release)
-    # Spark shape, no serving table: the seed pass persists its own
-    # matched segments
+    owned, unpersisted = [], []
+    _recording_release(monkeypatch, owned, unpersisted)
+    # Spark shape, no serving table
     scoring_gate(False)
     monkeypatch.setattr(R, "_SEG_CACHE_MAX_BYTES", -1)
     qdf = spark.createDataFrame(QUERIES, "query_id long, query string")
-    res = search_wand(spark, built, qdf, k=3, score_mode="drqa",
-                      seed_theta=True)
+    res = search_wand(spark, built, qdf, k=3, score_mode="drqa")
     derived = res.select("query_id", "rank", "doc_id")
     want = sorted(tuple(r) for r in derived.collect())
     assert want
-    segs = [r for r in owned if hasattr(r, "storageLevel")]
-    assert len(owned) == 2 and len(segs) == 1 and segs[0].is_cached
+    assert len(owned) == 1 and isinstance(owned[0], Broadcast)
+    assert unpersisted == []
     del res
     gc.collect()
-    assert not segs[0].is_cached
+    assert unpersisted == owned
     assert sorted(tuple(r) for r in derived.collect()) == want
 
 
@@ -464,10 +460,12 @@ def test_sliced_search_releases_what_it_persists(spark, built,
                                                 scoring_gate):
     """A multi-slice search persists the analyzed batch for its strict
     check and the weighted slices while it collects them — both are
-    released before it returns — and each slice's seed-pass persist,
-    which the result owns. Once the result is collected and dropped, the
-    session's persisted-RDD count is back at its baseline."""
+    released before it returns — and each slice's query-pack broadcast,
+    which the result owns until it is garbage collected. Once the result
+    is collected and dropped, every broadcast has been unpersisted and
+    the session's persisted-RDD count is back at its baseline."""
     import gc
+    from pyspark.broadcast import Broadcast
     from word2doc_spark.query import ranges as R
     from word2doc_spark.query.wand import search_wand
 
@@ -475,33 +473,33 @@ def test_sliced_search_releases_what_it_persists(spark, built,
         gc.collect()
         return spark.sparkContext._jsc.getPersistentRDDs().size()
 
-    owned = []
-
-    def recording_release(owner, *resources):
-        owned.extend(r for r in resources if hasattr(r, "storageLevel"))
-        return real_release(owner, *resources)
-
-    real_release = R.release_with
-    monkeypatch.setattr(R, "release_with", recording_release)
-    # Spark shape, no serving table: each slice's seed pass persists its
-    # own matched segments
+    owned, unpersisted = [], []
+    _recording_release(monkeypatch, owned, unpersisted)
+    # Spark shape, no serving table: nothing outlives the call but the
+    # result's broadcasts
     scoring_gate(False)
     monkeypatch.setattr(R, "_SEG_CACHE_MAX_BYTES", -1)
     qdf = spark.createDataFrame(QUERIES, "query_id long, query string")
     want = sorted(tuple(r) for r in search_wand(
         spark, built, qdf, k=3, score_mode="drqa").collect())
+    gc.collect()
     owned.clear()
+    unpersisted.clear()
     before = n_persisted()
     slicing(1)
     res = search_wand(spark, built, qdf, k=3, score_mode="drqa",
-                      strict=True, seed_theta=True)
-    # the seed passes already ran; only their persists are still held
+                      strict=True)
+    # one broadcast per scored slice; the slice collects' persists are
+    # already released
     assert len(owned) >= 2
-    assert n_persisted() == before + len(owned)
+    assert all(isinstance(r, Broadcast) for r in owned)
+    assert n_persisted() == before
     got = sorted(tuple(r) for r in res.collect())
     assert [g[:3] for g in got] == [w[:3] for w in want]
+    assert unpersisted == []
     del res
     assert n_persisted() == before
+    assert sorted(map(id, unpersisted)) == sorted(map(id, owned))
 
 
 def test_release_with_unpersists_when_owner_is_collected(spark):

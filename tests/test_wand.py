@@ -115,20 +115,17 @@ def test_wand_topk_empty_and_zero_weight():
 
 
 @pytest.mark.parametrize("mode", ["drqa", "bm25"])
-def test_wand_topk_theta_seed_exact_and_prunes(mode):
-    """A θ0 seed strictly below the true k-th score leaves results
-    IDENTICAL (incl. boundary ties) while decoding no more — and on
-    typical inputs strictly fewer — blocks."""
+def test_wand_topk_block_max_skips(mode):
+    """On a WAND-friendly shape the block-max check skips whole blocks
+    without decoding them, and the rows stay identical to brute force."""
     from word2doc_spark.query import wand as W
 
     rng = np.random.default_rng(99)
     n_docs, k = 120000, 5
     dl = rng.integers(10, 300, size=n_docs).astype(np.uint32)
     avgdl = float(dl.mean())
-    # the classic WAND-friendly shape: one rare high-weight term whose
-    # docs dominate the top-k, plus long low-weight tail lists (ABOVE the
-    # eager-merge threshold, so the lazy block path runs) that an
-    # effective θ lets the cursor leap over block-wise
+    # one rare high-weight term whose docs dominate the top-k, plus long
+    # low-weight tail lists that θ lets the cursors leap over block-wise
     term_rows = []
     rare = np.sort(rng.choice(n_docs, size=40,
                               replace=False)).astype(np.uint64)
@@ -141,96 +138,10 @@ def test_wand_topk_theta_seed_exact_and_prunes(mode):
         term_rows.append((0.2, 0.4, encode_postings(docs, tfs, 32)))
     dlv = dl if mode == "bm25" else None
     W.reset_stats()
-    base = wand_topk(term_rows, k, mode, 1.2, 0.75, avgdl, dlv)
-    sb = W.get_stats()
-    kth = base[-1][1]
-    seed = float(np.nextafter(kth, -np.inf))
-    W.reset_stats()
-    seeded = wand_topk(term_rows, k, mode, 1.2, 0.75, avgdl, dlv,
-                       theta0=seed)
-    s = W.get_stats()
-    assert [d for d, _ in seeded] == [d for d, _ in base]
-    for (d1, s1), (d2, s2) in zip(seeded, base):
+    got = wand_topk(term_rows, k, mode, 1.2, 0.75, avgdl, dlv)
+    st = W.get_stats()
+    want = _brute(term_rows, k, mode, 1.2, 0.75, avgdl, dlv)
+    assert [d for d, _ in got] == [d for d, _ in want]
+    for (_, s1), (_, s2) in zip(got, want):
         assert math.isclose(s1, s2, rel_tol=1e-9)
-    # the seed must make pruning strictly cheaper on this workload
-    assert s["blocks_decoded"] < sb["blocks_decoded"], (s, sb)
-    assert s["blocks_skipped"] > 0
-
-
-def test_wand_seeding_differential_on_index(spark, built, scoring_gate):
-    """search_wand with and without θ seeding returns identical rows.
-    Seeding runs only in the Spark shape, forced here; the driver shape
-    returns the same rows."""
-    scoring_gate(False)
-    qdf = spark.createDataFrame(QUERIES, "query_id long, query string")
-    on = search_wand(spark, built, qdf, k=7, score_mode="bm25",
-                     seed_theta=True).collect()
-    off = search_wand(spark, built, qdf, k=7, score_mode="bm25",
-                      seed_theta=False).collect()
-    scoring_gate(True)
-    drv = search_wand(spark, built, qdf, k=7, score_mode="bm25",
-                      seed_theta=True).collect()
-    rows = lambda res: sorted((r["query_id"], r["rank"], r["doc_id"])
-                              for r in res)
-    assert rows(on) == rows(off) == rows(drv)
-
-
-@pytest.mark.parametrize("mode", ["drqa", "bm25"])
-def test_wand_seeding_distributed_identity(spark, built, mode, slicing,
-                                           scoring_gate):
-    """An executor-analyzed batch scored in slices, each slice on the
-    Spark shape with and without θ seeding: identical rows to the exact
-    path on the default (driver-analyzed) batch."""
-    qdf = spark.createDataFrame(QUERIES, "query_id long, query string")
-    exact = search_exact(spark, built, qdf, k=6, score_mode=mode).collect()
-    slicing(3)
-    scoring_gate(False)
-    seeded = search_wand(spark, built, qdf, k=6, score_mode=mode,
-                         seed_theta=True).collect()
-    plain = search_wand(spark, built, qdf, k=6, score_mode=mode,
-                        seed_theta=False).collect()
-    key = lambda r: (r["query_id"], r["rank"], r["doc_id"])
-    assert sorted(map(key, seeded)) == sorted(map(key, plain)) \
-        == sorted(map(key, exact))
-    for a, b in zip(sorted(seeded, key=key), sorted(exact, key=key)):
-        assert math.isclose(a["score"], b["score"], rel_tol=1e-9,
-                            abs_tol=1e-12)
-
-
-def test_seed_range_carries_rare_term_mass(spark, built):
-    """The θ-seed range choice ranks ranges by Σ w·idf of the terms
-    PRESENT in them (ranges._densest_ranges): for a rare+dense query the
-    chosen range must be one that actually CONTAINS the rare term's
-    postings — its k-th score then carries the rare idf mass, which is
-    what lets dense-only ranges fail wand_topk's chain-ub short-circuit
-    in O(terms). (A pure posting-count rule picks a dense range whose
-    k-th score lacks that mass.)"""
-    from word2doc_spark.index.manifest import Manifest
-    from word2doc_spark.query import ranges as R
-    from word2doc_spark.query.exact import (_matched_segments,
-                                            prepare_weighted_terms,
-                                            term_ids_of)
-
-    config, stats = Manifest(built).load()
-    n_docs = int(stats["n_docs"])
-    # "137" is a title number → df≈1 (max idf); the rest are topic words
-    qdf = spark.createDataFrame([(1, "137 spark shuffle partition")],
-                                "query_id long, query string")
-    (wqt,) = prepare_weighted_terms(spark, built, qdf, config, n_docs,
-                                    False)
-    term_pred = term_ids_of(wqt)
-    rare_tid = int(wqt.loc[(wqt["w"] * wqt["idf"]).idxmax(), "term_id"])
-    qterms = spark.createDataFrame(
-        wqt[["query_id", "term_id", "w", "idf"]],
-        "query_id long, term_id long, w double, idf double")
-    best = R._densest_ranges(spark, built, term_pred, config,
-                             qterms).collect()
-    assert len(best) == 1
-    chosen = int(best[0]["range_id"])
-    rare_ranges = {
-        int(r["range_id"])
-        for r in _matched_segments(spark, built, [rare_tid],
-                                   config.num_shards)
-        .select("range_id").distinct().collect()}
-    assert rare_ranges, "fixture lost its rare term"
-    assert chosen in rare_ranges, (chosen, rare_ranges)
+    assert st["blocks_skipped"] > 0, st

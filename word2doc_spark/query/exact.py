@@ -179,13 +179,10 @@ def _prune_terms(df: DataFrame, term_ids: list,
 
 
 def _matched_segments(spark: SparkSession, index_dir: str,
-                      term_ids: list, num_shards: int,
-                      with_counts: bool = False) -> DataFrame:
-    segs = read_table(spark, index_dir, "shards")
-    cols = ["term_id", "range_id", "doc_lo", "payload"]
-    if with_counts:
-        cols.insert(3, "n_postings")
-    return _prune_terms(segs, term_ids, num_shards).select(*cols)
+                      term_ids: list, num_shards: int) -> DataFrame:
+    return (_prune_terms(read_table(spark, index_dir, "shards"), term_ids,
+                         num_shards)
+            .select("term_id", "range_id", "doc_lo", "payload"))
 
 
 def read_term_rows(index_dir: str, table: str, term_ids: list,
@@ -269,8 +266,9 @@ def probe_batch(queries: DataFrame):
 
     A LocalRelation batch is driver-resident already: its Row collect
     runs no job (NOTE: list-built createDataFrame goes through
-    parallelize and is NOT local; only pandas/Arrow input produces a
-    LocalRelation). Any other batch is probed with a BOUNDED
+    parallelize and is NOT local; Arrow input is local, and pandas input
+    only with spark.sql.execution.arrow.pyspark.enabled, which is off by
+    default). Any other batch is probed with a BOUNDED
     limit(_DRIVER_ANALYZE_MAX+1) head collected as one Arrow table —
     toArrow runs the limit as a single all-partition job (a Row collect
     runs the staged take: 1, 4, 16, … partitions = 2-4 jobs) — so a batch
@@ -370,10 +368,6 @@ def union_slices(parts: list) -> DataFrame:
     return functools.reduce(DataFrame.unionAll, parts)
 
 
-def _empty_result(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], RESULT_SCHEMA)
-
-
 def topk_order(qid: np.ndarray, doc: np.ndarray, score: np.ndarray,
                k: int) -> tuple[np.ndarray, np.ndarray]:
     """(indices, ranks) of each query's top-k rows, ordered (query_id asc,
@@ -442,6 +436,12 @@ def local_result(spark: SparkSession, out: pd.DataFrame) -> DataFrame:
     return spark.createDataFrame(
         pa.Table.from_pandas(out, schema=_RESULT_ARROW,
                              preserve_index=False), RESULT_SCHEMA)
+
+
+def _empty_result(spark: SparkSession) -> DataFrame:
+    """No rows, as a LocalRelation: a batch that matches nothing runs no
+    job (a list-built empty frame goes through parallelize, one job)."""
+    return spark.createDataFrame(_RESULT_ARROW.empty_table(), RESULT_SCHEMA)
 
 
 def finish_topk(index_dir: str, cand: DataFrame, k: int) -> DataFrame:

@@ -45,13 +45,10 @@ def fast_topk(
     term_rows,
     k: int, mode: str, k1: float, b: float, avgdl: float,
     dl,
-    theta0: float = -1.0,
     cache: dict | None = None,
 ) -> list[tuple[int, float]]:
     """Exact top-k by full vectorized accumulation. term_rows: (w_q, idf,
-    payload-or-[payloads]); dl: dense array, SparseDL, or None. theta0 is
-    accepted for kernel-signature parity with wand_topk; a full scan has
-    nothing to prune with it.
+    payload-or-[payloads]); dl: dense array, SparseDL, or None.
 
     cache: optional per-TASK dict shared across a batch's queries — a
     term's decoded chain is query-independent, so hot terms decode once
@@ -144,9 +141,9 @@ _SPARSE_ACTIVE_BASE = 4096
 _SPARSE_ACTIVE_PER_POSTING = 4
 
 
-def _grouped_fast(qids_l, offs, tids_l, w_l, idf_l, og_l, g, chains,
-                  dl, k: int, mode: str, k1: float, b: float,
-                  avgdl: float, cache) -> tuple[list, list, list, int]:
+def _grouped_fast(qids_l, offs, tids_l, w_l, idf_l, chains, dl, k: int,
+                  mode: str, k1: float, b: float, avgdl: float,
+                  cache) -> tuple[list, list, list, int]:
     """Batch form of fast_topk over one slot-group task: score EVERY
     matched query of the broadcast pack in numpy chunks instead of a
     python call per query.
@@ -283,8 +280,6 @@ def _grouped_fast(qids_l, offs, tids_l, w_l, idf_l, og_l, g, chains,
         chunk_terms.clear()
 
     for i, qid in enumerate(qids_l):
-        if og_l is not None and og_l[i] != g:
-            continue
         terms = []
         zero_scale = False
         for j in range(offs[i], offs[i + 1]):

@@ -96,16 +96,8 @@ CAND_SCHEMA = "query_id long, doc_id long, score double"
 # blob staging); packed, the merge moves ~10^3 opaque rows. float64
 # holds ids exactly up to 2^53 (enforced at pack time).
 CAND_BLOB_SCHEMA = "qb int, blob binary"
-SEED_KTH_SCHEMA = "query_id long, score double"
 TOPK_SCHEMA = "query_id long, rank int, doc_id long, score double"
 
-# 'auto' seeding threshold: the seed pre-pass costs ~3 extra Spark jobs
-# (densest-range agg, seed scoring, k-th window) — a CONSTANT overhead —
-# while the pruning it buys grows linearly with n_ranges (each range's θ
-# restart forfeits the cross-range threshold). Measured at 128 ranges /
-# 500k docs the constant loses (~10 s overhead vs ~2 s pruning gain);
-# the 10^12-doc sizing uses 10^4+ ranges where the linear term wins.
-SEED_MIN_RANGES = 1024
 # above this many estimated candidate rows (queries × range groups × k)
 # the broadcast shape packs candidates into blobs and merges in python;
 # below it, plain rows + a window cost one stage less
@@ -264,30 +256,13 @@ def search_doc_partitioned(
     score_mode: str | None,
     topk_fn,
     strict: bool = False,
-    seed_theta: bool | str = False,
 ) -> DataFrame:
     """Shared driver for the fast and WAND paths. topk_fn: DAAT kernel
     (term_rows=[(w, idf, [payload,...])], k, mode, k1, b, avgdl, dl,
-    theta0=) → [(doc_id, score)] ordered (score desc, doc_id asc); its
+    cache=) → [(doc_id, score)] ordered (score desc, doc_id asc); its
     ``driver_max_postings`` attribute is the size rule under which a
     slice is scored on the driver (see the module docstring's driver
-    shape). Rows are ordered by (query_id, rank) within a slice.
-
-    seed_theta (WAND): True, False, or 'auto' (seed only when the index
-    has ≥ SEED_MIN_RANGES doc ranges and the slice's matched lists are
-    deep — where per-range θ restarts actually cost pruning power). The
-    pre-pass scores, per query, only its seed range (the w·idf
-    presence-mass winner over payload-free segment METADATA — see
-    _densest_ranges) and seeds every range task's pruning threshold with
-    just-below that range's k-th score. A range's local k-th score is ≤
-    the global k-th score, and the seed sits strictly below it, so a doc
-    scoring ≥ the global k-th can never be pruned — exactness (incl.
-    doc_id tie-breaks) is preserved; differential tests assert identity.
-    This restores cross-range pruning power that per-range θ restarts
-    lose as n_ranges grows (10^4+ ranges at the 10^12-doc sizing).
-    Seeding applies to the broadcast shape only (the driver shape scores
-    one group, so there is no per-range θ restart to make up for); its
-    seeds reach the driver through an O(Q)-row collect per slice."""
+    shape). Rows are ordered by (query_id, rank) within a slice."""
     manifest = Manifest(index_dir)
     config, stats = manifest.load()
     mode = score_mode or config.score_mode
@@ -305,9 +280,6 @@ def search_doc_partitioned(
                                     n_docs, strict)
     if not slices:
         return _empty_result(spark)
-    # actual range count from the published layout (config.n_ranges may be
-    # 0 = auto-sized at build)
-    n_ranges = -(-n_docs // max(int(stats.get("range_width", n_docs)), 1))
     # every search counts toward the serving table's warm-up, whichever
     # shape scores it: the persist is lazy, so a build served from the
     # driver pays nothing until a Spark batch runs — and that batch then
@@ -325,19 +297,6 @@ def search_doc_partitioned(
             return _search_on_driver(spark, index_dir, term_ids,
                                      config.num_shards, wqt, k, mode, k1,
                                      b, avgdl, topk_fn, bid), []
-        # auto-seed gate: many ranges (per-range θ restarts cost pruning)
-        # AND deep matched runs (avg matched postings per (term, range)
-        # cell ≥ 2 blocks — shallow cells leave block-max nothing to
-        # skip, so the pre-pass is pure overhead; measured +20% on a tiny
-        # corpus whose cells average 5 postings). Depth comes from the
-        # slice's own per-term dfs, so a rare+head query batch seeds even
-        # on an index whose average segment is shallow.
-        u = wqt.drop_duplicates("term_id")["df"].to_numpy(dtype=np.float64)
-        depth = float(u.sum() / max(np.minimum(u, n_ranges).sum(), 1.0))
-        do_seed = (seed_theta is True
-                   or (seed_theta == "auto"
-                       and n_ranges >= SEED_MIN_RANGES
-                       and depth >= 2 * config.block_size))
         # broadcast shape: the weighted-terms table is SMALL — ship it to
         # the range tasks as a broadcast pack and ship each matched
         # segment ONCE per range. (The join formulation emits one row per
@@ -347,7 +306,7 @@ def search_doc_partitioned(
         # candidates merge and get their urls in one task.
         cand, owned = _score_ranges_broadcast(
             spark, index_dir, term_ids, config, wqt, k, mode, k1, b,
-            avgdl, topk_fn, do_seed, bid, sp, cached)
+            avgdl, topk_fn, bid, sp, cached)
         return finish_topk(index_dir, cand, k), owned
 
     parts, owned = [], []
@@ -355,8 +314,8 @@ def search_doc_partitioned(
         part, res = run_slice(wqt)
         parts.append(part)
         owned.extend(res)
-    # the union owns every slice's broadcasts and persists: a slice's
-    # own DataFrame is not referenced by the union and may be collected
+    # the union owns every slice's query-pack broadcast: a slice's own
+    # DataFrame is not referenced by the union and may be collected
     # before the caller's action runs
     return release_with(union_slices(parts), *owned)
 
@@ -367,13 +326,11 @@ def _search_on_driver(spark, index_dir, term_ids, num_shards, wqt, k,
     come from a pruned pyarrow read of ``shards/`` (read_term_rows), and
     the very code the range tasks run scores them — _score_range_broadcast
     over ONE group holding every range (exact by the same argument as
-    per-group top-k; θ seeding has no cross-range threshold to restore)
-    and finish_rows. The result is a LocalRelation, so the caller's action
-    runs no job. A failed read raises; there is no fallback to Spark."""
+    per-group top-k) and finish_rows. The result is a LocalRelation, so
+    the caller's action runs no job. A failed read raises; there is no fallback to Spark."""
     segs = read_term_rows(index_dir, "shards", term_ids, num_shards,
                           ["term_id", "range_id", "doc_lo",
                            "payload"]).to_pandas()
-    segs["_g"] = 0
     dl = (_dl_for_ranges(index_dir, bid, segs["range_id"].unique())
           if mode == "bm25" else None)
     unpacked = tuple(a.tolist() for a in _wqt_groups(wqt))
@@ -434,26 +391,9 @@ def _wqt_groups(wqt: pd.DataFrame) -> tuple:
             wqt["idf"].to_numpy(dtype=np.float64)[order])
 
 
-def _align_to_pack(qids: np.ndarray, keys, values, default, dtype):
-    """Value-per-query array aligned to the pack's qids (sorted unique):
-    position of each key via searchsorted; keys absent from the pack are
-    dropped, queries absent from ``keys`` get ``default``."""
-    out = np.full(len(qids), default, dtype=dtype)
-    if len(keys):
-        k = np.asarray(keys, dtype=np.int64)
-        v = np.asarray(values, dtype=dtype)
-        pos = np.searchsorted(qids, k)
-        ok = (pos < len(qids))
-        ok[ok] &= qids[pos[ok]] == k[ok]
-        out[pos[ok]] = v[ok]
-    return out
-
-
 def _score_range_broadcast(pdf: pd.DataFrame, unpacked, dl, k, mode, k1,
-                           b, avgdl, topk_fn, seeds=None,
-                           only_groups=None,
-                           n_qb: int | None = None,
-                           kth_only: bool = False) -> pd.DataFrame:
+                           b, avgdl, topk_fn,
+                           n_qb: int | None = None) -> pd.DataFrame:
     """Score one slot-group of doc ranges for every query in ``groups``.
     pdf holds each matched segment of the group's ranges exactly once
     (term_id, doc_lo, payload); per-term segment chains are built with one
@@ -462,17 +402,7 @@ def _score_range_broadcast(pdf: pd.DataFrame, unpacked, dl, k, mode, k1,
     assembles its term_rows by dict lookup. Emitting top-k per GROUP of
     ranges is exact: any k docs that beat a doc within the group also
     beat it globally. ``unpacked`` is the _wqt_groups pack as plain
-    python lists (worker-cached — see _unpack_groups_bc);
-    ``seeds`` / ``only_groups`` are pack-aligned arrays (θ0 per query,
-    -1.0 = unseeded; slot group per query, -1 = skip — the θ-seed
-    pre-pass scores each query only in its densest slot group).
-
-    ``kth_only``: emit one (query_id, score) row per fully-matched query
-    — its LOCAL k-th score — instead of candidate rows. Used by the
-    θ-seed pre-pass: with ``only_groups`` each query scores in exactly
-    ONE task, so no cross-group merge exists and the k-th can leave the
-    task directly (the old pack→merge→window route spent two extra
-    stages re-deriving it)."""
+    python lists (worker-cached — see _unpack_groups_bc)."""
     from word2doc_spark.query.kcache import TaskCache
     t_start = time.monotonic()
     tids = pdf["term_id"].to_numpy()
@@ -487,29 +417,22 @@ def _score_range_broadcast(pdf: pd.DataFrame, unpacked, dl, k, mode, k1,
     chains = {int(tids[s]): [bytes(p) for p in payloads[s:e]]
               for s, e in zip(starts, ends)}
     t_chains = time.monotonic()
-    g = int(pdf["_g"].iloc[0])
     # per-task byte-bounded decode cache; chain cache keys are the
     # term_ids themselves (content-stable — one chain per term per task)
     cache = TaskCache()
-    # pack already unpacked to plain python scalars, once per worker;
-    # seeds / only_groups arrive as pack-aligned arrays, not dicts
+    # pack already unpacked to plain python scalars, once per worker
     qids_l, offs, tids_l, w_l, idf_l = unpacked
-    og_l = only_groups.tolist() if only_groups is not None else None
     grouped = getattr(topk_fn, "grouped_impl", None)
     if grouped is not None:
-        # batch the whole pack through the numpy chunk scorer (the fast
-        # kernel ignores θ seeds, so seeds never change its results)
+        # batch the whole pack through the numpy chunk scorer
         out_q, out_d, out_s, n_scored = grouped(
-            qids_l, offs, tids_l, w_l, idf_l, og_l, g, chains,
+            qids_l, offs, tids_l, w_l, idf_l, chains,
             dl, k, mode, k1, b, avgdl, cache)
     else:
         out_q, out_d, out_s = [], [], []
         n_scored = 0
-        seed_l = seeds.tolist() if seeds is not None else None
         chains_get = chains.get
         for i, qid in enumerate(qids_l):
-            if og_l is not None and og_l[i] != g:
-                continue
             term_rows = []
             for j in range(offs[i], offs[i + 1]):
                 ch = chains_get(tids_l[j])
@@ -518,9 +441,8 @@ def _score_range_broadcast(pdf: pd.DataFrame, unpacked, dl, k, mode, k1,
             if not term_rows:
                 continue
             n_scored += 1
-            theta0 = seed_l[i] if seed_l is not None else -1.0
             for doc, score in topk_fn(term_rows, k, mode, k1, b, avgdl,
-                                      dl, theta0=theta0, cache=cache):
+                                      dl, cache=cache):
                 out_q.append(qid)
                 out_d.append(doc)
                 out_s.append(score)
@@ -529,8 +451,6 @@ def _score_range_broadcast(pdf: pd.DataFrame, unpacked, dl, k, mode, k1,
     STATS["score_wall_s"] += t_end - t_start
     STATS["chain_build_s"] += t_chains - t_start
     STATS["queries_scored"] += n_scored
-    if kth_only:
-        return _kth_rows(out_q, out_s, k)
     if n_qb is None:
         return pd.DataFrame({
             "query_id": np.asarray(out_q, dtype=np.int64),
@@ -538,30 +458,6 @@ def _score_range_broadcast(pdf: pd.DataFrame, unpacked, dl, k, mode, k1,
             "score": np.asarray(out_s, dtype=np.float64),
         })
     return _pack_candidates(out_q, out_d, out_s, n_qb)
-
-
-def _kth_rows(out_q, out_s, k: int) -> pd.DataFrame:
-    """Per-query k-th score from candidate lists where each query's rows
-    are CONTIGUOUS and ordered (score desc, doc asc) — true for both the
-    per-query loop and the grouped scorer (each query scores in one chunk
-    or the fallback, never both). Queries with fewer than k matched docs
-    emit nothing: their local k-th does not exist, so they stay unseeded
-    (exactly what filter(rank == k) produced on the merge route). Reads
-    the score at starts + k - 1 under ``lens >= k`` so a kernel that
-    ever emits MORE than k rows per query (e.g. keeping ties past the
-    k-th) still seeds from its true k-th instead of silently unseeding
-    (current kernels cap emission at k, making this equivalent)."""
-    qarr = np.asarray(out_q, dtype=np.int64)
-    sarr = np.asarray(out_s, dtype=np.float64)
-    if qarr.size == 0:
-        return pd.DataFrame({"query_id": pd.Series([], dtype="int64"),
-                             "score": pd.Series([], dtype="float64")})
-    starts = np.flatnonzero(np.concatenate(([True],
-                                            qarr[1:] != qarr[:-1])))
-    lens = np.diff(np.concatenate((starts, [qarr.size])))
-    keep = lens >= k
-    return pd.DataFrame({"query_id": qarr[starts[keep]],
-                         "score": sarr[starts[keep] + k - 1]})
 
 
 def _pack_candidates(out_q, out_d, out_s, n_qb: int) -> pd.DataFrame:
@@ -677,8 +573,7 @@ def _serving_segs(spark, index_dir, bid, sp, index_bytes):
         from word2doc_spark.index.build import _partition_slots
         slot_arr = F.array(*[F.lit(x) for x in _partition_slots(sp)])
         segs = (read_table(spark, index_dir, "shards")
-                .select("term_id", "range_id", "doc_lo", "n_postings",
-                        "payload")
+                .select("term_id", "range_id", "doc_lo", "payload")
                 .withColumn("_g", F.element_at(
                     slot_arr, F.pmod(F.col("range_id"), F.lit(sp)) + 1))
                 .repartition(sp, "_g")
@@ -694,20 +589,16 @@ def _serving_segs(spark, index_dir, bid, sp, index_bytes):
 
 
 def _broadcast_runner(index_dir, bid, bc, k, mode, k1, b, avgdl,
-                      topk_fn, n_qb, seeds=None, only_groups=None,
-                      kth_only=False):
+                      topk_fn, n_qb):
     """Scoring closure for the broadcast shape. The query pack travels
     as the Spark broadcast variable ``bc`` (once per worker, not once
-    per task — see _unpack_groups_bc); seeds/only_groups are small
-    pack-aligned arrays and ride the closure. bm25 dl blobs load LAZILY
+    per task — see _unpack_groups_bc). bm25 dl blobs load LAZILY
     inside the task (_dl_for_ranges: per-range process cache + one
     pyarrow read for misses) — no cogroup and no per-batch dl shuffle;
     the physical plan is identical for both score modes."""
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) == 0:
-            if kth_only:
-                return _kth_rows([], [], k)
             if n_qb:
                 return _pack_candidates([], [], [], n_qb)
             return pd.DataFrame({
@@ -717,17 +608,15 @@ def _broadcast_runner(index_dir, bid, bc, k, mode, k1, b, avgdl,
         dl = (_dl_for_ranges(index_dir, bid, pdf["range_id"].unique())
               if mode == "bm25" else None)
         return _score_range_broadcast(pdf, _unpack_groups_bc(bc), dl, k,
-                                      mode, k1, b,
-                                      avgdl, topk_fn, seeds=seeds,
-                                      only_groups=only_groups, n_qb=n_qb,
-                                      kth_only=kth_only)
+                                      mode, k1, b, avgdl, topk_fn,
+                                      n_qb=n_qb)
 
     return run
 
 
 def _score_ranges_broadcast(spark, index_dir, term_pred, config, wqt,
-                            k, mode, k1, b, avgdl, topk_fn, do_seed,
-                            bid, sp, cached):
+                            k, mode, k1, b, avgdl, topk_fn, bid, sp,
+                            cached):
     """Range-grouped scoring with the query table in the kernel closure.
     Shuffle volume = each matched segment once (keyed by range_id) —
     independent of batch size; parallelism = n_ranges tasks (set ≫ cores
@@ -737,22 +626,18 @@ def _score_ranges_broadcast(spark, index_dir, term_pred, config, wqt,
     partitions (_serving_segs; None = scan parquet). Returns per-group
     candidate rows (CAND_SCHEMA), or blob-merged top-k rows (TOPK_SCHEMA)
     above _PACK_MIN_CANDIDATES — either is input to exact.finish_topk —
-    plus the call's materializations, which the search result owns
+    plus the query-pack broadcast, which the search result owns
     (lifetime.release_with): the caller's action runs after this returns."""
     groups = _wqt_groups(wqt)
-    # one broadcast of the (token, pack) tuple serves the seed pass and
-    # the main pass
     import uuid
     bc = spark.sparkContext.broadcast((uuid.uuid4().hex, groups))
-    owned = [bc]
     # group key: ranges are mapped ROUND-ROBIN onto ints that Spark
     # hash-partitions to distinct shuffle partitions (build._partition_slots
     # — grouping 128 range keys straight into 128 partitions loses ~2× to
     # balls-in-bins lumping, measured on the 500k bench). Merging several
     # ranges per task is exact — see _score_range_broadcast.
     from word2doc_spark.index.build import _partition_slots
-    slots = _partition_slots(sp)
-    slot_arr = F.array(*[F.lit(x) for x in slots])
+    slot_arr = F.array(*[F.lit(x) for x in _partition_slots(sp)])
 
     if cached is not None:
         segs = (filter_terms(cached, term_pred)
@@ -771,22 +656,6 @@ def _score_ranges_broadcast(spark, index_dir, term_pred, config, wqt,
                     slot_arr, F.pmod(F.col("range_id"), F.lit(sp)) + 1))
                 .repartition(sp, "_g"))
 
-    seeds = None
-    if do_seed:
-        if cached is None:
-            # the seed pre-pass and the main pass both consume the
-            # matched segments — persist so the segment scan + shuffle
-            # runs once (the serving cache needs no extra persist — it
-            # already is one)
-            from pyspark import StorageLevel
-            segs = segs.persist(StorageLevel.MEMORY_AND_DISK)
-            owned.append(segs)
-        seeds = _theta_seeds_broadcast(spark, index_dir, term_pred,
-                                       config, wqt, groups, bc, segs,
-                                       slots, sp, k, mode,
-                                       k1, b, avgdl, topk_fn, bid,
-                                       segs_meta=cached)
-
     # merge shape: a small batch's candidate rows go straight to the
     # one-task finish (exact.finish_topk); a big batch's candidates must
     # never explode into Arrow rows (a 20k-query batch emits ~10^7) —
@@ -796,103 +665,9 @@ def _score_ranges_broadcast(spark, index_dir, term_pred, config, wqt,
     qb = sp if pack else None
 
     run = _broadcast_runner(index_dir, bid, bc, k, mode, k1, b, avgdl,
-                            topk_fn, qb, seeds=seeds)
+                            topk_fn, qb)
     cand = segs.groupBy("_g").applyInPandas(run, out_schema)
     if pack:
         cand = _merge_topk_blobs(cand, k, sp, slot_arr)
-    return cand, owned
+    return cand, [bc]
 
-
-def _densest_ranges(spark, index_dir, term_pred, config,
-                    qterms: DataFrame, segs_meta=None) -> DataFrame:
-    """(query_id, range_id) — the doc range each query should SEED from,
-    chosen from payload-free segment metadata joined executor-side
-    against the weighted query terms (query_id, term_id, w, idf).
-
-    Ranking: per (query, range), primary key = Σ w·idf over the DISTINCT
-    matched terms PRESENT in the range (each term's per-doc contribution
-    is bounded by a multiple of w·idf, so presence mass tracks the best
-    score the range can possibly hold); tie-break = matched-posting count,
-    then smallest range_id. For a dense-only topical query every range
-    carries the same term set, the mass ties everywhere, and the np
-    tie-break reduces to the old most-postings rule. For a selective
-    rare+dense query the rare term's idf dominates the mass, so the seed
-    pass scores a range that actually CONTAINS rare-term docs — its k-th
-    score then carries the rare idf contribution, which is what lets
-    dense-only ranges fail the chain-ub short-circuit in O(terms)
-    (wand_topk theta0) instead of merely block-skipping. Any range's
-    k-th score is a valid θ0 (exactness never depends on this choice —
-    differential tests run both seeded and unseeded); this picks the
-    range whose θ0 prunes hardest.
-
-    ``segs_meta``: serving-cache segment table to read the metadata from
-    (in-memory columnar, payload column pruned) instead of parquet."""
-    if segs_meta is not None:
-        base = (filter_terms(segs_meta, term_pred)
-                .select("term_id", "range_id", "n_postings"))
-    else:
-        base = _matched_segments(spark, index_dir, term_pred,
-                                 config.num_shards, with_counts=True)
-    meta = (base.groupBy("term_id", "range_id")
-            .agg(F.sum("n_postings").alias("np")))
-    dens = (meta.join(qterms, "term_id")
-            .groupBy("query_id", "range_id")
-            .agg(F.sum(F.col("w") * F.col("idf")).alias("mass"),
-                 F.sum("np").alias("np")))
-    best = (dens.groupBy("query_id")
-            .agg(F.max(F.struct(
-                F.col("mass"), F.col("np"),
-                (-F.col("range_id")).alias("nr"))).alias("b"))
-            .select("query_id",
-                    (-F.col("b").getField("nr")).cast("int")
-                    .alias("range_id")))
-    return best
-
-
-def _theta_seeds_broadcast(spark, index_dir, term_pred, config, wqt,
-                           groups, bc, segs, slots, sp,
-                           k, mode, k1, b, avgdl, topk_fn, bid,
-                           segs_meta=None):
-    """{query_id: θ0} for the broadcast path: pick each query's seed
-    range executor-side (w·idf presence-mass over segment metadata ⋈
-    broadcast weighted query terms — see _densest_ranges; the driver
-    collects O(Q) winner rows, never the O(terms × ranges) metadata),
-    score each query only in the slot GROUP holding that range (a
-    superset of the range — the k-th over any doc subset is still ≤ the
-    global k-th, so the seed stays valid), take the k-th scores, seed
-    just below them. bm25 dl loads lazily in-task."""
-    import pyarrow as pa
-    qterms = F.broadcast(spark.createDataFrame(
-        pa.Table.from_pandas(
-            wqt[["query_id", "term_id", "w", "idf"]].drop_duplicates(
-                ["query_id", "term_id"]), preserve_index=False),
-        "query_id long, term_id long, w double, idf double"))
-    best = _densest_ranges(spark, index_dir, term_pred, config,
-                           qterms, segs_meta=segs_meta).collect()
-    if not best:
-        return None
-    # pack-aligned int64 array (default -1 = query has no densest range
-    # → skipped in the seed pass), shipped instead of a 40k-entry dict
-    only_groups = _align_to_pack(
-        groups[0],
-        [int(r["query_id"]) for r in best],
-        [slots[int(r["range_id"]) % sp] for r in best],
-        default=-1, dtype=np.int64)
-
-    # only_groups pins each query to ONE task, so its local k-th needs
-    # no cross-group merge: the seed job emits (query_id, kth) rows
-    # directly — one stage + collect, where the pack→merge→window route
-    # spent two extra stages and a second shuffle re-deriving it
-    run_seed = _broadcast_runner(index_dir, bid, bc, k, mode, k1, b,
-                                 avgdl, topk_fn, None,
-                                 only_groups=only_groups, kth_only=True)
-    kth = (segs.groupBy("_g").applyInPandas(run_seed, SEED_KTH_SCHEMA)
-           .collect())
-    if not kth:
-        return None
-    # θ0 just below each k-th score, aligned to the pack (-1.0 = unseeded)
-    return _align_to_pack(
-        groups[0],
-        [int(r["query_id"]) for r in kth],
-        [float(np.nextafter(r["score"], -np.inf)) for r in kth],
-        default=-1.0, dtype=np.float64)

@@ -3,7 +3,7 @@
 The reference scores every matching doc via a full sparse dot product
 (tfidf_doc_ranker.py:62-63); WAND visits only docs whose term-upper-bound
 sum can beat the running k-th score θ, and the *block-max* refinement
-(Ding & Suel, SIGMOD'11 — public literature) skips whole compressed blocks
+(Ding & Suel, SIGIR 2011 — public literature) skips whole compressed blocks
 whose block-level bound cannot beat θ, without decoding them.
 
 Distribution shape: doc ranges are the parallel axis (query/ranges.py) —
@@ -216,7 +216,6 @@ def wand_topk(
     b: float,
     avgdl: float,
     dl,
-    theta0: float = -1.0,
     cache: dict | None = None,
 ) -> list[tuple[int, float]]:
     """One query's exact top-k via block-max WAND.
@@ -224,12 +223,6 @@ def wand_topk(
     term_rows: (w_q, idf, payload-or-[payloads]) per matched term; dl is a
     dense array, SparseDL, or None. Returns [(doc_id, score)] ordered by
     (score desc, doc_id asc).
-
-    theta0: optional pruning seed — a STRICT lower bound just below some
-    k actual document scores (query/ranges.py seeds it just below the
-    densest range's k-th score). Docs scoring ≥ the true global k-th can
-    never be pruned by it, so results stay exact; ranges whose best docs
-    fall below the seed emit fewer (never wrong) candidates.
 
     cache: optional per-TASK dict shared across a batch's queries —
     parsed block directories and decoded blocks are query-independent,
@@ -239,45 +232,23 @@ def wand_topk(
     """
     if cache is None:
         cache = {}
-    live = []
+    cursors: list[_Cursor] = []
     for row in term_rows:
-        w, idf, p = row[0], row[1], row[2]
+        w, idf, payload = row[0], row[1], row[2]
         if w <= 0.0:
             continue
-        live.append((w, idf,
-                     [p] if isinstance(p, (bytes, bytearray)) else p,
-                     row[3] if len(row) > 3 else None))
-    if theta0 > 0.0 and live:
-        # seeded short-circuit: if the sum of chain-level upper bounds
-        # cannot beat θ0, no doc in this range can enter the global
-        # top-k — skip cursor construction and block decoding entirely.
-        # This is what makes a seeded selective query (rare term + dense
-        # term) O(1) in every range but the rare one.
-        total_ub = 0.0
-        for w, idf, payloads, ck in live:
-            mx = float(_chain_directory(payloads, cache, ck)[5].max())
-            if mode == "drqa":
-                total_ub += w * idf * log1p(mx)
-            else:
-                total_ub += w * (mx * (k1 + 1.0)) / (mx + k1 * (1.0 - b))
-        if total_ub <= theta0:
-            return []
-    cursors: list[_Cursor] = []
-    for w, idf, payload, ck in live:
         if mode == "drqa":
-            cursors.append(_Cursor(
-                payload, w, idf,
-                lambda mx, w=w, idf=idf: w * idf * np.log1p(mx), cache,
-                ckey=ck))
+            ub_fn = lambda mx, w=w, idf=idf: w * idf * np.log1p(mx)
         else:
-            cursors.append(_Cursor(
-                payload, w, idf,
-                lambda mx, w=w: w * (mx * (k1 + 1.0)) /
-                                (mx + k1 * (1.0 - b)), cache,
-                ckey=ck))
+            ub_fn = lambda mx, w=w: w * (mx * (k1 + 1.0)) / (
+                mx + k1 * (1.0 - b))
+        cursors.append(_Cursor(payload, w, idf, ub_fn, cache,
+                               ckey=row[3] if len(row) > 3 else None))
     cursors = [c for c in cursors if not c.exhausted]
     heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap of top-k
-    theta = theta0
+    # below every score (a matched term can contribute 0): each doc is
+    # a candidate until the heap holds k
+    theta = -1.0
 
     def score_at(c: _Cursor, doc: int) -> float:
         tf = c.cur_tf()
@@ -339,10 +310,10 @@ def wand_topk(
             if len(heap) < k:
                 heapq.heappush(heap, (score, -pivot_doc))
                 if len(heap) == k:
-                    theta = max(heap[0][0], theta0)
+                    theta = heap[0][0]
             elif score > theta:
                 heapq.heapreplace(heap, (score, -pivot_doc))
-                theta = max(heap[0][0], theta0)
+                theta = heap[0][0]
         else:
             # advance all pre-pivot cursors to the pivot doc
             for c in cursors[:pivot_idx]:
@@ -366,15 +337,11 @@ def search_wand(
     k: int = 10,
     score_mode: str | None = None,
     strict: bool = False,
-    seed_theta: bool | str = "auto",
 ) -> DataFrame:
     """→ (query_id, rank, doc_id, url, score); identical output contract
     (and, by differential test, identical rows) to ``search_exact``,
-    ordered by (query_id, rank) within a slice of the batch.
-    seed_theta ('auto' = only on indexes with many doc ranges) pre-scores
-    each query's densest range and seeds every range task's θ so pruning
-    power survives large n_ranges (see ranges.search_doc_partitioned)."""
+    ordered by (query_id, rank) within a slice of the batch (see
+    ranges.search_doc_partitioned)."""
     from word2doc_spark.query.ranges import search_doc_partitioned
     return search_doc_partitioned(spark, index_dir, queries, k, score_mode,
-                                  wand_topk, strict=strict,
-                                  seed_theta=seed_theta)
+                                  wand_topk, strict=strict)
