@@ -10,7 +10,9 @@ stdin, print a ranked table):
         [--score-mode drqa|bm25]
 
 Each line read from stdin is one query; top-k (rank, score, doc_id, url)
-rows print to stdout. Blank line or EOF exits.
+rows print to stdout. Blank line or EOF exits. Each line's frame is built
+from a pyarrow.Table, so it is a local relation: the search skips its
+analysis probe, and a question scored on the driver runs no Spark job.
 """
 
 import argparse
@@ -33,6 +35,7 @@ def main(argv=None):
                    choices=[None, "drqa", "bm25"])
     args = p.parse_args(argv)
 
+    import pyarrow as pa
     from pyspark.sql import SparkSession
     from word2doc_spark.index.manifest import Manifest
     from word2doc_spark.query.exact import search_exact
@@ -58,8 +61,9 @@ def main(argv=None):
         if not line:
             break
         qid += 1
-        qdf = spark.createDataFrame([(qid, line)],
-                                    "query_id long, query string")
+        qdf = spark.createDataFrame(
+            pa.table({"query_id": pa.array([qid], pa.int64()),
+                      "query": [line]}), "query_id long, query string")
         t0 = time.time()
         rows = fn(spark, args.index_dir, qdf, k=args.k,
                   score_mode=args.score_mode).collect()

@@ -75,13 +75,12 @@ def scaling_block() -> str | None:
 
 
 _DEEP_BLURB = {
-    "deep8": "the crossover's LEFT side: rare+5-dense queries over "
-             "125k-posting per-range lists — since the grouped numpy "
-             "scorer (round 5) the vectorized scan wins this shallow "
-             "multi-term shape, which is why search_fast is the default",
-    "ranges1024": "the MANY-RANGES regime θ seeding serves: selective "
-                  "rare(df~10)+dense queries, rare term absent from "
-                  "~99% of ranges",
+    "deep8": "the crossover's shallow side: rare+5-dense queries over "
+             "125k-posting per-range lists, where the grouped numpy "
+             "scan and WAND run within ~20% of each other",
+    "ranges1024": "the MANY-RANGES regime θ seeding (since deleted) was "
+                  "built for: selective rare(df~10)+dense queries, rare "
+                  "term absent from ~99% of ranges",
     "deep8m": "the 10^12-doc DEPTH sizing: 8M docs / 8 ranges → "
               "per-range dense lists of ~2×10^5 postings, rare + ONE "
               "dense head word per query (the crossover probe's exact "

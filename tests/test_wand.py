@@ -11,8 +11,9 @@ import pytest
 
 from word2doc_spark.config import IndexConfig
 from word2doc_spark.index.build import build_index
-from word2doc_spark.index.postings import encode_postings
+from word2doc_spark.index.postings import decode_postings, encode_postings
 from word2doc_spark.query.exact import search_exact
+from word2doc_spark.query.ranges import SparseDL
 from word2doc_spark.query.wand import search_wand, wand_topk
 from word2doc_spark.sources.pages import synthetic_pages
 
@@ -80,16 +81,9 @@ def _brute(term_rows, k, mode, k1, b, avgdl, dl):
     return ranked
 
 
-@pytest.mark.parametrize("mode", ["drqa", "bm25"])
-@pytest.mark.parametrize("seed", range(8))
-def test_wand_topk_random(mode, seed):
-    rng = np.random.default_rng(seed)
-    n_docs = 5000
-    dl = rng.integers(10, 300, size=n_docs).astype(np.uint32)
-    avgdl = float(dl.mean())
-    n_terms = rng.integers(2, 7)
+def _random_rows(rng, n_docs):
     term_rows = []
-    for _ in range(n_terms):
+    for _ in range(rng.integers(2, 7)):
         n_post = int(rng.integers(1, 1500))
         docs = np.sort(rng.choice(n_docs, size=n_post, replace=False)).astype(np.uint64)
         tfs = rng.integers(1, 20, size=n_post).astype(np.uint64)
@@ -97,14 +91,87 @@ def test_wand_topk_random(mode, seed):
         w = float(rng.uniform(0.1, 3.0))
         idf = float(rng.uniform(0.1, 5.0))
         term_rows.append((w, idf, payload))
+    return term_rows
+
+
+def _sparse(dl):
+    """The SparseDL the range tasks score with, over the same values."""
+    return SparseDL(np.arange(len(dl), dtype=np.int64),
+                    dl.astype(np.float64))
+
+
+def _assert_rows(got, want, *ctx):
+    assert [d for d, _ in got] == [d for d, _ in want], ctx
+    for (_, s1), (_, s2) in zip(got, want):
+        assert math.isclose(s1, s2, rel_tol=1e-9), ctx
+
+
+class _CountingDL:
+    def __init__(self, dl):
+        self.dl, self.calls = dl, 0
+
+    def __getitem__(self, key):
+        self.calls += 1
+        return self.dl[key]
+
+
+@pytest.mark.parametrize("mode", ["drqa", "bm25"])
+@pytest.mark.parametrize("seed", range(8))
+def test_wand_topk_random(mode, seed):
+    """bm25 runs over a dense dl array and over a SparseDL of the same
+    values (the range tasks' dl), both against brute force; the SparseDL
+    is looked up once per decoded block, not once per scored posting."""
+    from word2doc_spark.query import wand as W
+
+    rng = np.random.default_rng(seed)
+    n_docs = 5000
+    dl = rng.integers(10, 300, size=n_docs).astype(np.uint32)
+    avgdl = float(dl.mean())
+    term_rows = _random_rows(rng, n_docs)
+    counting = _CountingDL(_sparse(dl))
+    dls = (dl, counting) if mode == "bm25" else (None,)
     for k in (1, 10, 100):
-        got = wand_topk(term_rows, k, mode, 1.2, 0.75, avgdl,
-                        dl if mode == "bm25" else None)
         want = _brute(term_rows, k, mode, 1.2, 0.75, avgdl,
                       dl if mode == "bm25" else None)
-        assert [d for d, _ in got] == [d for d, _ in want], (mode, seed, k)
-        for (d1, s1), (d2, s2) in zip(got, want):
-            assert math.isclose(s1, s2, rel_tol=1e-9)
+        for dlv in dls:
+            W.reset_stats()
+            counting.calls = 0
+            got = wand_topk(term_rows, k, mode, 1.2, 0.75, avgdl, dlv)
+            _assert_rows(got, want, mode, seed, k, type(dlv).__name__)
+            if dlv is counting:
+                assert 0 < counting.calls <= W.get_stats()["blocks_decoded"]
+
+
+def test_wand_topk_missing_dl_raises():
+    """A doc absent from a SparseDL fails loudly, never scores with a
+    neighbour's dl."""
+    rng = np.random.default_rng(5)
+    n_docs = 5000
+    dl = rng.integers(10, 300, size=n_docs).astype(np.uint32)
+    term_rows = _random_rows(rng, n_docs)
+    gone = int(decode_postings(term_rows[0][2])[0][0])
+    keep = np.arange(n_docs, dtype=np.int64) != gone
+    holey = SparseDL(np.arange(n_docs, dtype=np.int64)[keep],
+                     dl.astype(np.float64)[keep])
+    with pytest.raises(KeyError):
+        wand_topk(term_rows, 10, "bm25", 1.2, 0.75, float(dl.mean()), holey)
+
+
+def test_wand_cache_shared_across_modes():
+    """One cache dict serves a drqa call and then bm25 calls (and back):
+    a block decoded without doc lengths gets them on first bm25 use."""
+    rng = np.random.default_rng(11)
+    n_docs = 5000
+    dl = rng.integers(10, 300, size=n_docs).astype(np.uint32)
+    avgdl = float(dl.mean())
+    term_rows = _random_rows(rng, n_docs)
+    cache: dict = {}
+    for mode, dlv in (("drqa", None), ("bm25", dl), ("bm25", _sparse(dl)),
+                      ("drqa", None)):
+        got = wand_topk(term_rows, 10, mode, 1.2, 0.75, avgdl, dlv,
+                        cache=cache)
+        _assert_rows(got, _brute(term_rows, 10, mode, 1.2, 0.75, avgdl, dlv),
+                     mode)
 
 
 def test_wand_topk_empty_and_zero_weight():

@@ -563,7 +563,13 @@ def search_exact(
     postings (Σ df over its (query, term) rows) are within
     DRIVER_MAX_POSTINGS, else by its own broadcast join and finish. The
     result is the union of the slices' rows, ordered by (query_id, rank)
-    within a slice."""
+    within a slice.
+
+    A ``queries`` frame built from a pyarrow.Table is a local relation:
+    the call skips the analysis probe, so a batch scored on the driver
+    runs no Spark job. A list-built frame is not local, nor is a
+    pandas-built one unless spark.sql.execution.arrow.pyspark.enabled is
+    set; either pays one probe job (probe_batch)."""
     manifest = Manifest(index_dir)
     config, stats = manifest.load()
     mode = score_mode or config.score_mode

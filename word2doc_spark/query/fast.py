@@ -345,7 +345,11 @@ def search_fast(
 ) -> DataFrame:
     """Same output contract (and rows) as search_exact / search_wand:
     ordered by (query_id, rank) within a slice of the batch (see
-    ranges.search_doc_partitioned)."""
+    ranges.search_doc_partitioned).
+
+    A ``queries`` frame built from a pyarrow.Table skips the analysis
+    probe; a list-built one, and by default a pandas-built one, pays it
+    (see search_exact)."""
     from word2doc_spark.query.ranges import search_doc_partitioned
     return search_doc_partitioned(spark, index_dir, queries, k, score_mode,
                                   fast_topk, strict=strict)

@@ -18,8 +18,11 @@ Upper bounds per block (monotone score contributions, §2.K):
 * bm25 : w_q · max_tf(k1+1)/(max_tf + k1(1−b))         (dl→0, conservative)
 
 bm25 per-doc dl is served range-locally from the decoded doclen_seg blobs
-(SparseDL searchsorted lookup) — no driver-side N-row materialization and
-no broadcast that grows with corpus size.
+— no driver-side N-row materialization and no broadcast that grows with
+corpus size. The cursor looks a decoded block's dl up in ONE vectorized
+call (``dl[docs]``, a SparseDL searchsorted over the whole block) and
+caches it next to the block's docs and tfs, so scoring a posting reads a
+list slot instead of running a numpy searchsorted per posting.
 """
 
 from __future__ import annotations
@@ -105,11 +108,11 @@ class _Cursor:
     those per-element numpy calls)."""
 
     __slots__ = ("payloads", "ckey", "seg_of", "offs", "lasts", "prevs",
-                 "block_ubs", "ub", "w", "idf", "bi", "docs", "tfs", "pos",
-                 "exhausted", "_nblocks", "cache")
+                 "block_ubs", "ub", "w", "idf", "bi", "docs", "tfs", "dls",
+                 "pos", "exhausted", "_nblocks", "cache", "dl")
 
     def __init__(self, payloads, w: float, idf: float, block_ub_fn,
-                 cache: dict, ckey=None) -> None:
+                 cache: dict, ckey=None, dl=None) -> None:
         if isinstance(payloads, (bytes, bytearray)):
             payloads = [payloads]
         self.payloads = payloads
@@ -134,6 +137,10 @@ class _Cursor:
         self.bi = -1
         self.docs = None
         self.tfs = None
+        # per-block doc lengths, loaded with each block when dl is given
+        # (bm25 only)
+        self.dl = dl
+        self.dls = None
         self.pos = 0
         self.exhausted = False
         self._load_block(0)
@@ -147,12 +154,13 @@ class _Cursor:
         # chain content — content-keyed, unlike the old id(payload)
         bkey = ("blk", self.ckey, bi)
         got = self.cache.get(bkey)
+        charge = getattr(self.cache, "charge", None)
+        docs = None
         if got is None:
             docs, tfs = decode_block(payload, self.offs[bi],
                                      self.prevs[bi])
             got = (docs.tolist(), tfs.tolist())
             self.cache[bkey] = got
-            charge = getattr(self.cache, "charge", None)
             if charge is not None:
                 # two boxed-python-int lists (~40 B per element incl.
                 # list slot) — several times the payload bytes, which is
@@ -160,6 +168,21 @@ class _Cursor:
                 charge(bkey, len(got[0]) * 80)
             STATS["blocks_decoded"] += 1
         self.docs, self.tfs = got
+        if self.dl is not None:
+            # the block's doc lengths in one vectorized lookup, under
+            # their own key: a drqa call sharing the cache leaves no
+            # dl-less entry behind. A doc missing from a SparseDL raises
+            # KeyError here.
+            lkey = ("bdl", self.ckey, bi)
+            dls = self.cache.get(lkey)
+            if dls is None:
+                docs = np.array(self.docs, dtype=np.int64) if docs is None \
+                    else docs.astype(np.int64)
+                dls = np.asarray(self.dl[docs], dtype=np.float64).tolist()
+                self.cache[lkey] = dls
+                if charge is not None:
+                    charge(lkey, len(dls) * 40)
+            self.dls = dls
         self.bi = bi
         self.pos = 0
 
@@ -204,9 +227,6 @@ class _Cursor:
         if self.pos >= len(self.docs):
             self._load_block(self.bi + 1)
 
-    def cur_tf(self) -> float:
-        return self.tfs[self.pos]
-
 
 def wand_topk(
     term_rows,
@@ -225,10 +245,13 @@ def wand_topk(
     (score desc, doc_id asc).
 
     cache: optional per-TASK dict shared across a batch's queries —
-    parsed block directories and decoded blocks are query-independent,
-    so hot terms decode once per task instead of once per query. Keys
-    are content-stable (see _chain_key); a TaskCache (query/kcache.py)
-    byte-bounds the decoded-block/directory entries per task.
+    parsed block directories, decoded blocks and (bm25) their doc
+    lengths are query-independent, so hot terms decode once per task
+    instead of once per query. Keys are content-stable (see _chain_key),
+    so one cache serves drqa and bm25 calls alike, but it must not
+    outlive one index: a block's cached doc lengths are those of the dl
+    it was first loaded with. A TaskCache (query/kcache.py) byte-bounds
+    the cached entries per task.
     """
     if cache is None:
         cache = {}
@@ -243,18 +266,19 @@ def wand_topk(
             ub_fn = lambda mx, w=w: w * (mx * (k1 + 1.0)) / (
                 mx + k1 * (1.0 - b))
         cursors.append(_Cursor(payload, w, idf, ub_fn, cache,
-                               ckey=row[3] if len(row) > 3 else None))
+                               ckey=row[3] if len(row) > 3 else None,
+                               dl=dl if mode == "bm25" else None))
     cursors = [c for c in cursors if not c.exhausted]
     heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap of top-k
     # below every score (a matched term can contribute 0): each doc is
     # a candidate until the heap holds k
     theta = -1.0
 
-    def score_at(c: _Cursor, doc: int) -> float:
-        tf = c.cur_tf()
+    def score_at(c: _Cursor) -> float:
+        tf = c.tfs[c.pos]
         if mode == "drqa":
             return c.w * c.idf * log1p(tf)
-        d = float(dl[doc]) if dl is not None else avgdl
+        d = c.dls[c.pos] if dl is not None else avgdl
         return c.w * (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * d / avgdl))
 
     while True:
@@ -303,7 +327,7 @@ def wand_topk(
                 if c.exhausted:
                     continue
                 if c.cur_doc == pivot_doc:
-                    score += score_at(c, pivot_doc)
+                    score += score_at(c)
                     c.advance()
                 elif c.cur_doc > pivot_doc:
                     break
@@ -324,10 +348,23 @@ def wand_topk(
     return out
 
 
-# driver-shape size rule (see fast_topk.driver_max_postings): WAND's
-# per-query python loop breaks even with the Spark shape near 100k
-# matched postings
-wand_topk.driver_max_postings = 100_000
+# driver-shape size rule (see fast_topk.driver_max_postings): with the
+# per-block dl lookup, WAND's per-query python loop breaks even with the
+# Spark shape between 308k and 367k matched postings. Warm bm25 batches
+# of the perfbench seed-61 corpus (3,000 pages, hash 2^22, 8 shards),
+# local[4], 4 shuffle partitions, wall incl. probe, median of 5
+# interleaved reps, driver vs Spark:
+#   questions  postings  driver  Spark
+#           1     1,201  0.25 s  0.65 s
+#          50    64,860  0.41 s  0.76 s
+#         100   124,571  0.52 s  0.81 s
+#         200   245,894  0.72 s  0.84 s
+#         250   307,607  0.90 s  1.08 s
+#         300   367,072  1.22 s  0.94 s
+#         400   488,544  1.25 s  1.10 s
+#         800   970,825  1.96 s  1.22 s
+#       1,600 1,934,901  3.40 s  2.02 s
+wand_topk.driver_max_postings = 300_000
 
 
 def search_wand(
@@ -341,7 +378,11 @@ def search_wand(
     """→ (query_id, rank, doc_id, url, score); identical output contract
     (and, by differential test, identical rows) to ``search_exact``,
     ordered by (query_id, rank) within a slice of the batch (see
-    ranges.search_doc_partitioned)."""
+    ranges.search_doc_partitioned).
+
+    A ``queries`` frame built from a pyarrow.Table skips the analysis
+    probe; a list-built one, and by default a pandas-built one, pays it
+    (see search_exact)."""
     from word2doc_spark.query.ranges import search_doc_partitioned
     return search_doc_partitioned(spark, index_dir, queries, k, score_mode,
                                   wand_topk, strict=strict)
